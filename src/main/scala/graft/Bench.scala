@@ -51,8 +51,8 @@ object Bench {
     // noisy patch must recur at the same query position in every pass to
     // survive the min. Total run count is unchanged (3 × N).
     //
-    // Every run still starts cache-cold: operator-scoped persists
-    // (Dedup.persistScoped) and the session cache are drained first, so a
+    // Every run still starts cache-cold: operator shares and cuts
+    // (graft.operators.Materialize) and the session cache are drained first, so a
     // query can neither pay another query's eviction nor ride another run's
     // warm cache (the r2 dedup_minhash 3.2× phantom regression).
     //

@@ -1511,7 +1511,7 @@ object ScaleBench {
           s"means must separate by ≥ 100 bits/doc: ${a._2} vs ${b._2}")
       }
       time(s"DSIR select incl. inline model training: $nDocs-doc pool") {
-        val sel = graft.operators.Dedup.persistScoped(
+        val sel = graft.operators.Materialize.share(
           Corpus.dsirSelect(pool, tm, rm).filter(col("keep")))
         // target-vocab token MASS of the selected set (docs are uniform
         // 30-token, so doc counts are token mass): the paper's metric is

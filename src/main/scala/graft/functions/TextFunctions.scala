@@ -61,12 +61,11 @@ object TextFunctions {
   }
 
   /**
-   * 31-bit token hash for MinHash permutation input. ANSI mode (Spark 4
+   * Mersenne-prime modulus of the MinHash permutations. ANSI mode (Spark 4
    * default) makes Long overflow an error rather than a wrap, so permutations
    * `(a*x + b) mod P` keep `x < 2^31` and `a,b < P`: products stay < 2^62.
    */
   val MersenneP = 2147483647L // 2^31 - 1
-  def hash31(c: Column): Column = pmod(xxhash64(c), lit(MersenneP))
 
   /** Deterministic permutation parameters for MinHash (seeded, plan-time). */
   def permutations(numHashes: Int, seed: Long = 42L): Seq[(Long, Long)] = {

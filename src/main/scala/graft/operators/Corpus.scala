@@ -278,7 +278,7 @@ object Corpus {
     // `joined` feeds BOTH the totals aggregate and the shift ranking; the
     // scoped persist (vocab-sized rows — tiny) evaluates the two explode+count
     // aggregations and the full-outer join ONCE instead of twice (ADVICE r6)
-    val joined = Dedup.persistScoped(
+    val joined = Materialize.share(
       counts(a, "cnt_a").join(counts(b, "cnt_b"), Seq("token"), "full_outer")
         .select(col("token"),
           coalesce(col("cnt_a"), lit(0L)).as("cnt_a"),
@@ -829,7 +829,7 @@ object Corpus {
       s"need maxVocab >= 1 and maxBigrams >= 0 — 0 bigrams is a pure backoff " +
         s"model (got maxVocab=$maxVocab, maxBigrams=$maxBigrams)")
     def toks = tokens(col(textCol))
-    val uni0 = Dedup.persistScoped(Parallelism.ensure(train)
+    val uni0 = Materialize.share(Parallelism.ensure(train)
       .select(explode(toks).as("w")).groupBy("w").agg(count(lit(1)).as("cw")))
     // T = UNCAPPED token count — the normalization constant must not shrink
     // when the vocab cap binds, or kept words would get cheaper as the
@@ -883,7 +883,7 @@ object Corpus {
           .as("p"))
     // two broadcast joins, not three: `cprev` rides the bigram table (NULL
     // when the prev word fell to the vocab cap — see trainLmModel)
-    val perDoc = Dedup.persistScoped( // feeds the totals agg AND the output
+    val perDoc = Materialize.share( // feeds the totals agg AND the output
       pos
         .join(broadcast(uni), pos("p.w") === uni("w"), "left")
         .join(broadcast(big),
@@ -1037,7 +1037,7 @@ object Corpus {
     require(k > 0, s"k must be positive, got $k")
     val hex = substring(
       md5(concat(lit(seed), coalesce(col(textCol), lit("")))), 1, 12)
-    val perDoc = Dedup.persistScoped( // feeds the TopK agg AND the detail join
+    val perDoc = Materialize.share( // feeds the TopK agg AND the detail join
       dsirCore(docs, target, raw, idCol, textCol, selHex = Some(hex))
         .withColumn("tok_bits",
           expr("(dsir_bits - pmod(dsir_bits, n_tokens)) div n_tokens")))

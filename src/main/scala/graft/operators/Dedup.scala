@@ -16,79 +16,9 @@ import graft.functions.TextFunctions._
  */
 object Dedup {
 
-  /**
-   * Operator-internal caches, bounded to the most recent few invocations:
-   * persists beyond the bound are evicted oldest-first (unpersisting a lineage
-   * dependency is safe — Spark just recomputes), so repeated dedup calls in a
-   * long-lived session cannot accumulate block-manager storage. The bound is
-   * > 1 so composing operators (build near-dup candidates, then verify with
-   * the jaccard operator before either has executed) keep both their caches;
-   * access is synchronized to keep the bound exact under concurrent sessions.
-   */
-  // Sized for the deepest single-operator cache chain (the batch-BM25
-  // scan door registers five: toked, scored postings, doc vectors,
-  // survivors, per-doc folds — r17). Eviction is FIFO at REGISTRATION
-  // time, so a bound below an operator's own chain evicts its earliest
-  // cache before the action that needs it even runs (measured: the scan
-  // door re-tokenized the sf1 corpus three times, +14 s).
-  private val MaxLiveCachesBase = 8
-  // Raised, SCOPED, by withCacheBudget when one operator call legitimately
-  // holds a deeper live chain than the base bound — the K-shard batch-BM25
-  // door keeps 2 shared + 2-3 per-shard caches alive across its
-  // construction+action window, and FIFO eviction at the base bound would
-  // silently drop the shared scored cache mid-run, recomputing the corpus
-  // tokenize once per remaining shard (the exact r17 +14 s failure mode,
-  // ×K at probe scale). r20 (VERDICT r19 next #5 / ADVICE): the raise was
-  // a session-lifetime ratchet — one shards=16 call left the bound at 36
-  // forever, so unrelated later operators could hold 4.5× the designed
-  // FIFO depth of stale caches. Now the raise lives exactly as long as the
-  // call that needs it: the effective bound is max(base, every ACTIVE
-  // scope), restored on scope exit. Restoration does NOT evict eagerly —
-  // the door's caches stay referenced by its not-yet-collected result, and
-  // eviction at registration time (the next persistScoped) trims back to
-  // base exactly as the base-bound contract always did.
-  @volatile private var maxLiveCaches = MaxLiveCachesBase
-  private val liveCaches = new java.util.ArrayDeque[DataFrame]()
-  private val activeBudgets = new java.util.ArrayList[Integer]()
-  private def recomputeBudget(): Unit = {
-    var m = MaxLiveCachesBase
-    activeBudgets.forEach(b => if (b > m) m = b)
-    maxLiveCaches = m
-  }
-  private[graft] def withCacheBudget[T](n: Int)(f: => T): T = {
-    liveCaches.synchronized { activeBudgets.add(Int.box(n)); recomputeBudget() }
-    try f
-    finally liveCaches.synchronized {
-      activeBudgets.remove(Int.box(n)); recomputeBudget()
-    }
-  }
-  /** The effective FIFO bound right now — exposed for the scope tests. */
-  private[graft] def cacheBudget: Int = maxLiveCaches
-  private[graft] def persistScoped(df: DataFrame): DataFrame = {
-    // idempotent: an already-persisted frame (iterative operators manage
-    // round-by-round persistence themselves) is only TRACKED, not re-persisted
-    val p =
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    liveCaches.synchronized {
-      liveCaches.addLast(p)
-      while (liveCaches.size > maxLiveCaches) liveCaches.pollFirst().unpersist(blocking = false)
-    }
-    p
-  }
-
-  /**
-   * Drop every scoped cache now (blocking, so freed blocks are really gone
-   * before the caller proceeds). Benchmarks call this between queries: without
-   * it a measured query can pay an earlier query's eviction/recompute, or get
-   * an artificially warm cache when its logical plan matches a still-cached
-   * frame from a previous run — either way the per-query number stops meaning
-   * "this query's plan cost" (VERDICT r2 "What's wrong" #1).
-   */
-  def clearCaches(): Unit = liveCaches.synchronized {
-    while (!liveCaches.isEmpty) liveCaches.pollFirst().unpersist(blocking = true)
-  }
+  /** Drop every operator share and cut now — see [[Materialize.clear]].
+    * Kept here because benchmark drivers call it by this name. */
+  def clearCaches(): Unit = Materialize.clear()
 
   /**
    * Drop rows whose `keyCol` value occurs in more than `cap` rows — the
@@ -115,7 +45,7 @@ object Dedup {
       // second persist needed, both pair-join sides filter on read
       exploded.filter(!col(keyCol).isInCollection(hot))
     else
-      persistScoped(exploded.join(hotDf, Seq(keyCol), "left_anti"))
+      Materialize.share(exploded.join(hotDf, Seq(keyCol), "left_anti"))
   }
 
   /**
@@ -170,7 +100,7 @@ object Dedup {
     // a compact corpus (one parquet file → one input partition) gets its
     // explode/join parallelism from this exchange instead of running the
     // quadratic-in-bucket pair join on a single core.
-    val exploded = persistScoped( // both join sides read it
+    val exploded = Materialize.share( // both join sides read it
       withSh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
         .repartition(col("s")))
     val pruned = maxShingleFreq match {
@@ -221,7 +151,7 @@ object Dedup {
     // Persisted (scoped): the plan references sigs three times (banding + both
     // candidate rejoins); MEMORY_AND_DISK spills gracefully at corpus scale
     // (docs × ~0.5 KB).
-    val sigs = persistScoped(
+    val sigs = Materialize.share(
       Parallelism.ensure(df).filter(size(toks) >= 3)
         .select(col(idCol).as("id"), tokenHashes(toks).as("th"))
         .select(col("id"),
@@ -294,7 +224,7 @@ object Dedup {
     // never carries duplicate (id, fp) rows. Repartitioned on the fingerprint
     // key: one exchange feeds the frequency cap and both pair-join sides
     // (same rationale as ngramJaccard's shingle exchange).
-    val exploded = persistScoped(
+    val exploded = Materialize.share(
       TextAnalysis.winnowFps(Parallelism.ensure(df), k, window, idCol, textCol)
         .select(col(idCol).as("id"), explode(array_distinct(col("fps"))).as("f"))
         .repartition(col("f")))
@@ -384,20 +314,20 @@ object Dedup {
         // persisted: BOTH self-join sides read this frame, and without the
         // cache each side re-ran the full tokenize+winnow+explode pass
         // (r21, StageProf at sf0.1: two identical 235k-row map stages)
-        val fps = persistScoped(
+        val fps = Materialize.share(
           TextAnalysis.winnowFps(src, 3, 4, idCol, textCol)
             .select(col(idCol).as("id"), explode(array_distinct(col("fps"))).as("f"))
             .repartition(col("f")))
         val fa = fps.select(col("f"), col("id").as("id_a"))
         val fb = fps.select(col("f"), col("id").as("id_b"))
-        Some(persistScoped(
+        Some(Materialize.share(
           fa.join(fb, Seq("f")).filter(col("id_a") < col("id_b"))
             .select("id_a", "id_b").distinct()))
       }
 
     // position-indexed gram hashes, pre-partitioned on the join key (one
     // exchange feeds the frequency cap and both join sides)
-    val grams = persistScoped(
+    val grams = Materialize.share(
       src.select(col(idCol).as("id"), tokenHashes(toks).as("th"))
         .select(col("id"), posexplode(orderedShingleHashes(col("th"), gramK)).as(Seq("pos", "h")))
         .repartition(col("h")))
@@ -418,7 +348,7 @@ object Dedup {
         // both sides regardless — feed those exchanges from one cached
         // frame instead of two recomputes; r21 StageProf: two identical
         // 225k-row 64-task stages)
-        persistScoped(pruned.join(candDocs, Seq("id"), "left_semi"))
+        Materialize.share(pruned.join(candDocs, Seq("id"), "left_semi"))
     }
     val a = restricted.select(col("h"), col("id").as("id_a"), col("pos").as("pa"))
     val b = restricted.select(col("h"), col("id").as("id_b"), col("pos").as("pb"))
@@ -522,10 +452,10 @@ object Dedup {
    *    SoCC'14), O(log²n) rounds — the round dataflow (equality joins on id)
    *    is the same shape, so swapping the round body would not change the
    *    plan class. Iteration state is two long columns per document; each
-   *    round ends in a lazy `localCheckpoint` (the labels frame references
+   *    round ends in a lazy [[Materialize.cut]] (the labels frame references
    *    itself twice per round, so without lineage truncation the logical
-   *    plan doubles every round). (On a real cluster with executor loss,
-   *    swap in reliable `checkpoint` against shared storage — same shape.)
+   *    plan doubles every round), and the previous round's cut is released
+   *    once the new one is filled, so only the final labels stay registered.
    *
    * Precondition: pair ids ⊆ `docs(idCol)` (true for every pair generator in
    * this object — pairs are derived from the same frame).
@@ -541,8 +471,8 @@ object Dedup {
     // The pair frame is referenced by BOTH union branches: uncached, the
     // (expensive) pair-generation join would materialize twice building the
     // undirected edge frame. Cache pairs first; the union then reads it.
-    val p = persistScoped(pairs.select(col("id_a"), col("id_b")))
-    val und = persistScoped( // read every round: both propagation directions
+    val p = Materialize.share(pairs.select(col("id_a"), col("id_b")))
+    val und = Materialize.share( // read every round: both propagation directions
       p.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(p.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // iterate ONLY over pair-touched nodes: a document with no near-dup edge
@@ -627,9 +557,8 @@ object Dedup {
   /** Distributed min-label propagation until fixpoint (≤ maxIter rounds) —
     * the large-subgraph path of [[nearDupClusters]]. */
   private def distributedMinLabels(und: DataFrame, maxIter: Int): DataFrame = {
-    var labels = und.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id").cast("long"))
-      .localCheckpoint()
+    var labels = Materialize.cut(und.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id").cast("long")), eager = true)
     var converged = false
     var round = 0
     while (!converged && round < maxIter) {
@@ -639,15 +568,16 @@ object Dedup {
       // lazy checkpoint: the convergence count below is a FULL scan, so it
       // both materializes the checkpoint and answers the fixpoint test in a
       // single job per round (an eager checkpoint + isEmpty would be two)
-      val next = labels.select(col("id"), col("label")).union(msgs)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(false)
+      val next = Materialize.cut(labels.select(col("id"), col("label")).union(msgs)
+        .groupBy("id").agg(min("label").as("label")), eager = false)
       // fixpoint test: any label strictly decreased this round? (labels only
       // ever decrease, so inequality == decrease); count, not isEmpty — a
       // partial (limit-1) scan would leave the checkpoint incomplete
       val prev = labels.withColumnRenamed("label", "prev_label")
       converged = next.join(prev, "id")
         .filter(col("label") =!= col("prev_label")).count() == 0L
+      // the count filled `next`, so the previous round's blocks are dead
+      Materialize.release(labels)
       labels = next
       round += 1
     }
@@ -765,7 +695,7 @@ object Dedup {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       broadcastMaxBytes: Long = 1L << 30): DataFrame = {
-    val quant = persistScoped( // stream side + build side both read it
+    val quant = Materialize.share( // stream side + build side both read it
       quantized(Parallelism.ensure(df), idCol, vecCol))
     val a = quant.select(col("id").as("id_a"), col("q").as("q_a"), col("norm2").as("n2_a"))
     val b = quant.select(col("id").as("id_b"), col("q").as("q_b"), col("norm2").as("n2_b"))
@@ -873,7 +803,7 @@ object Dedup {
       // the probe side AT ITS SOURCE PARALLELISM. Measured at sf0.1:
       // 9.8 s → ~1 s. At 100 TB the same exchange spreads buckets across
       // executors, so it is the right plan at every scale.
-      val banded = persistScoped(
+      val banded = Materialize.share(
         Similarity.withLshKeys(quantKeys, dim, tables, planesPerTable, vecCol)
           .select(col("id"), col("ltable"), col("lkey"), col("q"), col("norm2"))
           .repartition(col("ltable"), col("lkey")))
@@ -888,7 +818,7 @@ object Dedup {
       // shuffle (the 100 TB default): the exchange carries (ltable, lkey, id)
       // ≈ 20 B/row, pairs dedup on ids, and vectors rejoin only for the
       // surviving candidates.
-      val quant = persistScoped(quantized(df, idCol, vecCol))
+      val quant = Materialize.share(quantized(df, idCol, vecCol))
       val banded = Similarity.withLshKeys(df, dim, tables, planesPerTable, vecCol)
         .select(col(idCol).as("id"), col("ltable"), col("lkey"))
       val aK = banded.select(col("ltable"), col("lkey"), col("id").as("id_a"))
@@ -1027,7 +957,7 @@ object Dedup {
     val cn2Lit = typedLit((0 until nlist).map { c =>
       qCents.slice(c * dim, (c + 1) * dim).map(x => x * x).sum
     })
-    val q = persistScoped( // read by both pair-join sides and the output join
+    val q = Materialize.share( // read by both pair-join sides and the output join
       quantized(Parallelism.ensure(embs), idCol, vecCol)
         .withColumn("cells",
           graft.functions.expressions.NearestCentroidsQ(col("q"), qCents, nlist, dim, nassign))
@@ -1163,7 +1093,7 @@ object Dedup {
     val exactIdx = docs
       .groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_docs"))
-    val sigs = persistScoped( // read by the banding projection AND kept in the index
+    val sigs = Materialize.share( // read by the banding projection AND kept in the index
       Parallelism.ensure(docs).filter(size(toks) >= 3)
         .select(col(idCol).as("id"), tokenHashes(toks).as("th"))
         .select(col("id"),
@@ -1287,7 +1217,7 @@ object Dedup {
       textCol: String = "text",
       maxBandBucket: Int = 1000): DataFrame = {
     val toks = tokens(col(textCol))
-    val dSigs = persistScoped( // banding + candidate verify both read it
+    val dSigs = Materialize.share( // banding + candidate verify both read it
       Parallelism.ensure(delta).filter(size(toks) >= 3)
         .select(col(idCol).as("id"), tokenHashes(toks).as("th"))
         .select(col("id"),
@@ -1592,7 +1522,7 @@ object Dedup {
       vecCol: String = "embedding"): DataFrame = {
     require(thresholdNum > 0 && thresholdDen > 0 && thresholdNum <= thresholdDen,
       s"threshold must be a rational in (0, 1]: $thresholdNum/$thresholdDen")
-    val dCells = persistScoped( // argmax output, probe side, and self-join all read it
+    val dCells = Materialize.share( // argmax output, probe side, and self-join all read it
       assignCells(delta, index.centroids, index.dim, index.nlist, index.nassign,
         idCol, vecCol))
     def side(df: DataFrame, suffix: String) = df.select(
@@ -1760,7 +1690,7 @@ object Dedup {
       sampleSize: Int = 0): SemIndex = {
     val nl = if (nlist > 0) nlist else index.nlist
     val na = if (nassign > 0) nassign else index.nassign
-    val vecs = persistScoped(semIndexVectors(index))
+    val vecs = Materialize.share(semIndexVectors(index))
     val cents = Similarity.trainIvfCentroids(vecs, index.dim, nl, sampleSize = sampleSize)
     SemIndex(cents, index.dim, nl, na,
       assignCells(vecs, cents, index.dim, nl, na, "vec_id", "embedding"))

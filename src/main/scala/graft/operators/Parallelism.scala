@@ -57,7 +57,7 @@ object Parallelism {
         // pre-r20 walk fell through to tier 3 — and tier 3's `.rdd` on a
         // cached frame EXECUTES the whole cache-fill subtree as real jobs at
         // plan-construction time (measured in the crawl pipelines: every
-        // `ensure` meeting a persistScoped frame re-ran the upstream
+        // `ensure` meeting a shared (persisted) frame re-ran the upstream
         // probe→cut→scrub chain; the discarded grown-index build alone paid
         // it three times per query). Read the cached PHYSICAL plan instead:
         // any shuffle exchange below the cache (or an AQE-planned subtree,

@@ -201,12 +201,10 @@ object QualityModel {
   def trainLrModel(docs: DataFrame, iters: Int = 16, lr: Double = 4.0,
       tau: Double = 0.8, idCol: String = "doc_id",
       textCol: String = "text"): LrModel = {
-    val feats = featurize(docs, idCol, textCol)
-      .join(heuristicLabel(docs, tau, idCol, textCol), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try LrModel(FeatureCols,
-      trainLr(feats, iters = iters, lr = lr).toIndexedSeq)
-    finally feats.unpersist(blocking = false): Unit
+    Materialize.within(featurize(docs, idCol, textCol)
+        .join(heuristicLabel(docs, tau, idCol, textCol), idCol)) { feats =>
+      LrModel(FeatureCols, trainLr(feats, iters = iters, lr = lr).toIndexedSeq)
+    }
   }
 
   /** Persist the model — `(rank, feature, weight)` parquet, rank pinning

@@ -195,7 +195,7 @@ object Search {
     // postings filter — persist it scoped so the batch pays ONE tokenize
     // pass, not two (VERDICT r14 wrong #3). MEMORY_AND_DISK: at index
     // scale, serve from the persisted index door instead of this scan door.
-    val toked = persistHot(
+    val toked = Materialize.share(
       Parallelism.ensure(docs)
         .select(col(idCol), tokens(col(textCol)).as("tk"))
         .withColumn("dl", size(col("tk")).cast("long")))
@@ -278,7 +278,7 @@ object Search {
     require(k >= 1, s"k must be >= 1, got $k")
     val qt = queryTermTable(queries, qidCol, queryCol)
     val vocab = qt.select(col("token")).distinct()
-    val toked = persistHot(
+    val toked = Materialize.share(
       Parallelism.ensure(docs)
         .select(col(idCol), tokens(col(textCol)).as("tk"))
         .withColumn("dl", size(col("tk")).cast("long")))
@@ -340,7 +340,9 @@ object Search {
     val bytes = idx.postings.queryExecution.optimizedPlan.stats.sizeInBytes
     val target = bytes / LazyBoundsBytesPerPartition
     if (target <= 1) None
-    else Some(math.min(4096L, target.toLong).toInt)
+    // clamp in BigInt space: plan-only stats can exceed 2^63 (a cross
+    // join's estimate), where `toLong` would wrap negative
+    else Some(target.min(BigInt(4096)).toInt)
   }
 
   /** [[autoLazyBoundsPartitions]]'s sizing unit: ~16 B/posting row ×
@@ -383,7 +385,7 @@ object Search {
   private def cutLazy(scored0: DataFrame, qt: DataFrame, k: Int,
       idCol: String, qidCol: String,
       autoBoundsParts: Option[Int] = None): DataFrame = {
-    val scored = persistHot(scored0.select(col(idCol), col("token"), col("s_t")))
+    val scored = Materialize.share(scored0.select(col(idCol), col("token"), col("s_t")))
     val confParts = scored0.sparkSession.conf
       .getOption(LazyBoundsPartitionsConfKey).map(_.toInt)
     confParts.foreach(n => require(n >= 1,
@@ -400,7 +402,7 @@ object Search {
     }
     val qEps = qt.groupBy(col(qidCol))
       .agg((count(lit(1)).cast("double") * lit(1e-13)).as("eps"))
-    val pairs = graft.operators.Dedup.persistScoped(
+    val pairs = Materialize.share(
       scoredBase.join(broadcast(qt), Seq("token"))
         .groupBy(col(qidCol), col(idCol))
         .agg(sum(col("s_t")).as("apx"))
@@ -414,7 +416,7 @@ object Search {
         when(size(col("tk.entries")) < k, lit(Double.NegativeInfinity))
           .otherwise(element_at(col("tk.entries"), k).getField("score"))
           .as("theta"))
-    val surv = graft.operators.Dedup.persistScoped(
+    val surv = Materialize.share(
       pairs.join(broadcast(theta), Seq(qidCol))
         .filter(col("hi") >= col("theta"))
         .select(col(qidCol), col(idCol)))
@@ -422,7 +424,7 @@ object Search {
     // repartition is the BOUNDS pass's requirement; re-running it for the
     // fold re-shuffled the whole scored frame, where the fold aggregate's
     // own exchange carries only survivor-bounded partial buffers
-    val perDoc = graft.operators.Dedup.persistScoped(
+    val perDoc = Materialize.share(
       exactFold(
         scored.join(surv, Seq(idCol))
           .join(broadcast(qt), Seq(qidCol, "token"), "leftsemi"),
@@ -436,40 +438,6 @@ object Search {
       .select(col(qidCol), col(idCol), col("n_terms"), col("score"), col("rank"))
       .orderBy(col(qidCol), col("rank"))
   }
-
-  /** Session-conf key re-leveling the batch doors' two corpus-sized caches
-    * (tokenized corpus + scored postings): any `StorageLevel.fromString`
-    * name. The storage A/B this lever exists for measured MEMORY_ONLY out
-    * (sf10/16 g: evicted scored blocks recompute the decimal scoring,
-    * 1.25–1.5× unsharded) — the default stays persistScoped's
-    * MEMORY_AND_DISK. */
-  val CacheLevelConfKey = "spark.graft.bm25.cacheLevel"
-
-  /** Scoped persist with the storage-level override for the batch doors'
-    * two corpus-sized caches. r20 (VERDICT r19 wrong #2): the lever is the
-    * [[CacheLevelConfKey]] SparkConf — per-session, UI-visible, no
-    * process-global state; the `GRAFT_BM25_CACHE_LEVEL` env var stays as
-    * the ScaleBench harness fallback (conf wins when both are set).
-    * Neither set = the session default (MEMORY_AND_DISK through
-    * persistScoped). */
-  private def persistHot(df: DataFrame): DataFrame =
-    graft.operators.Dedup.persistScoped(
-      df.sparkSession.conf.getOption(CacheLevelConfKey)
-        .orElse(sys.env.get("GRAFT_BM25_CACHE_LEVEL")) match {
-        case Some(l) =>
-          df.persist(org.apache.spark.storage.StorageLevel.fromString(l))
-        case None => df
-      })
-
-  /** The [[CacheLevelConfKey]]/env storage level as a value — the eager
-    * doors' scored-postings checkpoint applies the same lever
-    * ([[persistHot]]'s contract) through `localCheckpoint`'s level arg. */
-  private def hotLevel(
-      spark: org.apache.spark.sql.SparkSession): org.apache.spark.storage.StorageLevel =
-    spark.conf.getOption(CacheLevelConfKey)
-      .orElse(sys.env.get("GRAFT_BM25_CACHE_LEVEL"))
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** The batch scorer — r16 bound pruning, r17 single-scan caching and
     * the pair-first survivor fold. The r15 form pushed the WHOLE
@@ -514,7 +482,7 @@ object Search {
     // depth for the rest of the session. The caches registered inside the
     // scope stay live until the next registrations trim back to base —
     // exactly the base bound's eviction-at-registration contract.
-    graft.operators.Dedup.withCacheBudget(
+    Materialize.withCacheBudget(
       4 + (if (concurrent) 3 else 2) * shards) {
     // Scored matched postings computed ONCE and cached (r17: the broadcast
     // subqueries hanging off this subtree defeated AQE's exchange reuse —
@@ -528,8 +496,8 @@ object Search {
     // unknown partitioning — re-inserting the (qid, doc) exchanges the
     // doc-clustering removes.)
     //
-    // r21 (VERDICT r20 next #5): at K > 1 the cache is an EAGER
-    // localCheckpoint, not a persist — same data, same execution boundary,
+    // At K > 1 the cache is an EAGER cut (Materialize.cut, a
+    // localCheckpoint), not a share — same data, same execution boundary,
     // but the LINEAGE is CUT at the leaf. A persisted frame keeps the whole
     // tokenize+score plan below its cache leaf, and EVERY slice's
     // pairs/bounds/fold/cut subplan replays that subtree TEXT: at K=4 the
@@ -539,18 +507,17 @@ object Search {
     // runs jobs up through the survivor count), so materializing here only
     // moves WHEN the scoring executes; no join decision reads the leaf's
     // stats (every join around it carries an explicit broadcast hint or
-    // the counted bc() decision), and the CacheLevelConfKey lever rides the
-    // checkpoint's level arg. The UNSHARDED doors (K = 1) keep the plain
-    // persist: their plans replay the subtree ~once (no K-fold blow-up),
-    // and the cached-subtree text is the documented introspection surface
-    // (SearchSpec's pruned-scan / no-tokenize plan contracts read it). On
-    // a real cluster with executor loss, swap in reliable checkpoint (same
-    // note as packSequences / nearDupClusters).
+    // the counted bc() decision). The UNSHARDED doors (K = 1) keep the
+    // plain share: their plans replay the subtree ~once (no K-fold
+    // blow-up), and the cached-subtree text is the documented
+    // introspection surface (SearchSpec's pruned-scan / no-tokenize plan
+    // contracts read it). Dedup.clearCaches frees the cuts with the shares,
+    // so the returned frame must be collected before it runs.
     val scoredPlain = scoreTerms(matched0, stats, dfTable)
       .select(col(idCol), col("token"), col("s_t"))
     val scoredCached =
-      if (shards == 1) persistHot(scoredPlain)
-      else scoredPlain.localCheckpoint(true, hotLevel(spark))
+      if (shards == 1) Materialize.share(scoredPlain)
+      else Materialize.cut(scoredPlain, eager = true)
     // Hash-slice the query set (r19): each slice replays the shared scored
     // cache through its own bounds/fold/cut, so per-pair state — aggregate
     // hash maps, the survivor broadcast, fold buffers — is ~1/shards of
@@ -586,7 +553,7 @@ object Search {
         slices.map { case (qtS, qcS) =>
           val out = cutSlice(spark, scoredCached, qtS, qcS, k, idCol, qidCol,
             dfTable)
-          if (shards == 1) out else out.localCheckpoint(true, hotLevel(spark))
+          if (shards == 1) out else Materialize.cut(out, eager = true)
         }
       else {
         // K CONCURRENT slice jobs over the shared cache — the deployment
@@ -612,12 +579,11 @@ object Search {
               try
                 // run this slice's WHOLE pipeline (bounds, survivors, fold,
                 // cut) inside its own thread/pool — the union below then
-                // only reads the K small checkpointed outputs (r21: the
-                // eager checkpoint replaces the pre-r21 persistScoped +
-                // count(), materializing the same rows while CUTTING the
-                // slice's plan text out of the union frame)
-                cutSlice(spark, scoredCached, qtS, qcS, k, idCol, qidCol,
-                  dfTable).localCheckpoint(true, hotLevel(spark))
+                // only reads the K small cut outputs (the eager cut
+                // materializes the slice's rows while CUTTING its plan text
+                // out of the union frame)
+                Materialize.cut(cutSlice(spark, scoredCached, qtS, qcS, k,
+                  idCol, qidCol, dfTable), eager = true)
               finally sc.setLocalProperty("spark.scheduler.pool", null)
             }
           }
@@ -710,52 +676,46 @@ object Search {
     // The fanout aggregate is the honest optimum here: its input is
     // O(Σ_t df(t)·queries(t)) — the information the scores actually
     // carry — and it rides one whole-stage-codegen'd hash aggregate.
-    // RAW persist, dropped as soon as the survivor set materializes (r19):
-    // pairs is the slice's one fanout-sized frame, and both its consumers
-    // (theta's TopK and the survivor filter) execute inside surv.count()
-    // below — holding it past that point only raises the door's memory
-    // high-water mark (the thing sharding exists to cut). The drop rides
-    // a finally (ADVICE r19): a task failure/OOM/cancellation inside
-    // surv.count() must not leak an untracked fanout-sized cache — raw
-    // persist bypasses the scoped FIFO, so nothing else would ever
-    // reclaim it for the rest of the session.
-    val pairs =
+    // Held `within` the survivor count only: pairs is the slice's one
+    // fanout-sized frame, and both its consumers (theta's TopK and the
+    // survivor filter) execute inside surv.count() below — holding it past
+    // that point only raises the door's memory high-water mark (the thing
+    // sharding exists to cut), and a task failure inside the count must
+    // not leak it.
+    val (surv, nSurvivors) = Materialize.within(
       scoredBase.join(broadcast(qt), Seq("token"))
         .groupBy(col(qidCol), col(idCol))
         .agg(sum(col("s_t")).as("apx"))
         .join(broadcast(qEps), Seq(qidCol))
         .select(col(qidCol), col(idCol),
           (col("apx") * (lit(1.0) - col("eps"))).as("lo"),
-          (col("apx") * (lit(1.0) + col("eps"))).as("hi"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (surv, nSurvivors) =
-      try {
-        // θ_q = the k-th largest lo per query (TopK partial-trims, so its
-        // exchange carries O(queries·k) rows; fewer than k pairs ⇒ −∞).
-        // Every pair the exact cut could select survives `hi ≥ θ_q`: true ≤
-        // hi, and the k-th true score dominates the k-th lo elementwise —
-        // ties included, which is why the filter is ≥.
-        val theta = pairs.groupBy(col(qidCol))
-          .agg(graft.functions.TopK.topKDouble(k)(col("lo"), col(idCol)).as("tk"))
-          .select(col(qidCol),
-            when(size(col("tk.entries")) < k, lit(Double.NegativeInfinity))
-              .otherwise(element_at(col("tk.entries"), k).getField("score"))
-              .as("theta"))
-        // surv is ~queries·(k + ties) rows — persisted scoped because three
-        // consumers read it (the guard count, the fold's pair join, and
-        // through them the cut)
-        val sv = graft.operators.Dedup.persistScoped(
-          pairs.join(broadcast(theta), Seq(qidCol))
-            .filter(col("hi") >= col("theta"))
-            .select(col(qidCol), col(idCol)))
-        // Survivor frames ride driver broadcasts ONLY while they are provably
-        // small (ADVICE r16: the tie/near-tie set is unbounded — a degenerate
-        // corpus where O(docs) documents sit within 2ε of every query's k-th
-        // score makes survivors O(queries·docs), and a forced broadcast there
-        // would exhaust driver memory where a shuffle degrades gracefully).
-        // `sv` is persisted, so the count is one cheap cached pass.
-        (sv, sv.count())
-      } finally pairs.unpersist(blocking = false)
+          (col("apx") * (lit(1.0) + col("eps"))).as("hi"))) { pairs =>
+      // θ_q = the k-th largest lo per query (TopK partial-trims, so its
+      // exchange carries O(queries·k) rows; fewer than k pairs ⇒ −∞).
+      // Every pair the exact cut could select survives `hi ≥ θ_q`: true ≤
+      // hi, and the k-th true score dominates the k-th lo elementwise —
+      // ties included, which is why the filter is ≥.
+      val theta = pairs.groupBy(col(qidCol))
+        .agg(graft.functions.TopK.topKDouble(k)(col("lo"), col(idCol)).as("tk"))
+        .select(col(qidCol),
+          when(size(col("tk.entries")) < k, lit(Double.NegativeInfinity))
+            .otherwise(element_at(col("tk.entries"), k).getField("score"))
+            .as("theta"))
+      // surv is ~queries·(k + ties) rows — shared because three consumers
+      // read it (the guard count, the fold's pair join, and through them
+      // the cut)
+      val sv = Materialize.share(
+        pairs.join(broadcast(theta), Seq(qidCol))
+          .filter(col("hi") >= col("theta"))
+          .select(col(qidCol), col(idCol)))
+      // Survivor frames ride driver broadcasts ONLY while they are provably
+      // small (ADVICE r16: the tie/near-tie set is unbounded — a degenerate
+      // corpus where O(docs) documents sit within 2ε of every query's k-th
+      // score makes survivors O(queries·docs), and a forced broadcast there
+      // would exhaust driver memory where a shuffle degrades gracefully).
+      // `sv` is persisted, so the count is one cheap cached pass.
+      (sv, sv.count())
+    }
     def bc(df: DataFrame): DataFrame =
       if (nSurvivors <= MaxBroadcastSurvivors) broadcast(df) else df
     // GRAFT_SEARCH_PROF=1: print the pass's scale terms — the bounds
@@ -791,7 +751,7 @@ object Search {
     // bounded exchange for one corpus-sized one at every scale. When
     // survivors exceed [[MaxBroadcastSurvivors]] the join degrades to a
     // shuffle join exactly as before (both sides exchange on doc id).
-    val perDoc = graft.operators.Dedup.persistScoped(
+    val perDoc = Materialize.share(
       exactFold(
         scoredCached.join(bc(surv), Seq(idCol))
           .join(broadcast(qt), Seq(qidCol, "token"), "leftsemi"),

@@ -23,17 +23,6 @@ object Similarity {
   /** Exact dot product in double precision (codegen'd custom expression). */
   def dotExpr(a: Column, b: Column): Column = ArrayDotProduct(a, b)
 
-  def cosineExpr(a: Column, b: Column): Column =
-    dotExpr(a, b) / (sqrt(dotExpr(a, a)) * sqrt(dotExpr(b, b)))
-
-  /**
-   * Quantized integer dot product — bit-exact across engines and partition
-   * orders. The float components are widened to double *before* scaling so the
-   * arithmetic is the identical IEEE sequence the oracle runs.
-   */
-  def dotQExpr(a: Column, b: Column, scale: Int): Column =
-    ArrayDotProduct(quantize(a, scale), quantize(b, scale))
-
   /** Float/double array → exact integer array at `scale` (identical IEEE path to the oracle). */
   def quantize(a: Column, scale: Int): Column =
     transform(a, x => round(x.cast("double") * lit(scale)).cast("long"))

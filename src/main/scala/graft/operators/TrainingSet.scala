@@ -93,16 +93,14 @@ object TrainingSet {
     // `tokenCount` swaps the whitespace count for the caller's accounting —
     // a trained-tokenizer count (Tokenizer.bpeTokenCounts' BpeCount column)
     // packs by the sequence length the model will actually see
-    val counts = Parallelism.ensure(docs)
-      .select(col(idCol).cast("long"),
-        tokenCount.getOrElse(size(tokens(coalesce(col(textCol), lit("")))))
-          .cast("long"))
-      .repartitionByRange(col(idCol))
-      .sortWithinPartitions(idCol)
-      .as[(Long, Long)]
-      // both passes read this frame; without the persist, pass 2 re-tokenizes
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // both passes read `counts`; without the persist, pass 2 re-tokenizes
+    Materialize.within(Parallelism.ensure(docs)
+        .select(col(idCol).cast("long"),
+          tokenCount.getOrElse(size(tokens(coalesce(col(textCol), lit("")))))
+            .cast("long"))
+        .repartitionByRange(col(idCol))
+        .sortWithinPartitions(idCol)
+        .as[(Long, Long)]) { counts =>
       val partTotals = counts.mapPartitions { it =>
         var s = 0L
         it.foreach(s += _._2)
@@ -114,24 +112,21 @@ object TrainingSet {
         sorted.map(_._1).zip(offsets).toMap
       }
       val bc = spark.sparkContext.broadcast(prefix)
-      val packed = counts.mapPartitions { it =>
+      // EAGER cut while `counts` is still cached — correctness, not
+      // convenience: pass 2's plan must read the SAME partitioning pass 1's
+      // totals were computed from. A lazily-returned frame would be
+      // re-planned after `within` unpersists `counts`, and a fresh
+      // repartitionByRange re-SAMPLES its boundaries (seeded by the new
+      // plan's RDD id) — per-partition membership could shift and the
+      // broadcast offsets would silently mis-sum.
+      val packed = Materialize.cut(counts.mapPartitions { it =>
         var run = bc.value(TaskContext.getPartitionId())
         it.map { case (id, nTok) =>
           val start = run
           run += nTok
           (id, nTok, start)
         }
-      }.toDF(idCol, "n_tokens", "start_offset")
-        // EAGER localCheckpoint while `counts` is still cached — correctness,
-        // not convenience: pass 2's plan must read the SAME partitioning pass
-        // 1's totals were computed from. A lazily-returned frame would be
-        // re-planned after the finally-unpersist below, and a fresh
-        // repartitionByRange re-SAMPLES its boundaries (seeded by the new
-        // plan's RDD id) — per-partition membership could shift and the
-        // broadcast offsets would silently mis-sum. (On a real cluster with
-        // executor loss, swap in reliable checkpoint — same call shape, same
-        // note as nearDupClusters.)
-        .localCheckpoint(true)
+      }.toDF(idCol, "n_tokens", "start_offset"), eager = true)
       // `div`, not `/`: Spark's `/` on longs goes through DOUBLE, which loses
       // exactness once the global token stream passes 2^53 — a few hundred TB
       // of text does. Integer division stays exact at any scale.
@@ -142,7 +137,7 @@ object TrainingSet {
         // the last occupied token is well-defined
         expr(s"(start_offset + n_tokens - 1) div ${capTokens}L").as("bin_end"))
         .withColumn("n_bins", col("bin_end") - col("bin_start") + 1)
-    } finally counts.unpersist(blocking = false): Unit
+    }
   }
 
   /**
@@ -216,15 +211,13 @@ object TrainingSet {
       s"entering state must satisfy bin >= 0 and 0 <= fill <= capTokens, got $start")
     val spark = docs.sparkSession
     import spark.implicits._
-    val counts = Parallelism.ensure(docs)
-      .select(col(idCol).cast("long"),
-        tokenCount.getOrElse(size(tokens(coalesce(col(textCol), lit("")))))
-          .cast("long"))
-      .repartitionByRange(col(idCol))
-      .sortWithinPartitions(idCol)
-      .as[(Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.within(Parallelism.ensure(docs)
+        .select(col(idCol).cast("long"),
+          tokenCount.getOrElse(size(tokens(coalesce(col(textCol), lit("")))))
+            .cast("long"))
+        .repartitionByRange(col(idCol))
+        .sortWithinPartitions(idCol)
+        .as[(Long, Long)]) { counts =>
       // ---- pass 1: per-partition fill-transition summary ----
       // For entering fill e, the first rollover is the first j with
       // prefix(j) > cap − e; afterwards the trajectory is e-independent
@@ -335,7 +328,9 @@ object TrainingSet {
       }
       val bc = spark.sparkContext.broadcast(starts)
       // ---- pass 2: replay each partition from its entering state ----
-      val manifest = counts.mapPartitions { it =>
+      // same eager-cut requirement as packSequences: pass 2 must read the
+      // SAME partitioning pass 1 summarized
+      val manifest = Materialize.cut(counts.mapPartitions { it =>
         val (b0, f0) = bc.value(TaskContext.getPartitionId())
         var bin = b0
         var f = f0
@@ -346,12 +341,9 @@ object TrainingSet {
           f += n
           (id, n, bin, off)
         }
-      }.toDF(idCol, "n_tokens", "bin_id", "bin_offset")
-        // same eager-materialization requirement as packSequences: pass 2
-        // must read the SAME partitioning pass 1 summarized
-        .localCheckpoint(true)
+      }.toDF(idCol, "n_tokens", "bin_id", "bin_offset"), eager = true)
       (manifest, (curBin, fill))
-    } finally counts.unpersist(blocking = false): Unit
+    }
   }
 
   /**
@@ -535,17 +527,16 @@ object TrainingSet {
     import org.apache.spark.sql.expressions.Window
     val tg = broadcast(tgRaw)
     // level 1: bucket token sums on the bounded domain, prefix-summed.
-    // localCheckpoint: this (strata × 16^bucketChars)-row frame feeds TWO
-    // consumers (fullB, crossB) — without it each re-runs the corpus-wide
-    // bucket aggregate AND the caller's whole targets subtree (often a
+    // cut: this (strata × 16^bucketChars)-row frame feeds TWO consumers
+    // (fullB, crossB) — without it each re-runs the corpus-wide bucket
+    // aggregate AND the caller's whole targets subtree (often a
     // corpusReport, itself corpus-sized)
-    val buckets = base.groupBy(col(strataCol), col("bkt"))
+    val buckets = Materialize.cut(base.groupBy(col(strataCol), col("bkt"))
       .agg(sum("n_tokens").as("btok"))
       .withColumn("cum",
         sum("btok").over(Window.partitionBy(strataCol).orderBy("bkt")))
       .withColumn("cum_before", col("cum") - col("btok"))
-      .join(tg, strataCol)
-      .localCheckpoint()
+      .join(tg, strataCol), eager = true)
     // buckets fully inside the prefix vs the one crossing bucket per stratum
     val fullB = buckets.filter(col("cum") < col("target"))
       .select(col(strataCol), col("bkt"))
@@ -651,16 +642,15 @@ object TrainingSet {
     val tg = targets.select(
       col(strataCol), col("target_tokens").cast("long").as("target"))
     // O(strata) plan: per-stratum availability → full-epoch count +
-    // remainder. localCheckpoint: three consumers (the guard collect, the
-    // full-epoch explode, the remainder cut) each otherwise re-run the
-    // corpus-wide availability aggregate
-    val plan = base.groupBy(col(strataCol))
+    // remainder. Cut: three consumers (the guard collect, the full-epoch
+    // explode, the remainder cut) each otherwise re-run the corpus-wide
+    // availability aggregate
+    val plan = Materialize.cut(base.groupBy(col(strataCol))
       .agg(sum("n_tokens").as("avail"))
       .join(broadcast(tg), strataCol)
       .select(col(strataCol),
         expr("target div avail").as("full_epochs"),
-        pmod(col("target"), col("avail")).as("rem"))
-      .localCheckpoint()
+        pmod(col("target"), col("avail")).as("rem")), eager = true)
     val tooMany = plan.filter(col("full_epochs") > maxEpochs)
       .select(col(strataCol), col("full_epochs")).collect()
     require(tooMany.isEmpty,
@@ -820,8 +810,8 @@ object TrainingSet {
     // 5. balance the mix per stratum; the selection (≤ strata × quota rows)
     // is materialized because d5 feeds both the packer and the final join —
     // without it each consumer re-runs the bottom-k aggregate over d4
-    val selected = quotaSample(d4, quotaPerStratum, strataCol, idCol, textCol)
-      .localCheckpoint(true)
+    val selected = Materialize.cut(
+      quotaSample(d4, quotaPerStratum, strataCol, idCol, textCol), eager = true)
     val d5 = d4.join(selected.select(id), Seq(idCol), "left_semi")
     // 6. lay the survivors into context windows
     packSequences(d5, capTokens, idCol, textCol)
@@ -836,7 +826,7 @@ object TrainingSet {
     * without the checkpoint Catalyst re-derives the whole upstream lineage
     * per action: measured 10.8 s → 7.7 s at sf0.1. This is exactly the
     * stage boundary where a production pipeline writes the cleaned corpus
-    * to storage; on a real cluster swap localCheckpoint for reliable
+    * to storage; on a real cluster swap the cut for reliable
     * checkpoint / a parquet sink. d1 is NOT checkpointed: its lineage —
     * scan + hash-agg + semi-join — is cheaper to recompute than to
     * materialize.) */
@@ -864,8 +854,8 @@ object TrainingSet {
     val train = d3.join(benchmark.select(id), Seq(idCol), "left_anti")
     val contaminated = decontaminate(train, benchmark, n = decontaminateNgram,
       idCol = idCol, textCol = textCol)
-    train.join(contaminated.select(id), Seq(idCol), "left_anti")
-      .localCheckpoint(true)
+    Materialize.cut(
+      train.join(contaminated.select(id), Seq(idCol), "left_anti"), eager = true)
   }
 
   /**
@@ -930,18 +920,16 @@ object TrainingSet {
       decontaminateNgram, idCol, textCol)
     // 5. DSIR steering BEFORE any budget stage (a steering reject must not
     // consume a mixture slot — the crawl loop's placement contract)
-    val d5 = d4.join(
+    val d5 = Materialize.cut(d4.join(
       Corpus.dsirSelect(d4, dsirTarget, dsirRaw, seed = dsirSeed,
         pivotBits = dsirPivotBits, idCol = idCol, textCol = textCol)
         .filter(col("keep")).select(id),
-      Seq(idCol), "left_semi")
-      .localCheckpoint(true)
+      Seq(idCol), "left_semi"), eager = true)
     // 6. temperature mixture, hard-capped per stratum: filtering the
     // mixture's rk at the quota IS rk ≤ min(t_s, quota) — same md5 order
-    val selected = temperatureSample(d5, alphaQuarters, temperatureScale,
-      strataCol, idCol, textCol)
-      .filter(col("rk") <= quotaPerStratum.toLong)
-      .localCheckpoint(true)
+    val selected = Materialize.cut(temperatureSample(d5, alphaQuarters,
+      temperatureScale, strataCol, idCol, textCol)
+      .filter(col("rk") <= quotaPerStratum.toLong), eager = true)
     val d6 = d5.join(selected.select(id), Seq(idCol), "left_semi")
     // 7.+8. BPE-priced windows + the manifest join. `wholeDoc = true` swaps
     // the concat-and-chunk layout for the no-straddle fill-transition fold
@@ -1070,17 +1058,16 @@ object TrainingSet {
         // the bench measured exactly that: the LM-gated pipeline ran ~2×
         // the ungated one (6.6 s vs 3.7 s at sf0.1) when this frame
         // recomputed.
-        // r21 (VERDICT r20 next #5): EAGER localCheckpoint instead of the
-        // r9 scoped persist — same rows, same execution boundary (the
-        // chain ran exactly once either way), but the LINEAGE is CUT: a
+        // An EAGER cut instead of a share — same rows, same execution
+        // boundary (the chain runs exactly once either way), but the
+        // LINEAGE is CUT: a
         // persisted g kept the whole probe→cut→scrub chain below its
         // cache leaf TWICE in every downstream plan (the 9,122-line
         // pipeline_crawl_lm_gate physical plan), re-analyzed per action
         // and shipped inside every task binary (~2 MiB broadcasts,
         // deserialized by all 32 tasks of each of the gate's ~15 tiny
-        // stages). g is delta-sized, so the checkpoint is small; on a
-        // real cluster with executor loss, swap in reliable checkpoint.
-        val g = preGated.localCheckpoint(true)
+        // stages). g is delta-sized, so the cut is small.
+        val g = Materialize.cut(preGated, eager = true)
         g.join(
           Corpus.lmScoreModel(g, m, lmKeep._1, lmKeep._2, idCol, "clean_text")
             .filter(col("keep")).select(col(idCol)),

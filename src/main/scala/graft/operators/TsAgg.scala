@@ -469,7 +469,7 @@ object TsAgg {
     // k = m in the agg: keep the FULL sketch so the certificate can read
     // the (k+1)-th count; the per-bucket merge buffers carry m entries
     // across the exchange regardless, so this costs nothing new
-    val sk = Dedup.persistScoped(
+    val sk = Materialize.share(
       withBuckets(df, spec)
         .groupBy(grpKeys: _*)
         .agg(graft.functions.SpaceSaving.topKByWeight(m, m)(col(keyCol), w).as("tk")))

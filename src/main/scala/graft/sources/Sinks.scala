@@ -44,12 +44,6 @@ object Sinks {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_manifest")
   }
 
-  /** Plain single-directory parquet sink (small results / oracle dumps). */
-  def writeParquet(result: DataFrame, path: String, coalesceTo: Int = 0): Unit = {
-    val df = if (coalesceTo > 0) result.coalesce(coalesceTo) else result
-    df.write.mode("overwrite").parquet(path)
-  }
-
   /**
    * Durable streaming sink: append-mode parquet with an exactly-once
    * checkpoint — the continuous-ingest counterpart of

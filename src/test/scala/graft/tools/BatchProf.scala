@@ -52,17 +52,17 @@ object BatchProf {
       println("[probe] rows=" + graft.operators.Search
         .bm25TopKAllIndexed(ix, queries, k = 5).count())
     }
-    graft.operators.Dedup.clearCaches()
+    graft.operators.Materialize.clear()
     t("indexed door run 2") {
       println("[probe] rows=" + graft.operators.Search
         .bm25TopKAllIndexed(ix, queries, k = 5).count())
     }
-    graft.operators.Dedup.clearCaches()
+    graft.operators.Materialize.clear()
     t("scan door run 1") {
       println("[probe] rows=" + graft.operators.Search
         .bm25TopKAll(docs, queries, k = 5).count())
     }
-    graft.operators.Dedup.clearCaches()
+    graft.operators.Materialize.clear()
     t("scan door run 2") {
       println("[probe] rows=" + graft.operators.Search
         .bm25TopKAll(docs, queries, k = 5).count())

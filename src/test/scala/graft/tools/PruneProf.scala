@@ -38,7 +38,7 @@ object PruneProf {
       .select(col("doc_id"), col("token"), col("tf"), col("dl"))
     val dft = ix.df.get.filter(col("token").isin(terms: _*))
     // score FIRST, cache, shuffle per consumer (the operator's shape)
-    val scoredCached = graft.operators.Dedup.persistScoped(matched0
+    val scoredCached = graft.operators.Materialize.share(matched0
       .join(broadcast(dft), Seq("token"))
       .crossJoin(broadcast(ix.stats))
       .withColumn("idf_d",
@@ -99,7 +99,7 @@ object PruneProf {
       println("[probe] rows=" + graft.operators.Search
         .bm25TopKAllIndexed(ix, queries, k = k).count())
     }
-    graft.operators.Dedup.clearCaches()
+    graft.operators.Materialize.clear()
     t("full indexed door (warm)") {
       println("[probe] rows=" + graft.operators.Search
         .bm25TopKAllIndexed(ix, queries, k = k).count())
