@@ -133,6 +133,9 @@ object TsAgg {
       .withColumn("bucket_start", bucketStartExpr(ts, spec.mode.t0Ms, spec.intervalMs))
   }
 
+  /** The (series, bucket) grouping keys, which are also the output order. */
+  private def keys(spec: TsAggSpec): Seq[Column] = (spec.seriesCols :+ "bucket_start").map(col)
+
   /**
    * Generic entry: apply any aggregate expressions per (series, bucket).
    * This is the engine's UDAF extension surface (reference `Aggregator`
@@ -140,35 +143,43 @@ object TsAgg {
    * Catalyst aggregate Columns, so plug-in aggregations stay codegen'd instead
    * of reflectively instantiated.
    */
-  def aggregate(df: DataFrame, spec: TsAggSpec, aggExprs: Seq[Column]): DataFrame = {
-    val keys = (spec.seriesCols :+ "bucket_start").map(col)
-    withBuckets(df, spec)
-      .groupBy(keys: _*)
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      .orderBy(keys: _*) // sorted output, ref ConcurrentSkipListMap (O1)
-  }
+  def aggregate(df: DataFrame, spec: TsAggSpec, aggExprs: Seq[Column]): DataFrame =
+    bucketed(df, spec, aggExprs).orderBy(keys(spec): _*) // sorted output, ref ConcurrentSkipListMap (O1)
+
+  /**
+   * [[aggregate]] without its global sort: filter → bucket → groupBy/agg,
+   * one scan and one shuffle. For callers that order the buckets themselves
+   * (the client's `SortedMap`, a bucket-ordered window), where the sort
+   * would only add a range-partition sampling job and a second shuffle.
+   */
+  private[operators] def bucketed(df: DataFrame, spec: TsAggSpec, aggExprs: Seq[Column]): DataFrame =
+    withBuckets(df, spec).groupBy(keys(spec): _*).agg(aggExprs.head, aggExprs.tail: _*)
 
   private def v(spec: TsAggSpec): Column = col(spec.valueCol)
 
+  // the five reference aggregates, each defined once: the sorted DataFrames
+  // below, the summary and TsAggClient's maps all read these columns
+  private[operators] def maxValue(spec: TsAggSpec): Column = functions.max(v(spec)).as("max_value")
+  private[operators] def minValue(spec: TsAggSpec): Column = functions.min(v(spec)).as("min_value")
+  private[operators] def sumValue(spec: TsAggSpec): Column = functions.sum(v(spec)).as("sum_value")
+  private[operators] def countValue: Column = functions.count(lit(1)).as("count_value")
+  private[operators] def avgValue(spec: TsAggSpec): Column = functions.avg(v(spec)).as("avg_value")
+
   /** Per-bucket MAX (A1+M1). Null values never win: Spark `max` skips nulls, matching `Max.java:33`. */
-  def max(df: DataFrame, spec: TsAggSpec): DataFrame =
-    aggregate(df, spec, Seq(functions.max(v(spec)).as("max_value")))
+  def max(df: DataFrame, spec: TsAggSpec): DataFrame = aggregate(df, spec, Seq(maxValue(spec)))
 
   /** Per-bucket MIN (A2+M2). */
-  def min(df: DataFrame, spec: TsAggSpec): DataFrame =
-    aggregate(df, spec, Seq(functions.min(v(spec)).as("min_value")))
+  def min(df: DataFrame, spec: TsAggSpec): DataFrame = aggregate(df, spec, Seq(minValue(spec)))
 
   /** Per-bucket SUM (A3+M3). Nulls skipped (`Sum.java:35`); empty buckets absent, not 0. */
-  def sum(df: DataFrame, spec: TsAggSpec): DataFrame =
-    aggregate(df, spec, Seq(functions.sum(v(spec)).as("sum_value")))
+  def sum(df: DataFrame, spec: TsAggSpec): DataFrame = aggregate(df, spec, Seq(sumValue(spec)))
 
   /**
    * Per-bucket COUNT of cells (A4): the reference counts every in-range cell,
    * null value or not (`Count.java:29-33` never decodes the value), and counts
    * samples, not rows (SURVEY §2.3 #5) — hence `count(*)`, not `count(value)`.
    */
-  def count(df: DataFrame, spec: TsAggSpec): DataFrame =
-    aggregate(df, spec, Seq(functions.count(lit(1)).as("count_value")))
+  def count(df: DataFrame, spec: TsAggSpec): DataFrame = aggregate(df, spec, Seq(countValue))
 
   /**
    * Per-bucket AVG (A5+M4+M5): always Double, computed as global sum / global
@@ -176,8 +187,7 @@ object TsAgg {
    * (`TimeseriesAggregationClient.java:428-434,547-557`). Spark's `avg` keeps
    * exactly the reference's (sum, count) partial pair.
    */
-  def avg(df: DataFrame, spec: TsAggSpec): DataFrame =
-    aggregate(df, spec, Seq(functions.avg(v(spec)).as("avg_value")))
+  def avg(df: DataFrame, spec: TsAggSpec): DataFrame = aggregate(df, spec, Seq(avgValue(spec)))
 
   /**
    * Per-bucket weighted average — README's planned-but-unimplemented operator
@@ -574,25 +584,24 @@ object TsAgg {
    * when series keys are present.
    */
   def diff(df: DataFrame, spec: TsAggSpec): DataFrame = {
-    val summed = aggregate(df, spec, Seq(functions.sum(v(spec)).as("sum_value")))
+    val summed = bucketed(df, spec, Seq(sumValue(spec)))
     // With no series columns the lag window is necessarily a single ordered
     // partition — bounded because its input is post-aggregate (one row per
     // bucket, O((t1-t0)/interval), not O(cells)). A multi-year 1-second-
     // interval spec is the only way to make this large; such specs should
     // carry series columns (each series windows independently) or chunk the
     // range. The row count makes the bound visible at plan time.
-    val w =
-      if (spec.seriesCols.isEmpty) Window.orderBy(col("bucket_start"))
-      else Window.partitionBy(spec.seriesCols.map(col): _*).orderBy(col("bucket_start"))
     summed
-      .withColumn("diff_value", col("sum_value") - lag(col("sum_value"), 1).over(w))
-      .orderBy((spec.seriesCols :+ "bucket_start").map(col): _*)
+      .withColumn("diff_value", col("sum_value") - lag(col("sum_value"), 1).over(seriesWindow(spec)))
+      .orderBy(keys(spec): _*)
   }
 
   /** The series-aware ordered window shared by the bucket-series operators
     * (diff/movingAvg/fillGaps): partitioned per series when series columns are
     * present, one ordered partition otherwise — bounded in both cases because
-    * the input is post-aggregate (O(buckets), never O(cells); see [[diff]]). */
+    * the input is post-aggregate (O(buckets), never O(cells); see [[diff]]).
+    * That input is the unsorted [[bucketed]] frame: the window orders its own
+    * partitions and each operator's final `orderBy` orders the output. */
   private def seriesWindow(spec: TsAggSpec) =
     if (spec.seriesCols.isEmpty) Window.orderBy(col("bucket_start"))
     else Window.partitionBy(spec.seriesCols.map(col): _*).orderBy(col("bucket_start"))
@@ -611,14 +620,14 @@ object TsAgg {
    */
   def movingAvg(df: DataFrame, spec: TsAggSpec, nBuckets: Int): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val summed = aggregate(df, spec, Seq(functions.sum(v(spec)).as("sum_value")))
+    val summed = bucketed(df, spec, Seq(sumValue(spec)))
     val w = seriesWindow(spec).rangeBetween(-(nBuckets - 1) * spec.intervalMs, 0)
     summed
       .withColumn(
         "mavg_value",
         functions.sum(col("sum_value")).over(w).cast("double") /
           functions.count(lit(1)).over(w))
-      .orderBy((spec.seriesCols :+ "bucket_start").map(col): _*)
+      .orderBy(keys(spec): _*)
   }
 
   /**
@@ -641,7 +650,7 @@ object TsAgg {
   def ewmaTrailing(df: DataFrame, spec: TsAggSpec, wBuckets: Int): DataFrame = {
     require(wBuckets >= 1 && wBuckets <= 32,
       s"wBuckets must be in [1, 32] (weights are exact 2^j longs), got $wBuckets")
-    val summed = aggregate(df, spec, Seq(functions.sum(v(spec)).as("sum_value")))
+    val summed = bucketed(df, spec, Seq(sumValue(spec)))
     val w = seriesWindow(spec).rangeBetween(-(wBuckets - 1) * spec.intervalMs, 0)
     val dec = (c: Column) => c.cast("decimal(38,0)")
     // 2^(w−1−lag) via the catalyst ShiftLeft (the two-Column form the DSL
@@ -665,7 +674,7 @@ object TsAgg {
             (acc: Column, p: Column) => acc + weight(p))
             .cast("double"))
       .drop("parts")
-      .orderBy((spec.seriesCols :+ "bucket_start").map(col): _*)
+      .orderBy(keys(spec): _*)
   }
 
   /**
@@ -686,7 +695,7 @@ object TsAgg {
    */
   def anomalies(df: DataFrame, spec: TsAggSpec, thresholdSigma: Int = 3): DataFrame = {
     require(thresholdSigma >= 1, s"thresholdSigma must be >= 1, got $thresholdSigma")
-    val summed = aggregate(df, spec, Seq(functions.sum(v(spec)).as("sum_value")))
+    val summed = bucketed(df, spec, Seq(sumValue(spec)))
     val dec = col("sum_value").cast("decimal(38,0)")
     val statAggs = Seq(
       functions.count(lit(1)).cast("decimal(38,0)").as("n_b"),
@@ -706,7 +715,7 @@ object TsAgg {
         col("n_b") >= 2 &&
           dev * dev * (col("n_b") - 1) > t2 * col("n_b") * (col("n_b") * col("s2") - col("s1") * col("s1")))
       .select((spec.seriesCols :+ "bucket_start" :+ "sum_value" :+ "is_anomaly").map(col): _*)
-      .orderBy((spec.seriesCols :+ "bucket_start").map(col): _*)
+      .orderBy(keys(spec): _*)
   }
 
   /**
@@ -734,7 +743,7 @@ object TsAgg {
    */
   def fillGaps(df: DataFrame, spec: TsAggSpec, how: String = "prev"): DataFrame = {
     require(Set("null", "prev", "linear")(how), s"how must be null|prev|linear, got '$how'")
-    val summed = aggregate(df, spec, Seq(functions.sum(v(spec)).as("sum_value")))
+    val summed = bucketed(df, spec, Seq(sumValue(spec)))
     val iv = spec.intervalMs
     val nBuckets = (spec.scanEndMs - spec.mode.t0Ms + iv - 1) / iv
     val spine0 = summed.sparkSession
@@ -783,20 +792,10 @@ object TsAgg {
    * when series columns are present.
    */
   def cumulative(df: DataFrame, spec: TsAggSpec): DataFrame = {
-    val summed = aggregate(df, spec, Seq(functions.sum(v(spec)).as("sum_value")))
+    val summed = bucketed(df, spec, Seq(sumValue(spec)))
     val w = seriesWindow(spec).rowsBetween(Window.unboundedPreceding, 0)
     summed
       .withColumn("cum_value", functions.sum(col("sum_value")).over(w))
-      .orderBy((spec.seriesCols :+ "bucket_start").map(col): _*)
-  }
-
-  /**
-   * Collect a single-series result to the reference's client return shape,
-   * `SortedMap[bucketStartMillis, value]` (`TimeseriesAggregationClient.java:129-131`).
-   * API-edge only — never used inside a plan.
-   */
-  def toSortedMap[V](result: DataFrame): scala.collection.SortedMap[Long, V] = {
-    val rows = result.collect()
-    scala.collection.immutable.TreeMap.from(rows.map(r => r.getLong(0) -> r.get(1).asInstanceOf[V]))
+      .orderBy(keys(spec): _*)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import scala.collection.SortedMap
@@ -12,7 +12,9 @@ import scala.collection.SortedMap
  * count RPC): each method runs the distributed aggregation and collects the
  * result to the reference's return shape, a sorted `Map[bucketStartMillis →
  * value]` (`ConcurrentSkipListMap`, :129-131). Collect happens only at this
- * API edge — the heavy lifting stays in the cluster plan.
+ * API edge — the heavy lifting stays in the cluster plan. A map read is one
+ * scan, one shuffle and two jobs: the plan skips [[TsAgg.aggregate]]'s global
+ * sort, because the `SortedMap` orders the buckets on the driver.
  *
  * A user of the reference can switch: `client.max(table, ci, scan)` becomes
  * `TsAggClient.max(df, spec)` where the decoded value column replaces the
@@ -69,32 +71,26 @@ object TsAggClient {
     val (cells, s) = prepare(df, scan, spec); avg(cells, s)
   }
 
-  def max(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] = {
-    requireSingleSeries(spec); collectLong(TsAgg.max(df, spec))
-  }
+  def max(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] =
+    collectLong(df, spec, TsAgg.maxValue(spec))
 
-  def min(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] = {
-    requireSingleSeries(spec); collectLong(TsAgg.min(df, spec))
-  }
+  def min(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] =
+    collectLong(df, spec, TsAgg.minValue(spec))
 
-  def sum(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] = {
-    requireSingleSeries(spec); collectLong(TsAgg.sum(df, spec))
-  }
+  def sum(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] =
+    collectLong(df, spec, TsAgg.sumValue(spec))
 
   /** Exposed as a first-class query — the reference declares the RPC but ships
     * no client method (SURVEY §2.1 "API surface asymmetry"). */
-  def count(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] = {
-    requireSingleSeries(spec); collectLong(TsAgg.count(df, spec))
-  }
+  def count(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Long] =
+    collectLong(df, spec, TsAgg.countValue)
 
   /** Always Double, global-sum/global-count (SURVEY §2.3 #6).
     * All-null buckets are omitted, consistent with the integral collectors. */
-  def avg(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Double] = {
-    requireSingleSeries(spec)
-    SortedMap.from(TsAgg.avg(df, spec).collect().flatMap { r =>
+  def avg(df: DataFrame, spec: TsAggSpec): SortedMap[Long, Double] =
+    SortedMap.from(collectBuckets(df, spec, TsAgg.avgValue(spec)).flatMap { r =>
       if (r.isNullAt(1)) None else Some(r.getLong(0) -> r.getDouble(1))
     })
-  }
 
   /** The map-returning client surface mirrors the reference: one series per
     * scan. Series-grouped specs return (series, bucket, value) rows — use the
@@ -109,20 +105,25 @@ object TsAggClient {
    * All five aggregates in ONE scan + one shuffle — the capability the
    * reference fundamentally lacks (one RPC per aggregate = 5 scans for a
    * 5-metric dashboard; `README.md:5` celebrates 1 scan per *single* metric).
+   * That is the aggregation; the returned DataFrame is sorted by bucket like
+   * every `TsAgg.*` frame, which adds the sort's range exchange.
    */
   def summary(df: DataFrame, spec: TsAggSpec): DataFrame =
-    TsAgg.aggregate(df, spec, Seq(
-      functions.max(col(spec.valueCol)).as("max_value"),
-      functions.min(col(spec.valueCol)).as("min_value"),
-      functions.sum(col(spec.valueCol)).as("sum_value"),
-      functions.count(lit(1)).as("count_value"),
-      functions.avg(col(spec.valueCol)).as("avg_value")))
+    TsAgg.aggregate(df, spec, Seq(TsAgg.maxValue(spec), TsAgg.minValue(spec),
+      TsAgg.sumValue(spec), TsAgg.countValue, TsAgg.avgValue(spec)))
+
+  /** One scan + one shuffle, collected: the unsorted (bucket, value) rows.
+    * No global sort runs — the `SortedMap` the callers build orders them. */
+  private def collectBuckets(df: DataFrame, spec: TsAggSpec, agg: Column): Array[Row] = {
+    requireSingleSeries(spec)
+    TsAgg.bucketed(df, spec, Seq(agg)).collect()
+  }
 
   /** All-null buckets (aggregate value null) are OMITTED from the map — the
     * reference never emits a bucket without a defined value (SURVEY §2.3 #4/#7),
     * and mapping null to 0 would fabricate a sum of zero. */
-  private def collectLong(result: DataFrame): SortedMap[Long, Long] =
-    SortedMap.from(result.collect().flatMap { r =>
+  private def collectLong(df: DataFrame, spec: TsAggSpec, agg: Column): SortedMap[Long, Long] =
+    SortedMap.from(collectBuckets(df, spec, agg).flatMap { r =>
       r.get(1) match {
         case l: java.lang.Long => Some(r.getLong(0) -> l.longValue())
         case i: java.lang.Integer => Some(r.getLong(0) -> i.longValue())

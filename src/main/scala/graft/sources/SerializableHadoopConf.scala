@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 
 /** Java-serializable Hadoop `Configuration` carrier (Configuration itself
   * is `Writable`, not `Serializable`) — how the V2 cell source ships the
@@ -9,7 +11,10 @@ import org.apache.hadoop.conf.Configuration
   * opened `java.io.FileInputStream`s, so the one persisted tier a cluster
   * actually scans was local-FS-only). Executors cannot rebuild this from
   * a SparkSession — `getActiveSession` is driver/thread-local there — so
-  * the planning-time conf travels with the task. */
+  * the planning-time conf is broadcast once per scan or write
+  * ([[SerializableHadoopConf.broadcast]]), the way Spark's own file sources
+  * ship theirs: tasks carry only the broadcast handle, and each executor
+  * rebuilds the conf once instead of once per task. */
 class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
 
@@ -29,4 +34,9 @@ object SerializableHadoopConf {
   /** The active session's Hadoop conf, wrapped — call on the driver. */
   def fromSession(): SerializableHadoopConf =
     new SerializableHadoopConf(StoreIO.hadoopConf())
+
+  /** The active session's Hadoop conf, broadcast — call on the driver, once
+    * per scan or write. */
+  def broadcast(): Broadcast[SerializableHadoopConf] =
+    SparkSession.active.sparkContext.broadcast(fromSession())
 }

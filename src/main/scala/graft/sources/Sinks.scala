@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /**
  * Result sinks (SURVEY §2.1 S2). The reference's only sink is the protobuf RPC
- * response; ours are (a) the API-edge `TsAgg.toSortedMap` collect for the
- * client-map shape and (b) durable columnar output below.
+ * response; ours are (a) the API-edge collect of [[graft.operators.TsAggClient]]
+ * for the client-map shape and (b) durable columnar output below.
  */
 object Sinks {
 

@@ -67,9 +67,9 @@ object CellRegions {
    */
   def writeRegionDir(cells: DataFrame, out: String, numRegions: Int = NumRegions): Unit = {
     graft.sources.StoreIO.mkdirs(out)
-    // the DRIVER session's Hadoop conf travels with the tasks (r17 FS
-    // port): executor-side getActiveSession is thread-local and absent
-    val conf = graft.sources.SerializableHadoopConf.fromSession()
+    // the DRIVER session's Hadoop conf reaches the tasks by broadcast (r17
+    // FS port): executor-side getActiveSession is thread-local and absent
+    val conf = graft.sources.SerializableHadoopConf.broadcast()
     val sorted = cells
       .repartitionByRange(numRegions, col("key"))
       .sortWithinPartitions("key", "qual")
@@ -85,7 +85,7 @@ object CellRegions {
         val pid = tc.partitionId()
         val outP = new org.apache.hadoop.fs.Path(out)
         // raw (non-CRC) stream on local paths — see CellRegionFormat.rawFs
-        val fs = CellRegionFormat.rawFs(outP, conf.value)
+        val fs = CellRegionFormat.rawFs(outP, conf.value.value)
         // the tmp name carries the task ATTEMPT id: with a deterministic name
         // a speculative/retried attempt could interleave writes with a still-
         // running zombie of the same partition before the rename publishes

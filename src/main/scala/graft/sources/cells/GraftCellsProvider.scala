@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, NamedReference, Transform}
@@ -231,8 +232,7 @@ class GraftCellsScan(
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftCellsReaderFactory(required, pushedAgg,
-      graft.sources.SerializableHadoopConf.fromSession())
+    new GraftCellsReaderFactory(required, pushedAgg, graft.sources.SerializableHadoopConf.broadcast())
 
   /** Streaming entry: tail the region directory as new region files land —
     * the Spark-native analogue of consuming HBase's WAL/replication feed
@@ -250,14 +250,15 @@ case class CellRegionPartition(
 
 class GraftCellsReaderFactory(
     required: StructType, pushedAgg: Option[PushedAggregation],
-    conf: graft.sources.SerializableHadoopConf) extends PartitionReaderFactory {
-  // the factory is what Spark serializes per task, so it carries the
-  // driver session's Hadoop conf to the executor-side cursors (r17 FS port)
+    conf: Broadcast[graft.sources.SerializableHadoopConf]) extends PartitionReaderFactory {
+  // the factory is what Spark serializes per task; it carries only the
+  // broadcast handle of the driver session's Hadoop conf (r17 FS port), so
+  // each executor deserializes the conf once, not once per task
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CellRegionPartition]
     pushedAgg match {
-      case Some(agg) => new GraftCellsAggPartitionReader(p, agg, conf)
-      case None => new GraftCellsPartitionReader(p, required, conf)
+      case Some(agg) => new GraftCellsAggPartitionReader(p, agg, conf.value)
+      case None => new GraftCellsPartitionReader(p, required, conf.value)
     }
   }
 }
@@ -618,7 +619,7 @@ class GraftCellsMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftCellsReaderFactory(required, pushedAgg = None,
-      graft.sources.SerializableHadoopConf.fromSession())
+      graft.sources.SerializableHadoopConf.broadcast())
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -98,6 +98,30 @@ class PlanContractSpec extends AnyFunSuite {
     assert(p.contains("LessThan(key"), s"key range stop not pushed:\n$p")
   }
 
+  test("bucket-series ops window the unsorted buckets: no range exchange beneath a window or join") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object H extends AdaptiveSparkPlanHelper
+    def rangeExchanges(p: org.apache.spark.sql.execution.SparkPlan) = H.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    Seq("ts_diff_daily", "ts_diff_daily_by_type", "ts_ewma_900", "ts_anomaly_900",
+      "ts_fill_prev_900", "ts_fill_linear_900", "ts_cumsum_900", "ts_moving_avg_900").foreach { q =>
+      val p = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+      // the window and the final orderBy order the buckets; a sort of the
+      // aggregate beneath them is a sampling job and a shuffle paid for nothing
+      val hosts = H.collect(p) { case w: WindowExec => w; case j: BaseJoinExec => j }
+      assert(hosts.nonEmpty, s"$q: expected a window or join:\n$p")
+      hosts.foreach { h =>
+        assert(rangeExchanges(h).isEmpty, s"$q: range exchange beneath ${h.nodeName}:\n$p")
+      }
+      assert(rangeExchanges(p).size <= 1, s"$q: only the final orderBy may range-partition:\n$p")
+    }
+  }
+
   test("series-grouped diff windows per series, not one global partition") {
     val p = plan("ts_diff_daily_by_type")
     assert(p.contains("windowspecdefinition(event_type"),

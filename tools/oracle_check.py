@@ -6,7 +6,10 @@ Usage: python3 tools/oracle_check.py <verify_out_dir> <sf_dir>
 For each <name>/ parquet dir in verify_out_dir, runs oracle_sql.json[name]
 in DuckDB with each sf table registered as a view, sorts columns by name and
 rows by value, and compares cell-by-cell (exact; floats must match to 1e-12
-relative — the queries are designed for bit-exact parity).
+relative — the queries are designed for bit-exact parity). A query whose
+oracle SQL raises a DuckDB error (say, out of memory) is reported as
+[ERROR] and the rest are still checked; the exit status is non-zero when any
+query failed or errored.
 """
 import json, struct, sys, glob, os
 import duckdb
@@ -36,7 +39,7 @@ def main(outdir, sfdir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_error = 0
     for name in sorted(os.listdir(outdir)):
         d = os.path.join(outdir, name)
         if not os.path.isdir(d):
@@ -49,10 +52,17 @@ def main(outdir, sfdir):
         if name not in oracle:
             print(f"  [rows-only] {name}: {len(got)} rows")
             continue
-        exp_rel = con.sql(oracle[name])
-        exp_cols = list(exp_rel.columns)
-        exp_types = [str(t) for t in exp_rel.types]
-        exp = exp_rel.fetchall()
+        try:
+            exp_rel = con.sql(oracle[name])
+            exp_cols = list(exp_rel.columns)
+            exp_types = [str(t) for t in exp_rel.types]
+            exp = exp_rel.fetchall()
+        except duckdb.Error as e:
+            # e.g. an oracle that exhausts DuckDB's memory: the query counts
+            # as failed, and the remaining queries still get checked
+            n_error += 1
+            print(f"  [ERROR] {name}: {e}")
+            continue
         # TYPE-STRICT: the driver hashes typed values, so DuckDB HUGEINT
         # (uncast sum()/list_sum()) vs Spark BIGINT fails there even when
         # the numbers are equal — compare declared types, not str() renderings.
@@ -75,8 +85,8 @@ def main(outdir, sfdir):
                 if not all(cmp_cell(a, b) for a, b in zip(r1, r2)):
                     print(f"     got {r1}\n     exp {r2}")
                     break
-    print(f"== {n_pass} pass, {n_fail} fail")
-    return 1 if n_fail else 0
+    print(f"== {n_pass} pass, {n_fail} fail, {n_error} error")
+    return 1 if n_fail or n_error else 0
 
 if __name__ == "__main__":
     sys.exit(main(sys.argv[1], sys.argv[2]))
