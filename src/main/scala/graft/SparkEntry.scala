@@ -392,7 +392,7 @@ object SparkEntry {
     // so accumulation order cannot perturb a bit — the one circumstance where
     // a double-buffer UDAF is hash-stable across partitionings
     "ts_wavg_udaf_daily" -> { (s, d) =>
-      graft.functions.AggConf.ensureHashAggHeadroom() // direct udaf() site
+      graft.functions.AggConf.ensureHashAggHeadroom(s) // direct udaf() site
       TsAgg.aggregate(
         lineitemCents(s, d),
         specLineDaily,
@@ -744,7 +744,8 @@ object SparkEntry {
 
     // ---- scale ops: corpus curation -----------------------------------------
     // Gopher-style repetition signals as exact integers (zero-shuffle
-    // projection; nested-lambda top counts — see Corpus.repetitionMetrics)
+    // projection; compiled bigram and top-count kernels — see
+    // Corpus.repetitionMetrics)
     "text_repetition" -> ((s, d) =>
       Corpus.repetitionMetrics(documents(s, d)).orderBy("doc_id")),
     // the metrics USED as a gate: duplicate-token ≤ 1/2 and top-token ≤ 1/10

@@ -26,8 +26,14 @@ import org.apache.spark.sql.SparkSession
  *
  * SET-IF-UNSET: an explicit session value — builder `.config(...)`,
  * `--conf`, or a runtime `spark.conf.set` — always wins; the ensure only
- * fills the registered default in. Called from the UDAF Column factories
- * themselves, so every door inherits it with no per-main re-declaration.
+ * fills the registered default in.
+ *
+ * WHICH SESSION: the one that executes the aggregate. Every door that
+ * holds its input frame calls `ensureHashAggHeadroom(df.sparkSession)`, so
+ * a frame of one session built while another is thread-active still gets
+ * its headroom. The UDAF Column factories themselves hold no frame; for a
+ * caller using them directly they fall back to the active (else default)
+ * session.
  */
 object AggConf {
   val FallbackThresholdKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
@@ -36,18 +42,19 @@ object AggConf {
     * bounded ≤ ~300 MB of aggregation state per task. */
   val FallbackThreshold: Int = 1 << 20
 
-  /** Raise the ObjectHashAggregate fallback threshold on the active (else
-    * default) session unless the caller set one explicitly. Runs at UDAF
-    * Column construction — a driver-side conf write, no jobs; the conf is
-    * session-dynamic, so plans built earlier in the session also execute
+  /** Raise the ObjectHashAggregate fallback threshold on `spark` unless the
+    * caller set one explicitly. A driver-side conf write, no jobs; the conf
+    * is session-dynamic, so plans built earlier in the session also execute
     * under it. */
+  def ensureHashAggHeadroom(spark: SparkSession): Unit =
+    // sessionState.conf.contains sees only EXPLICITLY-set entries
+    // (builder/--conf/runtime set) — the registered default reads as
+    // absent, which is exactly the set-if-unset contract
+    if (!spark.sessionState.conf.contains(FallbackThresholdKey))
+      spark.conf.set(FallbackThresholdKey, FallbackThreshold.toString)
+
+  /** The Column factories' form: the active (else default) session. */
   def ensureHashAggHeadroom(): Unit =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach { spark =>
-        // sessionState.conf.contains sees only EXPLICITLY-set entries
-        // (builder/--conf/runtime set) — the registered default reads as
-        // absent, which is exactly the set-if-unset contract
-        if (!spark.sessionState.conf.contains(FallbackThresholdKey))
-          spark.conf.set(FallbackThresholdKey, FallbackThreshold.toString)
-      }
+      .foreach(ensureHashAggHeadroom)
 }

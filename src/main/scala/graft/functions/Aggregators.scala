@@ -50,7 +50,7 @@ object Aggregators {
 
   /** Register the plug-in aggregates for SQL (`SELECT wavg(v, w) ...`). */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    AggConf.ensureHashAggHeadroom() // fixed-size buffers — same bound as TopK
+    AggConf.ensureHashAggHeadroom(spark) // fixed-size buffers — same bound as TopK
     spark.udf.register("graft_avg", udaf(AvgAggregator))
     spark.udf.register("graft_wavg", udaf(WeightedAvgAggregator))
   }

@@ -1,14 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+
+import graft.functions.expressions.{CountIn, MinNgramHash, Ngrams, TopCount}
 
 /**
  * Text-analysis building blocks for large-scale corpus processing (the
  * training-data-pipeline surface layered on top of the reference's engine —
  * BASELINE.json north star). Everything is built from codegen-able built-ins
- * and Catalyst higher-order functions: no Scala UDFs, so the plan stays
- * serializable, null-safe, and executor-local at any scale.
+ * and the compiled token-array kernels in [[graft.functions.expressions]]
+ * (top counts, n-grams, min n-gram hashes, word-set counts): no Scala UDFs,
+ * so the plan stays serializable, null-safe and executor-local at any
+ * scale. The per-row paths avoid Catalyst higher-order functions, whose
+ * lambdas run interpreted for every element.
  *
  * Conventions shared with the DuckDB oracle (tools/oracle_check.py):
  * tokens = `split(lower(trim(text)), "\s+")`; shingles are distinct
@@ -24,11 +30,26 @@ object TextFunctions {
   def bpeTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit(BpePattern), lit(0)))
 
-  /** Distinct word n-gram shingles; caller must filter size(tokens) >= n. */
-  def shingles(toks: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(0), size(toks) - n),
-      i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
+  private def kernel(e: Expression): Column = GraftBridge.toColumn(e)
+  private def expr(c: Column): Expression = GraftBridge.toExpression(c)
+
+  /** Space-joined word n-grams in document order, duplicates kept; `[]`
+    * for fewer than n tokens, null for a null array. */
+  def ngrams(toks: Column, n: Int): Column = kernel(Ngrams(expr(toks), n))
+
+  /** Distinct word n-gram shingles, first occurrence first. */
+  def shingles(toks: Column, n: Int): Column = array_distinct(ngrams(toks, n))
+
+  /** Multiplicity of the most frequent element (nulls count 0); null for
+    * an empty or null array. */
+  def topCount(arr: Column): Column = kernel(TopCount(expr(arr)))
+
+  /** Minimum `xxhash64` of the space-joined n-grams, computed without
+    * building them; null when there are fewer than n tokens. */
+  def minNgramHash(toks: Column, n: Int): Column = kernel(MinNgramHash(expr(toks), n))
+
+  /** Number of tokens in the constant word list. */
+  def countIn(toks: Column, words: Seq[String]): Column = kernel(CountIn(expr(toks), words))
 
   /** Full-width per-token hashes; materialize as a column before fanning out. */
   def tokenHashes(toks: Column): Column = transform(toks, t => xxhash64(t))
@@ -84,9 +105,10 @@ object TextFunctions {
    * 3-gram shingle hash (winnowing-style witness — stable under reordering of
    * surrounding content, unlike the whole-document hash).
    */
-  def docFingerprint(text: Column): Column = xxhash64(concat_ws(" ", tokens(text)))
-  def minShingleFingerprint(toks: Column): Column =
-    array_min(transform(shingles(toks, 3), s => xxhash64(s)))
+  def docFingerprint(text: Column): Column = docHash(tokens(text))
+  /** [[docFingerprint]] of an already-tokenized document. */
+  def docHash(toks: Column): Column = xxhash64(concat_ws(" ", toks))
+  def minShingleFingerprint(toks: Column): Column = minNgramHash(toks, 3)
 
   // ---- language-ID heuristic --------------------------------------------------
   // Stopword vote + CJK-codepoint presence. Tiny fixed lists so the identical
@@ -96,17 +118,14 @@ object TextFunctions {
   val StopEs = Seq("el", "los", "las", "de", "y", "que", "en", "un", "una", "por")
   val StopDe = Seq("der", "die", "das", "und", "von", "zu", "ein", "eine", "ist", "mit")
 
-  def stopwordCount(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isInCollection(words)))
-
   val CjkPattern = "[\\x{4e00}-\\x{9fff}]"
 
-  /** Deterministic precedence on ties: zh (charset) > en > fr > es > de. */
-  def langIdExpr(text: Column): Column = {
-    val toks = tokens(text)
+  /** Deterministic precedence on ties: zh (charset) > en > fr > es > de.
+    * `toks` is `tokens(text)`, projected once by the caller. */
+  def langIdExpr(text: Column, toks: Column): Column = {
     val (en, fr, es, de) = (
-      stopwordCount(toks, StopEn), stopwordCount(toks, StopFr),
-      stopwordCount(toks, StopEs), stopwordCount(toks, StopDe))
+      countIn(toks, StopEn), countIn(toks, StopFr),
+      countIn(toks, StopEs), countIn(toks, StopDe))
     when(length(regexp_replace(text, CjkPattern, "")) < length(text), "zh")
       .when(en >= fr && en >= es && en >= de, "en")
       .when(fr >= es && fr >= de, "fr")

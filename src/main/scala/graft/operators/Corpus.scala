@@ -38,11 +38,11 @@ object Corpus {
    *     over consecutive word pairs, the smallest n-gram Gopher thresholds.
    *
    * Scale shape: a pure projection — zero shuffles, column pruning reaches
-   * the scan (plan-asserted in CorpusSpec). The top-count terms are
-   * O(n_tokens × n_distinct) per document via nested higher-order functions;
-   * bounded and cache-local for web documents (≤ a few thousand tokens). For
-   * a corpus of book-length texts, explode to (doc, token) and aggregate
-   * instead — that variant shuffles, so it is not the default.
+   * the scan (plan-asserted in CorpusSpec). Bigrams and top counts are
+   * compiled kernels ([[graft.functions.TextFunctions.ngrams]],
+   * [[graft.functions.TextFunctions.topCount]]): one pass over the tokens
+   * each, one hash-map pass per top count, so the per-document cost is
+   * linear in its length.
    *
    * `passthrough` columns ride along unchanged — composing pipelines
    * ([[graft.operators.TrainingSet.crawlIncrement]]) stay a single
@@ -52,17 +52,13 @@ object Corpus {
    */
   def repetitionMetrics(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", passthrough: Seq[String] = Nil): DataFrame = {
-    def topCount(arr: Column): Column =
-      array_max(transform(array_distinct(arr), t => size(filter(arr, x => x === t))))
     val extra = passthrough.map(col)
     df.select(col(idCol) +: tokens(col(textCol)).as("__toks") +: extra: _*)
       .select(col(idCol) +: col("__toks") +:
-        // consecutive pairs (NOT distinct — multiplicity is the signal);
-        // guard: sequence(0, -1) would count DOWN, so short docs get []
-        when(size(col("__toks")) >= 2,
-          transform(sequence(lit(0), size(col("__toks")) - 2),
-            i => concat_ws(" ", slice(col("__toks"), i + 1, lit(2)))))
-          .otherwise(array().cast("array<string>")).as("__bg") +: extra: _*)
+        // consecutive pairs (NOT distinct — multiplicity is the signal); a
+        // null text has no pairs, not a null list
+        coalesce(ngrams(col("__toks"), 2), array().cast("array<string>"))
+          .as("__bg") +: extra: _*)
       .select(
         col(idCol) +:
         size(col("__toks")).cast("long").as("n_tokens") +:
@@ -672,6 +668,7 @@ object Corpus {
       idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, DataFrame) = {
     require(quota > 0, s"quota must be positive, got $quota")
+    graft.functions.AggConf.ensureHashAggHeadroom(delta.sparkSession)
     val picked = Parallelism.ensure(delta)
       .groupBy(col(domainCol))
       .agg(graft.functions.TopK.bottomKString(quota)(
@@ -809,12 +806,6 @@ object Corpus {
    */
   final case class LmModel(totalTokens: Long, uni: DataFrame, big: DataFrame)
 
-  /** Shared tokenizer-to-bigram projection (train and score must agree). */
-  private def bigramsOf(t: Column): Column = when(size(t) >= 2,
-    transform(sequence(lit(1), size(t) - 1),
-      i => concat(element_at(t, i), lit(" "), element_at(t, i + 1))))
-    .otherwise(array().cast("array<string>"))
-
   /** Train an [[LmModel]] on a clean split — see [[lmScore]] for the model
     * definition and cap semantics. The one action here is the total-token
     * count (a scalar a persisted model must carry anyway). */
@@ -847,7 +838,7 @@ object Corpus {
     // into the model changes no output (LmModelSpec pins both the persisted
     // parity and the forced-cut case).
     val big = Parallelism.ensure(train)
-      .select(explode(bigramsOf(toks)).as("bg"))
+      .select(explode(ngrams(toks, 2)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("cuv"))
       .filter(col("cuv") >= minBigramCount)
       .orderBy(col("cuv").desc, col("bg").asc).limit(maxBigrams)
@@ -1045,6 +1036,7 @@ object Corpus {
       lpad(lower(conv((lit(Int.MaxValue.toLong) - col("tok_bits"))
         .cast("string"), 10, 16)), 9, "0"),
       col("__sel_hex"))
+    graft.functions.AggConf.ensureHashAggHeadroom(docs.sparkSession)
     val winners = perDoc
       .agg(graft.functions.TopK.bottomKString(k)(sortKey, col(idCol).cast("long"))
         .as("picked"))

@@ -62,7 +62,7 @@ object QualityModel {
     Seq(
       lit(1.0),
       nTok / lit(100.0),
-      stopwordCount(toks, StopEn).cast("double") / safeTok * lit(10.0),
+      countIn(toks, StopEn).cast("double") / safeTok * lit(10.0),
       length(regexp_replace(t, "[^.,!?;:]", "")).cast("double") / safeTok,
       length(t).cast("double") / safeTok / lit(10.0))
   }

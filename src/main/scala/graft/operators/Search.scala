@@ -410,6 +410,7 @@ object Search {
         .select(col(qidCol), col(idCol),
           (col("apx") * (lit(1.0) - col("eps"))).as("lo"),
           (col("apx") * (lit(1.0) + col("eps"))).as("hi")))
+    graft.functions.AggConf.ensureHashAggHeadroom(pairs.sparkSession)
     val theta = pairs.groupBy(col(qidCol))
       .agg(graft.functions.TopK.topKDouble(k)(col("lo"), col(idCol)).as("tk"))
       .select(col(qidCol),
@@ -695,6 +696,7 @@ object Search {
       // Every pair the exact cut could select survives `hi ≥ θ_q`: true ≤
       // hi, and the k-th true score dominates the k-th lo elementwise —
       // ties included, which is why the filter is ≥.
+      graft.functions.AggConf.ensureHashAggHeadroom(pairs.sparkSession)
       val theta = pairs.groupBy(col(qidCol))
         .agg(graft.functions.TopK.topKDouble(k)(col("lo"), col(idCol)).as("tk"))
         .select(col(qidCol),

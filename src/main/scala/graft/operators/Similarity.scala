@@ -44,6 +44,7 @@ object Similarity {
     val clean =
       if (longScore) scored.filter(col(scoreCol).isNotNull)
       else scored.filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
+    graft.functions.AggConf.ensureHashAggHeadroom(scored.sparkSession)
     val agg =
       if (longScore) TopK.topKLong(k)(col(scoreCol), col("nid"))
       else TopK.topKDouble(k)(col(scoreCol), col("nid"))

@@ -29,16 +29,21 @@ object TextAnalysis {
    */
   def qualityMetrics(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val t = col(textCol)
-    val toks = tokens(t)
-    df.select(
+    val toks = col("__toks")
+    withTokens(df, idCol, textCol).select(
       col(idCol),
       length(t).cast("long").as("n_chars"),
       size(toks).cast("long").as("n_tokens"),
       length(regexp_replace(t, "[^.,!?;:]", "")).cast("long").as("n_punct"),
       length(regexp_replace(t, "[^0-9]", "")).cast("long").as("n_digits"),
       length(regexp_replace(t, "[^A-Z]", "")).cast("long").as("n_upper"),
-      stopwordCount(toks, StopEn).cast("long").as("n_stopwords"))
+      countIn(toks, StopEn).cast("long").as("n_stopwords"))
   }
+
+  /** `(idCol, textCol, __toks)`: the text tokenized once, so every feature
+    * derives from one `tokens(text)` per row. */
+  private def withTokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), col(textCol), tokens(col(textCol)).as("__toks"))
 
   /** Derived quality score in [0,1] (not oracle-compared: float by design). */
   def qualityScore(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -55,15 +60,17 @@ object TextAnalysis {
 
   /** Heuristic language ID (n-gram/stopword votes; see TextFunctions.langIdExpr). */
   def languageId(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    df.select(col(idCol), langIdExpr(col(textCol)).as("pred_lang"))
+    withTokens(df, idCol, textCol)
+      .select(col(idCol), langIdExpr(col(textCol), col("__toks")).as("pred_lang"))
 
   /** Document fingerprints: whole-doc hash + min-shingle witness (winnowing-style). */
   def fingerprints(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = tokens(col(textCol))
-    df.filter(size(tokens(col(textCol))) >= 3)
+    val toks = col("__toks")
+    withTokens(df, idCol, textCol)
+      .filter(size(toks) >= 3)
       .select(
         col(idCol),
-        docFingerprint(col(textCol)).as("doc_hash"),
+        docHash(toks).as("doc_hash"),
         minShingleFingerprint(toks).as("min_shingle_hash"))
   }
 

@@ -1098,7 +1098,8 @@ object TrainingSet {
       quota: Int,
       strataCol: String = "lang",
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
+      textCol: String = "text"): DataFrame = {
+    graft.functions.AggConf.ensureHashAggHeadroom(docs.sparkSession)
     Parallelism.ensure(docs)
       .groupBy(col(strataCol))
       // null text hashes as empty text: BottomKString's contract is non-null
@@ -1110,6 +1111,7 @@ object TrainingSet {
         col(strataCol),
         (col("pos") + 1).cast("long").as("rk"),
         col("col").getField("id").as(idCol))
+  }
 
   /**
    * Temperature-flattened mixture sampling (the multilingual α-sampling

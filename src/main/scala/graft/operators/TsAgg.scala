@@ -354,6 +354,7 @@ object TsAgg {
       .agg(functions.sum(v(spec)).as("key_sum"))
       .filter(col("key_sum").isNotNull)
     val grpKeys = (spec.seriesCols :+ "bucket_start").map(col)
+    graft.functions.AggConf.ensureHashAggHeadroom(df.sparkSession)
     summed.groupBy(grpKeys: _*)
       .agg(graft.functions.TopK.topKLong(k)(col("key_sum"), col(keyCol)).as("tk"))
       .select(grpKeys :+ posexplode(col("tk.entries")).as(Seq("r0", "e")): _*)
@@ -405,6 +406,7 @@ object TsAgg {
       m: Int = 256, weightCol: Option[String] = None): DataFrame = {
     val grpKeys = (spec.seriesCols :+ "bucket_start").map(col)
     val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
+    graft.functions.AggConf.ensureHashAggHeadroom(df.sparkSession)
     withBuckets(df, spec)
       .groupBy(grpKeys: _*)
       .agg(graft.functions.SpaceSaving.topKByWeight(k, m)(col(keyCol), w).as("tk"))
@@ -479,6 +481,7 @@ object TsAgg {
     // k = m in the agg: keep the FULL sketch so the certificate can read
     // the (k+1)-th count; the per-bucket merge buffers carry m entries
     // across the exchange regardless, so this costs nothing new
+    graft.functions.AggConf.ensureHashAggHeadroom(df.sparkSession)
     val sk = Materialize.share(
       withBuckets(df, spec)
         .groupBy(grpKeys: _*)

@@ -271,6 +271,7 @@ object StreamingOps {
       .withColumn("cosine",
         ArrayDotProduct(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
       .filter(col("cosine").isNotNull && !isnan(col("cosine")))
+    graft.functions.AggConf.ensureHashAggHeadroom(scored.sparkSession)
     scored.groupBy("qid")
       .agg(graft.functions.TopK.topKDouble(k)(col("cosine"), col("nid")).as("tk"))
       .select(col("qid"), posexplode(col("tk").getField("entries")).as(Seq("r0", "e")))
@@ -319,6 +320,7 @@ object StreamingOps {
       .withColumn("cosine",
         ArrayDotProduct(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
       .filter(col("cosine").isNotNull && !isnan(col("cosine")))
+    graft.functions.AggConf.ensureHashAggHeadroom(scored.sparkSession)
     scored
       .groupBy(window(col(eventTimeCol), windowDuration).as("w"), col("qid"))
       .agg(graft.functions.TopK.topKDouble(k)(col("cosine"), col("nid")).as("tk"))
@@ -362,6 +364,7 @@ object StreamingOps {
   def trendingKeysStream(
       events: DataFrame, windowMs: Long, watermarkDelay: String,
       keyCol: String, k: Int, m: Int = 256, tsCol: String = "ts"): DataFrame = {
+    graft.functions.AggConf.ensureHashAggHeadroom(events.sparkSession)
     events
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), s"$windowMs milliseconds"))

@@ -76,4 +76,27 @@ class AggConfSpec extends AnyFunSuite {
         == AggConf.FallbackThreshold.toString)
     }
   }
+
+  test("a door writes the session that executes it, not the thread-active one") {
+    withBareSession() { active =>
+      // `active` stays the thread-active session while the doors below build
+      // over frames of `other`, a second session on the same context
+      val other = active.newSession()
+      assert(!other.sessionState.conf.contains(AggConf.FallbackThresholdKey))
+      import other.implicits._
+      val docs = Seq((1L, "en", "a"), (2L, "en", "b"), (3L, "fr", "c"))
+        .toDF("doc_id", "lang", "text")
+      val picked = graft.operators.TrainingSet.quotaSample(docs, quota = 1)
+      assert(SparkSession.getActiveSession.contains(active))
+      assert(other.conf.get(AggConf.FallbackThresholdKey)
+        == AggConf.FallbackThreshold.toString)
+      assert(picked.count() == 2)
+    }
+    withBareSession() { active =>
+      val other = active.newSession()
+      graft.functions.Aggregators.registerAll(other)
+      assert(other.conf.get(AggConf.FallbackThresholdKey)
+        == AggConf.FallbackThreshold.toString)
+    }
+  }
 }

@@ -235,4 +235,19 @@ class PlanContractSpec extends AnyFunSuite {
     // the default cap (1000) must NOT fire on a 12-doc corpus
     assert(graft.operators.Dedup.ngramJaccard(docs).count() == 66L)
   }
+
+  test("curation text queries run compiled kernels: no higher-order function or lambda in the plan") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    // HOFs are CodegenFallback: every lambda call is interpreted per element,
+    // which made these five the costliest per-row queries of the registry
+    Seq("text_repetition", "filter_repetition", "text_fingerprint", "text_langid",
+      "text_quality").foreach { q =>
+      val optimized = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      val lambdas = optimized.flatMap(_.expressions.flatMap(_.collect {
+        case e: HigherOrderFunction => e.prettyName
+        case _: LambdaFunction => "lambda"
+      }))
+      assert(lambdas.isEmpty, s"$q plans ${lambdas.distinct.mkString(", ")}:\n$optimized")
+    }
+  }
 }
