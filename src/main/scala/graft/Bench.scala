@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.registry.Gate
+
 /**
  * Benchmark main (driver contract): runs every `SparkEntry.queries` entry on
  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -116,7 +118,8 @@ object Bench {
       else {
         val times = samples(name).sorted
         val sp = spread3(samples(name))
-        QResult(name, times.head, times(1), rowsOf(name), ok = true,
+        // second-fastest sample as the median; one pass has only one sample
+        QResult(name, times.head, times(math.min(1, times.size - 1)), rowsOf(name), ok = true,
           spread = sp, unstable = sp > StableSpread)
       }
     }
@@ -160,164 +163,28 @@ object Bench {
       System.err.println(s"[bench] could not write baseline candidate: $e") }
     val regressedNames = regressionsFound.map(_.name).toSet
 
-    // ANN answer QUALITY alongside ANN wall-clock (VERDICT r5 #7): recall@5 of
-    // each approximate query vs the exact top-k at THIS sf, recorded per run —
-    // a fast ANN query that stopped finding neighbors must not read as a win.
-    val recall: Seq[(String, Double)] = {
-      def topk(name: String): Map[Long, Set[Long]] =
-        SparkEntry.queries(name)(spark, sfDir).select("qid", "nid").collect()
-          .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      val approx = Seq("ann_topk_cosine_lsh", "ann_topk_cosine_ivf", "ann_topk_cosine_ivfpq")
-        .filter(n => selected.exists(_._1 == n))
-      if (approx.isEmpty || !selected.exists(_._1 == "ann_topk_dot")) Seq.empty
-      else try {
-        val exact = topk("ann_topk_dot")
-        approx.map { name =>
-          val got = topk(name)
-          val perQuery = exact.toSeq.map { case (q, ex) =>
-            got.getOrElse(q, Set.empty).intersect(ex).size.toDouble / ex.size }
-          name -> perQuery.sum / perQuery.size
-        }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] recall computation failed: ${e.getMessage}")
-          Seq.empty
-      }
+    // QUALITY GATES: each approximate query's gate (graft.registry.Gate) runs
+    // when its query and the twins it reads are selected. A value outside
+    // the gate's bound, or a measure that throws, marks the query failed.
+    val selectedNames = selected.map(_._1).toSet
+    val gates = SparkEntry.registry.flatMap(q => q.gate.map(q.name -> _))
+      .filter { case (name, g) => selectedNames(name) && g.needs.forall(selectedNames) }
+      .map { case (name, g) => (name, g, Gate.evaluate(g, spark, sfDir)) }
+    val gateFails = gates.collect { case (name, g, o) if o.failed =>
+      System.err.println(s"[bench] $name: ${g.section} gate ${g.key} = ${o.json}, bound " +
+        s"${g.bound} — marked failed (SCALE.md's sf1 sweep shows when this fires legitimately)")
+      name
     }
+    def gateJson(section: String): String = gates.collect {
+      case (_, g, o) if g.section == section => "\"" + g.key + "\":" + o.json
+    }.mkString("{", ",", "}")
+    val recallJson = gateJson("recall")
+    val sketchJson = gateJson("sketch")
     def field(f: QResult => String): String =
       results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
     def sec3(v: Double): String = // Locale.ROOT: a comma decimal separator would break the JSON
       if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // SKETCH QUALITY (VERDICT r6 #6): the SpaceSaving trending query's
-    // answer quality vs its exact twin, artifact-visible per round — top-1
-    // containment (is each bucket's true biggest spender anywhere in the
-    // sketch's top-3?) and the worst err/est ratio. Order-dependent sketches
-    // have no SQL oracle; this is their per-round gate.
-    val sketchQ: Option[(Double, Double)] =
-      if (!selected.exists(_._1 == "ts_trending_approx") ||
-          !selected.exists(_._1 == "ts_top3_users_900")) None
-      else try {
-        // raw sketch rows, not the registered containment-verdict query
-        // (r14: the registered form is oracle-gated booleans; the
-        // quantitative gate still reads the estimates)
-        val approx = SparkEntry.trendingApproxRaw(spark, sfDir)
-          .select("bucket_start", "user_id", "est_weight", "err").collect()
-        val exactTop1 = SparkEntry.queries("ts_top3_users_900")(spark, sfDir)
-          .filter("rank = 1").select("bucket_start", "user_id").collect()
-          .map(r => r.getLong(0) -> r.getLong(1))
-        val sketchByBucket = approx.groupBy(_.getLong(0))
-        val containment = exactTop1.count { case (b, u) =>
-          sketchByBucket.getOrElse(b, Array.empty).exists(_.getLong(1) == u)
-        }.toDouble / math.max(1, exactTop1.length)
-        val maxErrRatio = approx.iterator
-          .map(r => r.getLong(3).toDouble / math.max(1L, r.getLong(2))).max
-        Some((containment, maxErrRatio))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] sketch quality computation failed: ${e.getMessage}")
-          None
-      }
-    val ContainmentFloor = 0.95
-    // HLL++ QUALITY: worst per-bucket relative error of the approx-distinct
-    // query vs its exact twin, gated at 3× the sketch's configured rsd
-    // (0.05) — the same treatment as containment/recall.
-    val hllQ: Option[Double] =
-      if (!selected.exists(_._1 == "ts_distinct_approx_900") ||
-          !selected.exists(_._1 == "ts_distinct_users_900")) None
-      else try {
-        val exact = SparkEntry.queries("ts_distinct_users_900")(spark, sfDir)
-          .select("bucket_start", "n_distinct").collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val errs = SparkEntry.distinctApproxRaw(spark, sfDir)
-          .select("bucket_start", "n_distinct_approx").collect()
-          .flatMap(r => exact.get(r.getLong(0))
-            .map(e => math.abs(r.getLong(1) - e).toDouble / math.max(1L, e)))
-        if (errs.isEmpty) None else Some(errs.max)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] hll quality computation failed: ${e.getMessage}")
-          None
-      }
-    val HllErrCeiling = 0.15
-    // AUTO-DISPATCH SKETCH ARM (VERDICT r11 next #4): the auto front door's
-    // exact branch is oracle-verified; this forces the OTHER arm
-    // (maxExactPairs = 0 → pure HLL) over the same spec and gates its worst
-    // per-bucket rel-err vs the exact twin — both arms artifact-gated at
-    // every bench SF, not just spec-bounded at test scale.
-    // None = gate not applicable (queries deselected); Left(msg) = the gate
-    // COMPUTATION broke — an explicit artifact marker + a failed query, so a
-    // broken gate can never read as a deselected one (ADVICE r12: a
-    // Throwable used to degrade to None, removing the gate silently)
-    val autoSketchQ: Option[Either[String, Double]] =
-      if (!selected.exists(_._1 == "ts_distinct_auto_900") ||
-          !selected.exists(_._1 == "ts_distinct_users_900")) None
-      else try {
-        val exact = SparkEntry.queries("ts_distinct_users_900")(spark, sfDir)
-          .select("bucket_start", "n_distinct").collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val errs = SparkEntry.distinctAutoForcedSketch(spark, sfDir)
-          .select("bucket_start", "n_distinct_est").collect()
-          .flatMap(r => exact.get(r.getLong(0))
-            .map(e => math.abs(r.getLong(1) - e).toDouble / math.max(1L, e)))
-        if (errs.isEmpty) Some(Left("no overlapping buckets")) else Some(Right(errs.max))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] auto-sketch quality computation failed: ${e.getMessage}")
-          Some(Left(String.valueOf(e.getMessage).replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120)))
-      }
-    // QUANTILE DISPATCH SKETCH ARM (r13): same both-arms contract as the
-    // distinct dispatch gate above — force maxExactGroup = 0 (pure GK
-    // sketch) over the same spec and gate the worst per-bucket RANK-error
-    // EXCESS: |rank(element)/n − 0.95| minus the per-bucket allowance
-    // 1/accuracy (the GK guarantee) + (1 + ties)/n (rank-ceiling
-    // discreteness — a 15-sample bucket's p95 IS its max at rank frac 1.0,
-    // err 0.05, with the sketch exactly on-rank). The gated value must be
-    // ≤ 0: the sketch never exceeds its own guarantee. A VALUE-error gate
-    // is meaningless for an element-returning sketch on heavy-tailed data:
-    // adjacent ranks near p95 differ by ~0.8× in these 39-sample buckets.
-    val QuantileRankErrCeiling = 0.0
-    val quantileSketchQ: Option[Either[String, Double]] =
-      if (!selected.exists(_._1 == "ts_p95_auto_900")) None
-      else try {
-        val errs = SparkEntry.quantileSketchRankFracs(spark, sfDir).collect()
-          .map { r =>
-            val n = math.max(1L, r.getLong(1)).toDouble
-            val err = math.abs(r.getLong(2) / n - 0.95)
-            // 1e-4 = 1/accuracy at TsAgg.quantileAuto's default 10000;
-            // 1e-9 absorbs the float representation of the frac itself
-            err - (1e-4 + (1.0 + r.getLong(3)) / n + 1e-9)
-          }
-        if (errs.isEmpty) Some(Left("no buckets")) else Some(Right(errs.max))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] quantile-sketch quality computation failed: ${e.getMessage}")
-          Some(Left(String.valueOf(e.getMessage).replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120)))
-      }
-    val sketchFails = sketchQ.toSeq.collect {
-      case (c, _) if c < ContainmentFloor => "ts_trending_approx"
-    } ++ hllQ.toSeq.collect { case e if e > HllErrCeiling => "ts_distinct_approx_900" } ++
-      autoSketchQ.toSeq.collect {
-        case Right(e) if e > HllErrCeiling => "ts_distinct_auto_900"
-        case Left(_) => "ts_distinct_auto_900" // gate broke = red, not silent
-      } ++ quantileSketchQ.toSeq.collect {
-        case Right(e) if e > QuantileRankErrCeiling => "ts_p95_auto_900"
-        case Left(_) => "ts_p95_auto_900"
-      }
-    sketchFails.foreach(n => System.err.println(
-      s"[bench] $n sketch quality below floor — marked failed " +
-        s"(containment < $ContainmentFloor, HLL rel-err > $HllErrCeiling, or " +
-        s"GK rank-error excess > $QuantileRankErrCeiling past the " +
-        "1/accuracy + tie-discreteness allowance; " +
-        "see SCALE.md sf1 sweep for when this fires legitimately)"))
-    // RECALL GATE (VERDICT r6 #2): an approximate ANN query below the same
-    // 0.9 recall floor the specs assert is a FAILURE in the artifact, not a
-    // footnote — a fast ANN query that stopped finding neighbors must never
-    // read as green.
-    val RecallFloor = 0.9
-    val recallFails = recall.collect { case (n, v) if v < RecallFloor => n }
-    recallFails.foreach(n => System.err.println(
-      s"[bench] $n recall below floor $RecallFloor — marked failed"))
-    val failed = (results.collect { case r if !r.ok => r.name } ++ recallFails ++ sketchFails)
+    val failed = (results.collect { case r if !r.ok => r.name } ++ gateFails)
       .distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
     // regressed-at-unchanged-plan queries read as UNSTABLE (their number
     // carries an error bar a judge must see), not failed — the answer is
@@ -332,32 +199,6 @@ object Bench {
       s""""${r.name}":{"ratio":$ratio,"median":$med,"baseline":$base}"""
     }.mkString("{", ",", "}")
     val regressionsJson = regressionsJsonOf(regressionsFound)
-    val recallJson = recall
-      .map { case (n, v) => "\"" + n + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
-      .mkString("{", ",", "}")
-    val sketchJson = {
-      val parts = sketchQ.toSeq.map { case (c, e) =>
-        val cs = String.format(java.util.Locale.ROOT, "%.3f", Double.box(c))
-        val es = String.format(java.util.Locale.ROOT, "%.4f", Double.box(e))
-        s""""ts_trending_approx":{"top1_containment":$cs,"max_err_ratio":$es}"""
-      } ++ hllQ.toSeq.map { e =>
-        val es = String.format(java.util.Locale.ROOT, "%.4f", Double.box(e))
-        s""""ts_distinct_approx_900":{"max_rel_err":$es}"""
-      } ++ autoSketchQ.toSeq.map {
-        case Right(e) =>
-          val es = String.format(java.util.Locale.ROOT, "%.4f", Double.box(e))
-          s""""ts_distinct_auto_900_forced_sketch":{"max_rel_err":$es}"""
-        case Left(msg) =>
-          s""""ts_distinct_auto_900_forced_sketch":{"error":"$msg"}"""
-      } ++ quantileSketchQ.toSeq.map {
-        case Right(e) =>
-          val es = String.format(java.util.Locale.ROOT, "%.4f", Double.box(e))
-          s""""ts_p95_auto_900_forced_sketch":{"max_rank_err_excess":$es}"""
-        case Left(msg) =>
-          s""""ts_p95_auto_900_forced_sketch":{"error":"$msg"}"""
-      }
-      parts.mkString("{", ",", "}")
-    }
     val total = results.collect { case r if r.ok => r.min }.sum
     // BOTH totals in every output (VERDICT r18 next #4 / wrong #2): the
     // run "total" sums per-query MINS (the steady-state signal) while the
@@ -388,11 +229,10 @@ object Bench {
     // "parsed": null and two rounds of PERF per-query comparison were
     // lost. Prose belongs in OPTIMIZATION_r*.md / SCALE.md; bench.json
     // carries the full per-query detail.
-    val notes = "r21 opt2: no new queries (134). Notes capped <=300 chars " +
-      "so the driver tail parses this line (r19/r20 PERF lost to a 4.5KB " +
-      "notes field); per-query detail in bench.json, round log in " +
-      "OPTIMIZATION_r21.md. Session sets scheduler.mode=FAIR for real " +
-      "(r20 notes claimed it; only ScaleBench had it)."
+    val notes = "No new queries (134). Each query's build, oracle and quality " +
+      "gate are one record in graft.registry; the recall and sketch maps come " +
+      "from those gates, and a gate that throws marks its query failed. " +
+      "Per-query detail in bench.json."
     require(notes.length <= 300,
       s"bench notes must stay <=300 chars for the driver tail window, " +
         s"got ${notes.length}")

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.registry.Gate
+
 class BenchGateSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -112,5 +114,27 @@ class BenchGateSpec extends AnyFunSuite {
     val r2 = BenchGate.planFingerprint(
       SparkEntry.queries("ts_sum_900")(spark, "/root/testdata/sf0.001"))
     assert(r1 == r2)
+  }
+
+  test("a gate whose measure throws marks its query failed and writes the error") {
+    val broken = Gate("sketch", "q_broken", needs = Nil, Seq(Gate.Field("max_rel_err", 4)),
+      Gate.AtMost(0.15), (_, _) => throw new IllegalStateException("no \"buckets\"\nleft"))
+    val o = Gate.evaluate(broken, spark, "/nonexistent")
+    assert(o.failed, "a broken gate must read red, never absent or green")
+    assert(o.json == """{"error":"no  buckets  left"}""")
+  }
+
+  test("a gate renders its fields and holds its first field to the bound") {
+    def gate(vs: Seq[Double], fields: Seq[Gate.Field], bound: Gate.Bound) =
+      Gate.evaluate(Gate("sketch", "q", Nil, fields, bound, (_, _) => vs), spark, "")
+    val two = Seq(Gate.Field("top1_containment", 3), Gate.Field("max_err_ratio", 4))
+    assert(gate(Seq(0.95, 0.5), two, Gate.AtLeast(0.95)) ==
+      Gate.Outcome("""{"top1_containment":0.950,"max_err_ratio":0.5000}""", failed = false))
+    assert(gate(Seq(0.94, 0.0), two, Gate.AtLeast(0.95)).failed)
+    // a single unnamed field is written bare, as the recall map holds it
+    assert(gate(Seq(0.875), Seq(Gate.Field("", 3)), Gate.AtLeast(0.9)) ==
+      Gate.Outcome("0.875", failed = true))
+    assert(!gate(Seq(0.0), Seq(Gate.Field("x", 4)), Gate.AtMost(0.0)).failed)
+    assert(gate(Seq(1e-9), Seq(Gate.Field("x", 4)), Gate.AtMost(0.0)).failed)
   }
 }

@@ -18,6 +18,24 @@ class DriverContractSpec extends AnyFunSuite {
     assert(orphaned.isEmpty, s"oracles without a query (typo?): $orphaned")
   }
 
+  test("registry names are distinct (a Map keeps only the last duplicate)") {
+    val dupes = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dupes.isEmpty, s"names registered more than once: $dupes")
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
+  }
+
+  test("oracle and query key sets are equal in both directions") {
+    val oracles = SparkEntry.oracleSql.keySet
+    val queries = SparkEntry.queries.keySet
+    assert((queries -- oracles).isEmpty, s"queries without an oracle: ${queries -- oracles}")
+    assert((oracles -- queries).isEmpty, s"oracles without a query: ${oracles -- queries}")
+  }
+
+  test("every oracle string is non-empty") {
+    val blank = SparkEntry.oracleSql.collect { case (n, sql) if sql.trim.isEmpty => n }
+    assert(blank.isEmpty, s"empty oracle SQL: $blank")
+  }
+
   test("entry() is the driver smoke: rows > 0 at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -8,8 +8,10 @@ in DuckDB with each sf table registered as a view, sorts columns by name and
 rows by value, and compares cell-by-cell (exact; floats must match to 1e-12
 relative — the queries are designed for bit-exact parity). A query whose
 oracle SQL raises a DuckDB error (say, out of memory) is reported as
-[ERROR] and the rest are still checked; the exit status is non-zero when any
-query failed or errored.
+[ERROR] and the rest are still checked. Every registered query carries an
+oracle, so a result dir without one is reported as [NO-ORACLE] and counts
+against the run; the exit status is non-zero when any query failed, errored
+or had no oracle.
 """
 import json, struct, sys, glob, os
 import duckdb
@@ -39,7 +41,7 @@ def main(outdir, sfdir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-    n_pass = n_fail = n_error = 0
+    n_pass = n_fail = n_error = n_no_oracle = 0
     for name in sorted(os.listdir(outdir)):
         d = os.path.join(outdir, name)
         if not os.path.isdir(d):
@@ -50,7 +52,8 @@ def main(outdir, sfdir):
         got_types = [str(t) for t in got_rel.types]
         got = got_rel.fetchall()
         if name not in oracle:
-            print(f"  [rows-only] {name}: {len(got)} rows")
+            n_no_oracle += 1
+            print(f"  [NO-ORACLE] {name}: {len(got)} rows, nothing to check them against")
             continue
         try:
             exp_rel = con.sql(oracle[name])
@@ -85,8 +88,8 @@ def main(outdir, sfdir):
                 if not all(cmp_cell(a, b) for a, b in zip(r1, r2)):
                     print(f"     got {r1}\n     exp {r2}")
                     break
-    print(f"== {n_pass} pass, {n_fail} fail, {n_error} error")
-    return 1 if n_fail or n_error else 0
+    print(f"== {n_pass} pass, {n_fail} fail, {n_error} error, {n_no_oracle} no-oracle")
+    return 1 if n_fail or n_error or n_no_oracle else 0
 
 if __name__ == "__main__":
     sys.exit(main(sys.argv[1], sys.argv[2]))
