@@ -138,8 +138,9 @@ object Bench {
     }.toMap
     val medians: Map[String, Double] =
       results.collect { case r if r.ok => r.name -> r.median }.toMap
+    val baseline = BenchGate.readBaseline("bench_baseline.tsv")
     val regressionsFound: Seq[BenchGate.Regression] =
-      BenchGate.readBaseline("bench_baseline.tsv") match {
+      baseline match {
         // a median is only comparable at the SAME data scale: an sf1 sweep
         // run against the committed sf0.1 baseline flags growth-with-data
         // as "regression" (r15) — skip the gate, loudly, on a mismatch.
@@ -154,11 +155,15 @@ object Bench {
         case Some(b) => BenchGate.regressions(medians, planFps, b, RegressionFactor)
         case None => Seq.empty
       }
+    // the cores each side ran on: a median from a larger host reads as a
+    // regression on a smaller one, and the flag names both
+    val baselineCores = baseline.flatMap(_.cores).fold("unknown")(_.toString)
     regressionsFound.foreach(r => System.err.println(
       f"[bench] ${r.name} median ${r.median}%.3f s = ${r.ratio}%.2f× the baseline " +
-        f"${r.baselineMedian}%.3f s at an UNCHANGED plan — flagged as a regression"))
+        f"${r.baselineMedian}%.3f s at an UNCHANGED plan — flagged as a regression " +
+        s"(baseline cores=$baselineCores, this run cores=$cpus)"))
     try BenchGate.writeBaseline("bench_baseline_candidate.tsv", medians, planFps,
-      sf = Some(sfDir))
+      sf = Some(sfDir), cores = cpus.toIntOption)
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write baseline candidate: $e") }
     val regressedNames = regressionsFound.map(_.name).toSet

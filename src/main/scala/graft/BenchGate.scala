@@ -35,9 +35,12 @@ object BenchGate {
     * on (a `# sf=<dir>` header line; None on pre-r15 files). A median is
     * only comparable at the SAME scale factor — the r15 sf1 sweep flagged
     * six nonsense "regressions" because a 10×-data run was compared
-    * against the committed sf0.1 medians at unchanged plans. */
+    * against the committed sf0.1 medians at unchanged plans. `cores` records
+    * the cores the medians were measured on (` cores=<n>` on the same
+    * header line; None when absent, i.e. unknown), so a flagged regression
+    * names the hardware of both sides. */
   final case class Baseline(medians: Map[String, Double], plans: Map[String, String],
-      sf: Option[String] = None)
+      sf: Option[String] = None, cores: Option[Int] = None)
 
   final case class Regression(name: String, ratio: Double, median: Double,
       baselineMedian: Double)
@@ -80,13 +83,17 @@ object BenchGate {
    * Stable identity of a query's OPTIMIZED plan: the logical plan string
    * with run-varying noise normalized away — expression ids, plan ids,
    * filesystem paths (fixture caches carry per-run temp/fingerprint
-   * segments), and cached-relation storage detail. Two runs of the same
-   * code over the same registry produce equal fingerprints; any operator
-   * or shape change produces a different one.
+   * segments), cached-relation storage detail, and the JVM object
+   * identities that objects without a `toString` print (`[D@6554f841`,
+   * `Multimodal$$$Lambda$3909/0x…@…`: the `@` hash and the lambda class
+   * number). Two runs of the same code over the same registry produce equal
+   * fingerprints; any operator or shape change produces a different one.
    */
   def planFingerprint(df: DataFrame): String = {
     val raw = df.queryExecution.optimizedPlan.toString
     val norm = raw
+      .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x[0-9a-f]+", "\\$\\$Lambda")
+      .replaceAll("@[0-9a-f]+\\b", "@")
       .replaceAll("#\\d+", "#")
       .replaceAll("plan_id=\\d+", "plan_id=")
       .replaceAll("file:[^\\s,\\)\\]]+", "<path>")
@@ -99,14 +106,18 @@ object BenchGate {
   }
 
   def writeBaseline(path: String, medians: Map[String, Double],
-      plans: Map[String, String], sf: Option[String] = None): Unit = {
-    val lines = sf.map(s => s"# sf=$s").toSeq ++
+      plans: Map[String, String], sf: Option[String] = None, cores: Option[Int] = None): Unit = {
+    val header = (sf.map(s => s"sf=$s") ++ cores.map(n => s"cores=$n")).mkString(" ")
+    val lines = Option(header).filter(_.nonEmpty).map(h => s"# $h").toSeq ++
       medians.keySet.intersect(plans.keySet).toSeq.sorted.map { n =>
         f"$n\t${medians(n)}%.6f\t${plans(n)}"
       }
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       (lines.mkString("\n") + "\n").getBytes("UTF-8")): Unit
   }
+
+  private val BaselineSf = """# sf=(.*?)(?:\s+cores=\d+)?""".r
+  private val BaselineCores = """\scores=(\d+)""".r
 
   /** Read a baseline TSV; None when absent (first round with the gate, or
     * a fresh checkout before any committed baseline). */
@@ -116,9 +127,10 @@ object BenchGate {
     else {
       val all = scala.jdk.CollectionConverters.ListHasAsScala(
         java.nio.file.Files.readAllLines(p)).asScala.map(_.trim)
-      val sf = all.collectFirst {
-        case l if l.startsWith("# sf=") => l.stripPrefix("# sf=").trim
-      }
+      val headers = all.filter(_.startsWith("#"))
+      val sf = headers.collectFirst { case BaselineSf(dir) => dir.trim }
+      val cores = headers.flatMap(h => BaselineCores.findFirstMatchIn(h)).headOption
+        .map(_.group(1).toInt)
       val rows = all
         .filter(l => l.nonEmpty && !l.startsWith("#"))
         .map { l =>
@@ -129,7 +141,7 @@ object BenchGate {
       Some(Baseline(
         rows.map(r => r._1 -> r._2).toMap,
         rows.map(r => r._1 -> r._3).toMap,
-        sf))
+        sf, cores))
     }
   }
 }

@@ -1,8 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /**
  * Centralized Parquet source layer (SURVEY §2.1 S1: the reference's only source
@@ -26,20 +27,69 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
  *    `epoch_ms` sees.
  *  - TimestampNTZ columns are cast to TimestampType; sessions are pinned UTC so
  *    the instant is unchanged.
+ *
+ * Schema reuse: `spark.read.parquet` without a schema runs a Spark job to
+ * infer it from a footer, on every call. The readers here infer it once and
+ * then read with `spark.read.schema(inferred)`, so building a frame runs no
+ * job. The cached schema is keyed by the qualified path, the driver-side
+ * listing of its files (name, length, modification time) and the session's
+ * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` values, which shape
+ * inference; a change to any of them infers again.
  */
 object Tables {
 
-  private def readNormalized(s: SparkSession, path: String): DataFrame = {
+  /** What an inferred schema depends on: see the object's scaladoc. */
+  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+      confs: Seq[(String, String)])
+
+  /** Schemas kept at most; the least recently used is dropped past it. */
+  private val SchemaCacheSize = 64
+
+  private val schemas = new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+      size() > SchemaCacheSize
+  }
+
+  /** `spark.read.parquet(path)`, with the schema inferred once per [[SchemaKey]]. */
+  private def readParquet(s: SparkSession, path: String): DataFrame = {
     // Dynamic SQL conf — set defensively so the driver's own session works too.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(path)
-    raw.schema.fields.foldLeft(raw) { (df, f) =>
-      f.dataType match {
-        case TimestampNTZType => df.withColumn(f.name, col(f.name).cast(TimestampType))
-        case _ => df
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(p)
+    if (!fs.exists(qualified)) s.read.parquet(path) // fails as Spark reports a missing path
+    else {
+      val files = Seq.newBuilder[(String, Long, Long)]
+      val it = fs.listFiles(qualified, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted
+      val key = SchemaKey(qualified.toString, files.result().sorted, confs)
+      schemas.synchronized(Option(schemas.get(key))) match {
+        case Some(schema) => s.read.schema(schema).parquet(path)
+        case None =>
+          val inferred = s.read.parquet(path)
+          schemas.synchronized(schemas.put(key, inferred.schema))
+          inferred
       }
     }
   }
+
+  /** TimestampNTZ columns cast to TimestampType (the instant is unchanged in
+    * a UTC session). */
+  private def ntzToLtz(df: DataFrame): DataFrame =
+    df.schema.fields.foldLeft(df) { (out, f) =>
+      f.dataType match {
+        case TimestampNTZType => out.withColumn(f.name, col(f.name).cast(TimestampType))
+        case _ => out
+      }
+    }
+
+  private def readNormalized(s: SparkSession, path: String): DataFrame = ntzToLtz(readParquet(s, path))
 
   /** `events`: ts arrives as Long nanos under nanosAsLong — convert to TimestampType. */
   def events(s: SparkSession, dir: String): DataFrame = events(s, dir, None)
@@ -79,7 +129,7 @@ object Tables {
   /** `lineitem` with an epoch-millis ship-date range pushed down on the raw
     * NTZ column (a filter on the post-cast LTZ column would not prune). */
   def lineitemShipRange(s: SparkSession, dir: String, t0Ms: Long, endMs: Long): DataFrame = {
-    val raw = s.read.parquet(s"$dir/lineitem.parquet")
+    val raw = readParquet(s, s"$dir/lineitem.parquet")
     val bounded = raw.schema("l_shipdate").dataType match {
       case TimestampNTZType =>
         def ntz(ms: Long) = typedLit(
@@ -89,12 +139,7 @@ object Tables {
         raw.filter(col("l_shipdate") >= timestamp_millis(lit(t0Ms)) &&
           col("l_shipdate") < timestamp_millis(lit(endMs)))
     }
-    bounded.schema.fields.foldLeft(bounded) { (df, f) =>
-      f.dataType match {
-        case TimestampNTZType => df.withColumn(f.name, col(f.name).cast(TimestampType))
-        case _ => df
-      }
-    }
+    ntzToLtz(bounded)
   }
   def orders(s: SparkSession, dir: String): DataFrame = readNormalized(s, s"$dir/orders.parquet")
   def customer(s: SparkSession, dir: String): DataFrame = readNormalized(s, s"$dir/customer.parquet")

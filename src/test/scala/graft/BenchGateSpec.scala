@@ -116,6 +116,45 @@ class BenchGateSpec extends AnyFunSuite {
     assert(r1 == r2)
   }
 
+  test("planFingerprint erases JVM object identities and lambda class numbers") {
+    // plans print objects without a toString by identity; two runs of the
+    // same code print different hashes and lambda class numbers
+    def q(tokens: String*) = spark.range(3)
+      .select(tokens.zipWithIndex.map { case (t, i) =>
+        org.apache.spark.sql.functions.lit(t).as(s"c$i") }: _*)
+    val a = q("[D@6554f841", "[J@1b2c3d4e", "Multimodal$$$Lambda$3909/0x00000008012a4c40@5f1d2a3b",
+      "WeightedAvgAggregator$@7e2d1f0a")
+    val b = q("[D@13c9a0f", "[J@77aa31bc", "Multimodal$$$Lambda$4121/0x0000000801b3d878@2e8ab815",
+      "WeightedAvgAggregator$@41f6e0d2")
+    assert(BenchGate.planFingerprint(a) == BenchGate.planFingerprint(b))
+    assert(BenchGate.planFingerprint(a) != BenchGate.planFingerprint(q("[D@6554f841")),
+      "the plan's shape still counts")
+  }
+
+  test("a registered query with array literals fingerprints identically when built twice") {
+    def fp = BenchGate.planFingerprint(
+      SparkEntry.queries("ann_topk_cosine_ivfpq")(spark, "/root/testdata/sf0.001"))
+    assert(fp == fp)
+  }
+
+  test("the baseline header records cores; an absent count reads as unknown") {
+    val tmp = java.nio.file.Files.createTempDirectory("benchgate").toString
+    val medians = Map("a" -> 0.5)
+    val plans = Map("a" -> "fp1")
+    BenchGate.writeBaseline(s"$tmp/c.tsv", medians, plans, sf = Some("/data/sf0.1"), cores = Some(4))
+    assert(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$tmp/c.tsv")).get(0) ==
+      "# sf=/data/sf0.1 cores=4")
+    val back = BenchGate.readBaseline(s"$tmp/c.tsv").get
+    assert(back.sf.contains("/data/sf0.1") && back.cores.contains(4))
+    assert(back.medians == medians && back.plans == plans)
+    BenchGate.writeBaseline(s"$tmp/n.tsv", medians, plans, cores = Some(32))
+    assert(BenchGate.readBaseline(s"$tmp/n.tsv").get.cores.contains(32))
+    // a baseline written before the count was recorded
+    BenchGate.writeBaseline(s"$tmp/o.tsv", medians, plans, sf = Some("/data/sf0.1"))
+    val old = BenchGate.readBaseline(s"$tmp/o.tsv").get
+    assert(old.sf.contains("/data/sf0.1") && old.cores.isEmpty)
+  }
+
   test("a gate whose measure throws marks its query failed and writes the error") {
     val broken = Gate("sketch", "q_broken", needs = Nil, Seq(Gate.Field("max_rel_err", 4)),
       Gate.AtMost(0.15), (_, _) => throw new IllegalStateException("no \"buckets\"\nleft"))

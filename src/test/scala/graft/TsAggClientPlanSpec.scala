@@ -18,11 +18,14 @@ import graft.functions.{Decoders, RowKeys}
 import graft.operators.{TimeMode, TsAgg, TsAggClient, TsAggSpec}
 
 /**
- * The client's map reads: one scan, one shuffle, no global sort — the
- * `SortedMap` orders the buckets — over each source form the client serves
- * (the relational events table, binary cells in Parquet through a
- * `CellScan`, and the same cells through `graft-cells`), with answers equal
- * to the sorted `TsAgg.*` DataFrames at any shuffle partition count.
+ * The client's map reads: one scan, one job, no exchange — each partition
+ * folds its partials and the driver merges them — over each source form the
+ * client serves (the relational events table, binary cells in Parquet
+ * through a `CellScan`, and the same cells through `graft-cells`), with
+ * answers equal to the sorted `TsAgg.*` DataFrames at any shuffle partition
+ * count; and the same answers on the edges of the merge: integer values,
+ * nulls, Long overflow under either ANSI setting, and the shuffle fallback
+ * past the partial bound.
  */
 class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -97,10 +100,13 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  private def withShufflePartitions[T](n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
+  private def jobsOf[T](f: => T): (T, Int) = GraftListenerSync.jobsOf(spark.sparkContext)(f)
+
+  private def exchanges(p: SparkPlan): Int = collect(p) { case e: Exchange => e }.size
+
+  private def withConf[T](key: String, value: String)(f: => T): T = {
     val prior = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, value)
     try f
     finally prior match {
       case Some(v) => spark.conf.set(key, v)
@@ -108,17 +114,33 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("client map reads: one exchange and no sort per collect, over every source form") {
+  private def withShufflePartitions[T](n: Int)(f: => T): T =
+    withConf("spark.sql.shuffle.partitions", n.toString)(f)
+
+  /** Asserts each map equals its frame and each client collect ran
+    * `exchangesEach` exchanges. */
+  private def assertMatches(name: String, df: DataFrame, s: TsAggSpec, exchangesEach: Int): Unit = {
+    val (got, plans) = collectPlans(clientAggs(df, s))
+    assert(plans.size == aggNames.size, s"$name: one collect per client call")
+    plans.foreach(p => assert(exchanges(p) == exchangesEach, s"$name:\n$p"))
+    got.zip(frameAggs(df, s)).foreach { case ((agg, g), (_, e)) =>
+      assert(g.toSeq == e.toSeq, s"$name $agg")
+    }
+  }
+
+  test("client map reads: one job, no exchange, no sort, on every source form") {
     forms().foreach { form =>
+      form.client() // warm: the first read of a frame may plan more than later ones
       val (maps, plans) = collectPlans(form.client())
       assert(maps.map(_._1) == aggNames)
       assert(plans.size == aggNames.size, s"${form.name}: one collect per client call")
       plans.foreach { p =>
-        val exchanges = collect(p) { case e: Exchange => e }
         val sorts = collect(p) { case s: SortExec => s }
-        assert(exchanges.size == 1, s"${form.name}: exactly one exchange:\n$p")
+        assert(exchanges(p) == 0, s"${form.name}: no exchange, the driver merges:\n$p")
         assert(sorts.isEmpty, s"${form.name}: no sort, the SortedMap orders the buckets:\n$p")
       }
+      val (reads, jobs) = jobsOf(form.client())
+      assert(jobs == reads.size, s"${form.name}: one job per map read, got $jobs for ${reads.size}")
     }
   }
 
@@ -133,5 +155,63 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         }
       }
     }
+  }
+
+  test("an integer value column reads on the driver merge and equals the frames") {
+    val events = graft.sources.Tables.events(spark, sf)
+      .withColumn("value_int", expr("CAST(round(value * 100) AS INT)"))
+    assert(events.schema("value_int").dataType == org.apache.spark.sql.types.IntegerType)
+    assertMatches("int", events, spec.copy(valueCol = "value_int"), exchangesEach = 0)
+  }
+
+  test("null values: count includes them, every aggregate omits all-null buckets") {
+    // 2,000 cells a minute apart over 4 partitions; every 5th hour holds
+    // only nulls, and every 7th cell elsewhere is null
+    val hour = 3600000L
+    val cells = spark.range(0, 2000, 1, 4).select(
+      (lit(t0) + col("id") * 60000L).as("ts"),
+      when((col("id") / 60).cast("long") % 5 === 0 || col("id") % 7 === 0, lit(null))
+        .otherwise(col("id") * 3 - 1000).as("v"))
+    val s = TsAggSpec(3600, TimeMode.CellTs(t0, t0 + 2000 * 60000L), valueCol = "v")
+    assertMatches("nulls", cells, s, exchangesEach = 0)
+    val allNull = (0L until 34L).filter(_ % 5 == 0).map(h => t0 + h * hour).toSet
+    val count = TsAggClient.count(cells, s)
+    assert(allNull.subsetOf(count.keySet), "count keeps all-null buckets")
+    assert(count.values.sum == 2000L, "count counts every in-range cell, null or not")
+    Seq(TsAggClient.max(cells, s), TsAggClient.min(cells, s), TsAggClient.sum(cells, s),
+      TsAggClient.avg(cells, s)).foreach { m =>
+      assert(m.nonEmpty && m.keySet.intersect(allNull).isEmpty, "all-null buckets are omitted")
+    }
+  }
+
+  test("a Long sum whose merge overflows raises under ANSI and wraps with ANSI off") {
+    // two partitions, each summing to 2^62 in one bucket: the partials fit,
+    // their merge does not
+    val cells = spark.range(0, 4, 1, 2).select(
+      (lit(t0) + col("id")).as("ts"),
+      when(col("id") % 2 === 0, lit(1L << 62)).otherwise(lit(0L)).as("v"))
+    val s = TsAggSpec(3600, TimeMode.CellTs(t0, t0 + day), valueCol = "v")
+    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    withConf("spark.sql.ansi.enabled", "true") {
+      val client = intercept[Exception](TsAggClient.sum(cells, s))
+      assert(causes(client).exists(_.isInstanceOf[ArithmeticException]), client.toString)
+      val frame = intercept[Exception](TsAgg.sum(cells, s).collect())
+      assert(causes(frame).exists(_.isInstanceOf[ArithmeticException]), frame.toString)
+    }
+    withConf("spark.sql.ansi.enabled", "false") {
+      val (got, plans) = collectPlans(TsAggClient.sum(cells, s))
+      assert(plans.map(exchanges) == Seq(0), "the driver merge ran")
+      assert(got.toSeq == Seq(t0 -> Long.MinValue), "2^62 + 2^62 wraps as Spark's sum wraps")
+      assert(got.toSeq == rows(TsAgg.sum(cells, s)).toSeq)
+    }
+  }
+
+  test("past the partial bound a read takes the shuffle path and still equals the frames") {
+    // 1 s buckets over 60 days: 5,184,000 buckets, over the 2^22 bound even
+    // on one partition
+    val events = graft.sources.Tables.events(spark, sf)
+      .withColumn("value_cents", expr("CAST(round(value * 100) AS BIGINT)"))
+    val s = TsAggSpec(1, TimeMode.CellTs(t0, t0 + 60 * day), valueCol = "value_cents")
+    assertMatches("over-bound", events, s, exchangesEach = 1)
   }
 }

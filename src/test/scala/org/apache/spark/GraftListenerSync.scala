@@ -1,5 +1,9 @@
 package org.apache.spark
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /**
  * Test-only escape hatch into `SparkContext.listenerBus` (private[spark]):
  * drains the async listener queue DETERMINISTICALLY, replacing the fixed
@@ -9,4 +13,19 @@ package org.apache.spark
  */
 object GraftListenerSync {
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Runs `f` and returns the number of Spark jobs it started. */
+  def jobsOf[T](sc: SparkContext)(f: => T): (T, Int) = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      waitUntilEmpty(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
