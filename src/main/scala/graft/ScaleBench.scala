@@ -1,26 +1,46 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{TimeMode, TsAgg, TsAggSpec, TsAggClient}
+import graft.operators.{Materialize, TimeMode, TsAgg, TsAggClient, TsAggSpec}
 
 /**
- * Scale stress (not part of the driver contract): generates an N-row synthetic
- * time series in-memory (`spark.range` — no disk, so the measurement isolates
- * the aggregation pipeline) and times the tumbling-bucket operators on it.
- * Defaults to 100M rows ≈ 10,000× the reference's 10k-cell fixture.
+ * Scale stress (not part of the driver contract): named sections that time
+ * operators at a row count far past the graded testdata and assert planted
+ * ground truth at that size.
  *
- *   sbt "runMain graft.ScaleBench [rows]"
+ *   sbt "runMain graft.ScaleBench <rows> [corpus-dir] [section ...]"
  *
- * The point being demonstrated: the plan is the same one `Explain` shows at
- * sf0.01 — partial agg → one exchange of (partitions × buckets) rows → final
- * agg — so wall-clock grows linearly with rows/core and the shuffle stays tiny
+ * `rows` sizes the in-memory synthetic series (`spark.range`, no disk, so
+ * the measurement isolates the aggregation pipeline); 100,000,000 is 10,000×
+ * the reference's 10k-cell fixture. The argument with a `/` in it is the
+ * corpus dir the corpus sections read (a `graft.MakeScaled` output). Every
+ * other argument names a section; none runs every section the row count
+ * and the corpus dir allow. A section's `needs` run before it.
+ *
+ * Each timed step prints its wall clock and the shuffle and spill bytes of
+ * the stages it ran. The ts plan is the one `Explain` shows at sf0.01 —
+ * partial agg → one exchange of (partitions × buckets) rows → final agg —
+ * so wall clock grows linearly with rows/core and the shuffle stays tiny
  * (672 buckets regardless of N).
  */
 object ScaleBench {
+
+  /** One named section. Below `minRows` its planted truth does not hold;
+    * `readsCorpus` sections need a corpus dir; `needs` run first. */
+  final case class Section(name: String, minRows: Long, needs: Seq[String],
+      readsCorpus: Boolean, body: Run => Unit)
+
   def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 100000000L
+    require(args.nonEmpty, "usage: runMain graft.ScaleBench <rows> [corpus-dir] [section ...]")
+    val (dirs, names) = args.toSeq.tail.partition(_.contains('/'))
+    require(dirs.size <= 1, s"one corpus dir at most, got ${dirs.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -28,144 +48,212 @@ object ScaleBench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // FAIR so the concurrent-shard probe's per-slice pools share task
-      // slots evenly (r20). Inert for every sequential section: a single
-      // job in the lone default pool schedules exactly as FIFO does.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("GRAFT_SCALE_SCHED", "FAIR"))
-      // udaf hash-aggregate headroom (the r20 128-group sort-fallback fix)
-      // now rides the library: every typed-UDAF Column factory applies
-      // graft.functions.AggConf set-if-unset, so harness mains inherit it
+      // as in Bench: inert for sequential jobs (a single job in the lone
+      // default pool schedules exactly as FIFO does)
+      .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args(0).toLong, names, dirs.headOption)
+    finally spark.stop()
+  }
 
+  /** Runs the named sections (every runnable one when `names` is empty),
+    * each after its `needs`, and returns the names in the order run. An
+    * unknown name, or a named section `rows` or `corpus` cannot feed,
+    * fails before anything runs. */
+  def run(spark: SparkSession, rows: Long, names: Seq[String],
+      corpus: Option[String] = None): Seq[String] = {
+    val byName = sections.map(s => s.name -> s).toMap
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty, s"unknown section(s) ${unknown.mkString(", ")}; " +
+      s"valid: ${sections.map(_.name).mkString(", ")}")
+    def runnable(s: Section) = rows >= s.minRows && (corpus.isDefined || !s.readsCorpus)
+    val chosen =
+      if (names.nonEmpty) names.map(byName)
+      else {
+        sections.filterNot(runnable).foreach(s => println(s"[scale] ${s.name}: skipped " +
+          (if (rows < s.minRows) s"(needs >= ${s.minRows} rows)" else "(reads a corpus dir)")))
+        sections.filter(runnable)
+      }
+    def withNeeds(s: Section): Seq[Section] = s.needs.map(byName).flatMap(withNeeds) :+ s
+    val plan = chosen.flatMap(withNeeds).distinct
+    plan.filterNot(runnable).headOption.foreach { s =>
+      throw new IllegalArgumentException(
+        if (rows < s.minRows) s"${s.name} needs at least ${s.minRows} rows, got $rows"
+        else s"${s.name} reads a corpus dir (a graft.MakeScaled output); pass one")
+    }
+    val report = new StageReport
+    spark.sparkContext.addSparkListener(report)
+    try {
+      val r = new Run(spark, rows, corpus, report)
+      r.time(f"warmup (count of $rows%,d rows)")(r.series.count())
+      plan.foreach(_.body(r))
+    } finally spark.sparkContext.removeSparkListener(report)
+    plan.map(_.name)
+  }
+
+  /** What a section body reads: the session, the shared synthetic series
+    * and the timer. */
+  final class Run private[ScaleBench] (val spark: SparkSession, rows: Long,
+      corpus: Option[String], report: StageReport) {
     val t0Ms = 1704067200000L
-    val spanMs = 7L * 86400000L
-    val spec = TsAggSpec(900, TimeMode.CellTs(t0Ms, t0Ms + spanMs))
-
-    // deterministic synthetic series: ts spread uniformly over 7 days, long values
-    val df = spark.range(rows)
+    private val spanMs = 7L * 86400000L
+    /** 900 s buckets over 7 days: 672 buckets. */
+    val spec: TsAggSpec = TsAggSpec(900, TimeMode.CellTs(t0Ms, t0Ms + spanMs))
+    /** Deterministic synthetic series: ts spread uniformly over 7 days,
+      * values in [0, 100k). */
+    val series: DataFrame = spark.range(rows)
       .withColumn("ts", lit(t0Ms) + pmod(col("id") * lit(2654435761L), lit(spanMs)))
       .withColumn("value", pmod(col("id") * lit(40503L), lit(100000L)))
       .select("ts", "value")
 
-    // per-section shuffle accounting: stage-completion metrics accumulate
-    // into one counter; each timed section reports the delta. Listener
-    // delivery is async, so a short settle precedes the read — the numbers
-    // are for order-of-magnitude plan-shape verification (is this section's
-    // shuffle O(buckets) or O(rows)?), not accounting-grade.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    // r20: section-level SPILL accounting (the lazy-vs-eager memory
-    // high-water probe reads its delta) — same async-listener caveats
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong
-    // GRAFT_SCALE_STAGES=1: per-section top-stages report (executor run
-    // time + spill), for attributing a section's wall to its plan stages
-    val stageProf = sys.env.get("GRAFT_SCALE_STAGES").contains("1")
-    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Long)]
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          if (stageProf) stageRows.add((
-            sc.stageInfo.name.takeWhile(_ != '\n').take(90),
-            m.executorRunTime, m.memoryBytesSpilled + m.diskBytesSpilled,
-            sc.stageInfo.numTasks.toLong))
-        }
-      }
-    })
-    def time(name: String)(f: => Unit): Unit = {
-      Thread.sleep(200) // settle listener events from the previous section
-      val s0 = shuffleBytes.get()
-      stageRows.clear()
-      val t = System.nanoTime(); f
+    def corpusDir: String = corpus.get
+
+    /** `f`'s result; prints its wall clock and the shuffle and spill bytes
+      * of the stages it ran. */
+    def time[T](label: String)(f: => T): T = {
+      val sc = spark.sparkContext
+      report.settle(sc)
+      val (s0, p0) = (report.shuffle.get, report.spill.get)
+      val t = System.nanoTime()
+      val out = f
       val secs = (System.nanoTime() - t) / 1e9
-      Thread.sleep(200)
-      val sMb = (shuffleBytes.get() - s0) / 1e6
-      println(f"[scale] $name: $secs%.2f s, shuffle $sMb%.1f MB ($rows%,d rows)")
-      if (stageProf) {
-        import scala.jdk.CollectionConverters._
-        stageRows.asScala.toSeq.sortBy(-_._2).take(6).foreach { case (n, rt, sp, nt) =>
-          println(f"[stages]   ${rt / 1e3}%8.1f cpu-s  spill ${sp / 1e6}%7.0f MB  tasks $nt%4d  $n")
-        }
+      report.settle(sc)
+      println(f"[scale] $label: $secs%.2f s, shuffle ${(report.shuffle.get - s0) / 1e6}%.1f MB, " +
+        f"spill ${(report.spill.get - p0) / 1e6}%.1f MB")
+      out
+    }
+  }
+
+  /** Sums every completed stage's shuffle-write and spill bytes. */
+  private[ScaleBench] final class StageReport extends SparkListener {
+    val shuffle = new AtomicLong
+    val spill = new AtomicLong
+    private val marker = new AtomicReference[(String, CountDownLatch)]
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val m = e.stageInfo.taskMetrics
+      if (m != null) {
+        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
       }
     }
 
-    // Run only matching sections: GRAFT_SCALE_ONLY=psl,soak (comma-separated
-    // substring match on section tags). Unset → everything runs (the
-    // full-sweep contract). NOTE the "crawl" section probes the index files
-    // the "incremental" section writes — run them together.
-    val only: Seq[String] = sys.env.get("GRAFT_SCALE_ONLY").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    def sectionOn(name: String): Boolean = only.isEmpty || only.exists(name.contains)
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(marker.get).filter { case (token, _) =>
+        e.properties != null && e.properties.getProperty(MarkerKey) == token
+      }.foreach(_._2.countDown())
 
-    time("warmup (count)")(df.count())
-    if (sectionOn("ts")) {
-    time("summary (5 aggs, 1 pass)") {
-      val m = TsAggClient.summary(df, spec).collect()
-      // all 672 buckets populated only when rows >> buckets (coupon collector)
-      assert(m.nonEmpty && m.length <= 672, s"got ${m.length} buckets")
-      if (rows >= 100000) assert(m.length == 672, s"expected 672 buckets, got ${m.length}")
+    /** Returns once this listener has seen every event posted so far. The
+      * scheduler posts a job's stage completions before its action
+      * returns, and the bus delivers in order, so seeing a marker job's
+      * start means every earlier stage was counted. */
+    def settle(sc: SparkContext): Unit = {
+      val token = java.util.UUID.randomUUID().toString
+      val latch = new CountDownLatch(1)
+      marker.set((token, latch))
+      sc.setLocalProperty(MarkerKey, token)
+      try sc.parallelize(Seq(0), 1).foreach(_ => ())
+      finally sc.setLocalProperty(MarkerKey, null)
+      latch.await(60, TimeUnit.SECONDS): Unit
     }
-    time("max")(TsAgg.max(df, spec).collect())
-    time("avg")(TsAgg.avg(df, spec).collect())
-    time("grouped count (100 series)") {
-      TsAgg.count(df.withColumn("series", pmod(col("value"), lit(100L))),
-        spec.copy(seriesCols = Seq("series"))).collect()
-    }
-    // heavy hitters: per-(bucket, key) exact sums (the O(groups) level), then
-    // the k-entry TopK partial/final caps everything after at k per bucket
-    time("top-3 keys per bucket (10k keys, bounded TopK aggregate)") {
-      val out = TsAgg.topKPerBucket(
-        df.withColumn("user", pmod(col("value"), lit(10000L))), spec, "user", 3)
-      val n = out.count()
-      println(s"[scale] top-3: $n rows (expect 3 × non-empty buckets)")
-      assert(n > 0 && n <= 3L * 673)
-    }
-    // the sketch form of the same question: ≤ m counters per bucket cross
-    // the exchange regardless of key cardinality; heavy keys must agree
-    time("approx top-3 per bucket (SpaceSaving m=256 vs exact)") {
-      val keyed = df.withColumn("user", pmod(col("value"), lit(10000L)))
-      val approx = TsAgg.approxTopKPerBucket(keyed, spec, "user", k = 3, m = 256)
-        .collect()
-      println(s"[scale] approx top-3: ${approx.length} rows, " +
-        s"max err ${approx.map(_.getLong(3)).max}")
-      assert(approx.length > 0 && approx.length <= 3 * 673)
-    }
-    // sessionization: the one op whose exchange is necessarily O(events) —
-    // a user's events must co-locate (true in any engine); keys are 8 bytes.
-    // Verified by conservation: every in-range event lands in exactly one
-    // session (sum of session sizes == input rows).
-    time("sessionize 100k users (30 min gap, native session_window)") {
-      val ev = df.select(col("value").as("user"), col("ts")) // value ∈ [0, 100k)
-      val sess = TsAgg.sessionWindows(ev, 1800000L, Seq("user"))
-      val agg = sess.agg(sum("n_events"), count(lit(1))).collect().head
-      val total = ev.count()
-      println(s"[scale] sessions: ${agg.getLong(1)} sessions over $total events")
-      assert(agg.getLong(0) == total, s"event conservation: ${agg.getLong(0)} != $total")
-    }
-    } // sectionOn("ts")
+  }
+  private val MarkerKey = "graft.scalebench.marker"
 
-    // ---- bucket-series operators (r13): movingAvg / anomalies / fillGaps ----
-    // All three run their window/stat logic on the POST-AGGREGATE O(buckets)
-    // frame, so at 100M rows the added cost over a plain sum must be ~zero
-    // and the planted truth is re-derivable in the driver from the collected
-    // bucket sums (exact integer / fixed-double replay — no tolerance).
-    if (sectionOn("series")) {
-      time("movingAvg 4-bucket RANGE frame over 100M-row 900s sums") {
+  /** Order-independent output witness: the exact decimal sum of each row's
+    * xxhash64 over every column, and the row count. */
+  private def checksum(df: DataFrame): (String, Long) = {
+    val r = df.agg(sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")),
+      count(lit(1))).head
+    (Option(r.getDecimal(0)).fold("0")(_.toPlainString), r.getLong(1))
+  }
+
+  /** `f`'s result and the peak cached-block bytes (memory, disk) sampled
+    * every 100 ms while it ran. */
+  private def peakStorage[T](spark: SparkSession)(f: => T): (T, Long, Long) = {
+    val stop = new AtomicBoolean(false)
+    val (mem, disk) = (new AtomicLong, new AtomicLong)
+    val sampler = new Thread(() => while (!stop.get()) {
+      val infos = spark.sparkContext.getRDDStorageInfo
+      mem.accumulateAndGet(infos.map(_.memSize).sum, math.max)
+      disk.accumulateAndGet(infos.map(_.diskSize).sum, math.max)
+      Thread.sleep(100)
+    })
+    sampler.setDaemon(true)
+    sampler.start()
+    val out = try f finally { stop.set(true); sampler.join() }
+    (out, mem.get, disk.get)
+  }
+
+  /** The batch-BM25 doors whose eager and lazy rows the lazy-door memory
+    * probe compares; every one is registered against the same oracle. */
+  private val Bm25Doors = Seq("search_bm25_batch", "search_bm25_batch_lazy",
+    "search_bm25_batch_indexed", "search_bm25_batch_indexed_lazy")
+
+  val sections: Seq[Section] = Seq(
+    Section("ts", minRows = 100000L, needs = Nil, readsCorpus = false, run => {
+      import run.{series => df, spec}
+      run.time("summary (5 aggs, 1 pass)") {
+        val m = TsAggClient.summary(df, spec).collect()
+        assert(m.length == 672, s"expected 672 buckets, got ${m.length}")
+      }
+      run.time("max")(TsAgg.max(df, spec).collect())
+      run.time("avg")(TsAgg.avg(df, spec).collect())
+      run.time("grouped count (100 series)") {
+        TsAgg.count(df.withColumn("series", pmod(col("value"), lit(100L))),
+          spec.copy(seriesCols = Seq("series"))).collect()
+      }
+      // heavy hitters: per-(bucket, key) exact sums (the O(groups) level),
+      // then the k-entry TopK partial/final caps everything after at k per
+      // bucket
+      run.time("top-3 keys per bucket (10k keys, bounded TopK aggregate)") {
+        val out = TsAgg.topKPerBucket(
+          df.withColumn("user", pmod(col("value"), lit(10000L))), spec, "user", 3)
+        val n = out.count()
+        println(s"[scale] top-3: $n rows (expect 3 × non-empty buckets)")
+        assert(n > 0 && n <= 3L * 673)
+      }
+      // the sketch form of the same question: ≤ m counters per bucket cross
+      // the exchange regardless of key cardinality
+      run.time("approx top-3 per bucket (SpaceSaving m=256 vs exact)") {
+        val keyed = df.withColumn("user", pmod(col("value"), lit(10000L)))
+        val approx = TsAgg.approxTopKPerBucket(keyed, spec, "user", k = 3, m = 256)
+          .collect()
+        println(s"[scale] approx top-3: ${approx.length} rows, " +
+          s"max err ${approx.map(_.getLong(3)).max}")
+        assert(approx.length > 0 && approx.length <= 3 * 673)
+      }
+      // sessionization: the one op whose exchange is necessarily O(events) —
+      // a user's events must co-locate (true in any engine); keys are 8
+      // bytes. Conservation: every event lands in exactly one session.
+      run.time("sessionize 100k users (30 min gap, native session_window)") {
+        val ev = df.select(col("value").as("user"), col("ts")) // value ∈ [0, 100k)
+        val agg = TsAgg.sessionWindows(ev, 1800000L, Seq("user"))
+          .agg(sum("n_events"), count(lit(1))).collect().head
+        val total = ev.count()
+        println(s"[scale] sessions: ${agg.getLong(1)} sessions over $total events")
+        assert(agg.getLong(0) == total, s"event conservation: ${agg.getLong(0)} != $total")
+      }
+    }),
+
+    // Bucket-series operators: the window/stat logic runs on the
+    // POST-AGGREGATE O(buckets) frame, so the added cost over a plain sum is
+    // ~zero at any N, and the planted truth replays exactly in the driver
+    // from the collected bucket sums (integer / fixed-double, no tolerance).
+    Section("series", minRows = 100000L, needs = Nil, readsCorpus = false, run => {
+      import run.{series => df, spec, t0Ms}
+      run.time("movingAvg 4-bucket RANGE frame over the 900s sums") {
         val out = TsAgg.movingAvg(df, spec, nBuckets = 4).collect()
         assert(out.length == 672, s"expected 672 buckets, got ${out.length}")
         val sums = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
         out.foreach { r =>
           val b = r.getLong(0)
           val inWin = (0 to 3).flatMap(k => sums.get(b - k * spec.intervalMs))
-          val expect = inWin.sum.toDouble / inWin.length
-          assert(r.getDouble(2) == expect, s"mavg replay mismatch at $b")
+          assert(r.getDouble(2) == inWin.sum.toDouble / inWin.length,
+            s"mavg replay mismatch at $b")
         }
       }
-      time("ewmaTrailing 4-bucket dyadic weights over 100M-row 900s sums") {
+      run.time("ewmaTrailing 4-bucket dyadic weights over the 900s sums") {
         val out = TsAgg.ewmaTrailing(df, spec, wBuckets = 4).collect()
         assert(out.length == 672, s"expected 672 buckets, got ${out.length}")
         val sums = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -178,7 +266,7 @@ object ScaleBench {
           assert(r.getDouble(2) == expect, s"ewma replay mismatch at $b")
         }
       }
-      time("anomalies 3σ over 100M rows + one planted 2×-hot bucket") {
+      run.time("anomalies 3σ + one planted 2×-hot bucket") {
         // plant: double bucket 100's mass by unioning a copy of its rows —
         // uniform elsewhere, so exactly that bucket must trip the exact test
         val hotLo = t0Ms + 100L * spec.intervalMs
@@ -195,7 +283,7 @@ object ScaleBench {
           assert(r.getBoolean(2) == (n >= 2 && lhs > rhs), "flag replay mismatch")
         }
       }
-      time("fillGaps linear+prev across a planted 96-bucket outage (dense 672 spine)") {
+      run.time("fillGaps linear+prev across a planted 96-bucket outage (dense 672 spine)") {
         // cut day 3 entirely: the spine must come back dense with the gap
         // linearly interpolated between the band's edge buckets
         val gapLo = t0Ms + 2L * 86400000L
@@ -212,2116 +300,38 @@ object ScaleBench {
           val expect = pv.toDouble + (nv - pv).toDouble * ((b - pt).toDouble / (nt - pt).toDouble)
           assert(r.getDouble(2) == expect, s"linear replay mismatch at $b")
         }
-        val prevOut = TsAgg.fillGaps(outage, spec, "prev").collect()
-        prevOut.filter(_.isNullAt(1)).foreach { r =>
+        TsAgg.fillGaps(outage, spec, "prev").collect().filter(_.isNullAt(1)).foreach { r =>
           assert(r.getLong(2) == pv, s"prev fill must carry the outage's left edge")
         }
       }
-    } // sectionOn("series")
+    }),
 
-    // ---- corpus-scale dedup: synthetic docs with planted near-duplicates ----
-    // 30 tokens over a 100k-word vocab; every id ≡ 1 (mod 50) clones id-1 with
-    // its last token replaced → expected pair set = {(50k, 50k+1)}.
-    val nDocs = rows / 1000 // e.g. 100k docs for the default 100M run
-    // generator is a def so the incremental-dedup section below can build a
-    // SMALLER base corpus that is an exact prefix of the big one (same seeds)
-    def mkDocs(n: Long) = spark.range(n)
-      .withColumn("seed",
-        when(pmod(col("id"), lit(50L)) === 1L, col("id") - 1L).otherwise(col("id")))
-      .withColumn("text",
-        concat_ws(" ",
-          concat_ws(" ", (0 until 29).map(j =>
-            concat(lit("w"), pmod(xxhash64(col("seed") * lit(31L) + lit(j.toLong)), lit(100000L)))): _*),
-          when(pmod(col("id"), lit(50L)) === 1L, lit("zz"))
-            .otherwise(concat(lit("w"), pmod(xxhash64(col("seed") * lit(31L) + lit(29L)), lit(100000L))))))
-      .select(col("id").as("doc_id"), col("text"))
-    val docs = mkDocs(nDocs)
-    if (sectionOn("dedup")) {
-    time(s"minhash near-dup over ${nDocs} synthetic docs") {
-      val pairs = graft.operators.Dedup.minhashNearDup(docs).collect()
-      val planted = pairs.count(r => r.getLong(1) == r.getLong(0) + 1 && r.getLong(0) % 50 == 0)
-      val expected = ((nDocs - 2) / 50 + 1).toInt // ids 1, 51, 101, ... < nDocs
-      println(f"[scale] minhash recall: $planted/$expected planted pairs, ${pairs.length} total")
-      assert(planted >= (expected * 0.95).toInt, s"recall too low: $planted/$expected")
-    }
+    // The search index over the corpus dir: the O(base) build, paid once
+    // per corpus and reused from the fixture cache after that.
+    Section("bm25index", minRows = 0L, needs = Nil, readsCorpus = true, run =>
+      run.time(s"search index over ${run.corpusDir} (built once per corpus)") {
+        graft.sources.Fixtures.searchIndexPath(run.spark, run.corpusDir): Unit
+      }),
 
-    // ---- span detection over winnowing fingerprints at corpus scale ----
-    // planted clones share a 29-token run ≫ the winnowing guarantee length
-    // (window + k − 1 = 6), so every planted pair MUST share fingerprints;
-    // the assertion is on the guarantee, not luck
-    time(s"span near-dup (winnowing fingerprints) over ${nDocs} docs") {
-      val pairs = graft.operators.Dedup.spanNearDup(docs).collect()
-      val planted = pairs.count(r => r.getLong(1) == r.getLong(0) + 1 && r.getLong(0) % 50 == 0)
-      val expected = ((nDocs - 2) / 50 + 1).toInt
-      println(f"[scale] span recall: $planted/$expected planted pairs, ${pairs.length} total")
-      assert(planted >= (expected * 0.95).toInt, s"span recall too low: $planted/$expected")
-    }
-
-    // ---- exact substring spans at corpus scale ----
-    // planted clones share exactly their first 29 tokens (the clone replaces
-    // token 30), so every planted pair must yield ONE maximal span with
-    // a_start = b_start = 0 and len = 29 — boundaries checkable, not just
-    // timeable. Random 100k-vocab docs make coincidental ≥16-token runs
-    // vanishingly unlikely, so planted pairs are the whole answer.
-    val spansDf = graft.operators.Dedup.exactSpans(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val expectedSpans = ((nDocs - 2) / 50 + 1).toInt
-    time(s"exact substring spans (winnow-seeded) over ${nDocs} docs") {
-      val spans = spansDf.collect()
-      val planted = spans.count(r => r.getLong(1) == r.getLong(0) + 1 &&
-        r.getLong(0) % 50 == 0 && r.getLong(2) == 0 && r.getLong(3) == 0 && r.getLong(4) == 29L)
-      println(s"[scale] exact spans: $planted/$expectedSpans planted spans exact, ${spans.length} total")
-      assert(planted >= expectedSpans, s"planted spans must all be exact: $planted/$expectedSpans")
-    }
-    // the cut step over the persisted span frame: every clone (id ≡ 1 mod 50)
-    // loses exactly its 29 shared tokens; originals and bystanders lose none
-    time(s"cut spans (keep lowest-id copy) over ${nDocs} docs") {
-      val cut = graft.operators.Dedup.cutSpans(docs, spansDf)
-      val stats = cut.agg(
-        sum(when(col("n_removed") === 29L, 1L).otherwise(0L)),
-        sum(when(col("n_removed") =!= 0L && col("n_removed") =!= 29L, 1L).otherwise(0L)),
-        sum(col("n_removed"))).collect().head
-      println(s"[scale] cut: ${stats.getLong(0)} docs lost their 29-token clone run, " +
-        s"total ${stats.getLong(2)} tokens removed")
-      assert(stats.getLong(0) >= expectedSpans, "every clone must be cut")
-      assert(stats.getLong(1) == 0L, "no doc may lose a partial/other span")
-    }
-    spansDf.unpersist()
-
-    // ---- cluster canonicalization: pair graph → connected components ----
-    // (timed together with its pair generator: the operator's input IS a pair
-    // frame, and caching between the two is what a pipeline would do anyway)
-    time(s"minhash pairs → connected-component canon over ${nDocs} docs") {
-      val pairs = graft.operators.Dedup.minhashNearDup(docs)
-      // driverMaxEdges = 0: this harness exists to stress the DISTRIBUTED
-      // min-label loop; the default gate would route this pair graph to the
-      // driver-side union-find fast path
-      val clusters = graft.operators.Dedup.nearDupClusters(docs, pairs, driverMaxEdges = 0L)
-      val merged = clusters.filter(col("doc_id") =!= col("canon_id")).count()
-      val expected = ((nDocs - 2) / 50 + 1).toInt
-      println(s"[scale] clusters: $merged docs folded into canonicals (planted $expected)")
-      assert(merged >= (expected * 0.93).toInt, s"too few merges: $merged/$expected")
-    }
-    } // sectionOn("dedup")
-
-    // ---- corpus snapshot diff (r13): release-to-release audit at 100k docs ----
-    // The diff joins 16-byte digests keyed by id — the corpus text itself
-    // never crosses the exchange. Planted truth is pure modular arithmetic
-    // (removals %11, rewrites %7 of the survivors, re-keyed additions %13),
-    // so every status count is exactly computable in the driver.
-    if (nDocs >= 10000 && sectionOn("diffsnap")) {
-      time(s"snapshotDiff $nDocs docs vs a derived v2 (full-outer digest join)") {
-        val v2 = docs.filter(col("doc_id") % 11 =!= 0)
-          .withColumn("text",
-            when(col("doc_id") % 7 === 0, concat(col("text"), lit(" rev2")))
-              .otherwise(col("text")))
-          .unionByName(docs.filter(col("doc_id") % 13 === 0)
-            .withColumn("doc_id", col("doc_id") + lit(10L * nDocs)))
-        val sums = graft.operators.Corpus.snapshotDiffSummary(docs, v2)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        def cnt(p: Long => Boolean) = (0L until nDocs).count(p).toLong
-        val expect = Map(
-          "removed" -> cnt(_ % 11 == 0),
-          "modified" -> cnt(i => i % 11 != 0 && i % 7 == 0),
-          "added" -> cnt(_ % 13 == 0),
-          "unchanged" -> cnt(i => i % 11 != 0 && i % 7 != 0))
-        println(s"[scale] snapshot diff: $sums")
-        assert(sums == expect, s"status replay mismatch: got $sums expect $expect")
-      }
-    } // sectionOn("diffsnap")
-
-    // ---- BM25 retrieval (r13): planted-term ranking at corpus scale ----
-    // 1-in-1000 docs gain the token 'needle' tf ∈ 1..5 times (tf cycles with
-    // id/1000; the base vocab is all w##### + zz, so 'needle' never collides).
-    // The graded claims: only O(query postings) = 100 rows ever shuffle, and
-    // the engine's top-25 equals a DRIVER replay of the exact double formula
-    // over the planted (tf, dl) table — values AND order, bit-for-bit.
-    if (nDocs >= 10000 && sectionOn("bm25")) {
-      val tfCol = (lit(1L) + pmod((col("doc_id") / 1000L).cast("long"), lit(5L))).cast("int")
-      val planted = docs.withColumn("text",
-        when(pmod(col("doc_id"), lit(1000L)) === 0L,
-          concat(col("text"), lit(" "),
-            array_join(array_repeat(lit("needle"), tfCol), " ")))
-          .otherwise(col("text")))
-      var got: Array[(Long, Double)] = null
-      time(s"bm25TopK 'needle' over $nDocs docs (100 postings, top-25 exact replay)") {
-        got = graft.operators.Search.bm25TopK(planted, "needle", k = 25)
-          .collect().map(r => (r.getLong(0), r.getDouble(2)))
-      }
-      // driver replay with the operator's own expression shapes
-      val plants = (0L until nDocs by 1000L).map(i => (i, 1L + (i / 1000L) % 5L))
-      val nD = nDocs; val tT = 30L * nDocs + plants.map(_._2).sum
-      val dfT = plants.length.toLong
-      val idf = (2.0 * (nD - dfT) + 1) / (2.0 * dfT + 1)
-      val expect = plants.map { case (i, tf) =>
-        val dl = 30L + tf
-        val tfD = (BigDecimal(44L * tT * tf).toDouble) /
-          BigDecimal(20L * tT * tf + 6L * tT + 18L * dl * nD).toDouble
-        (i, idf * tfD)
-      }.sortBy { case (i, s) => (-s, i) }.take(25)
-      assert(got.toSeq == expect, s"top-25 replay mismatch: got ${got.take(3).toSeq}")
-      // the SERVE tier: build + persist the inverted index (the O(base)
-      // step), then serve the same query from the pruned postings read —
-      // must reproduce the scan form bit-for-bit at a fraction of the cost
-      val ixDir = java.nio.file.Files.createTempDirectory("graft-scale-searchix").toString
-      time(s"build+write search index over $nDocs docs (O(base), once per snapshot)") {
-        graft.operators.Search.writeSearchIndex(
-          graft.operators.Search.buildSearchIndex(planted), ixDir)
-      }
-      val ix = graft.operators.Search.readSearchIndex(spark, ixDir)
-      var served: Array[(Long, Double)] = null
-      time(s"bm25 SERVE 'needle' from the persisted index (pruned postings read)") {
-        served = graft.operators.Search.bm25TopKIndexed(ix, "needle", k = 25)
-          .collect().map(r => (r.getLong(0), r.getDouble(2)))
-      }
-      assert(served.toSeq == got.toSeq, "serve != scan at corpus scale")
-      // O(delta) append: 1000 fresh docs (ids shifted past the corpus,
-      // 1-in-100 carrying one needle) tokenize alone and land in the same
-      // bucket layout; the grown index must serve EXACTLY what a fresh
-      // scan of base ∪ delta answers — postings, df, N and T decompose
-      val delta = mkDocs(1000)
-        .select((col("doc_id") + lit(10L * nDocs)).as("doc_id"), col("text"))
-        .withColumn("text",
-          when(pmod(col("doc_id"), lit(100L)) === 0L,
-            concat(col("text"), lit(" needle"))).otherwise(col("text")))
-      var grown: graft.operators.Search.SearchIndex = null
-      time("appendSearchIndex: 1000-doc delta vs the 100k-doc index (O(delta))") {
-        grown = graft.operators.Search.appendSearchIndex(ixDir, delta)
-      }
-      val afterServe = graft.operators.Search.bm25TopKIndexed(grown, "needle", k = 25)
-        .collect().map(r => (r.getLong(0), r.getDouble(2)))
-      val afterScan = graft.operators.Search
-        .bm25TopK(planted.unionByName(delta), "needle", k = 25)
-        .collect().map(r => (r.getLong(0), r.getDouble(2)))
-      assert(afterServe.toSeq == afterScan.toSeq, "grown serve != union scan")
-      // COMPACTION (r15, VERDICT r14 missing #3): grow the store to 6 live
-      // segments with four more disjoint 1000-doc deltas, then fold them
-      // back to ONE — the read-plan bound that keeps a long append loop's
-      // per-query cost O(1) segments. The fold is an O(live postings)
-      // rewrite into a FRESH segment (old versions' files never touched),
-      // and the compacted store must serve the pre-compact answers
-      // bit-for-bit.
-      (2 to 5).foreach { i =>
-        val d = mkDocs(1000)
-          .select((col("doc_id") + lit((10L + i) * nDocs)).as("doc_id"), col("text"))
-        graft.operators.Search.appendSearchIndex(ixDir, d): Unit
-      }
-      assert(graft.operators.Search.searchIndexSegments(spark, ixDir) == 6)
-      val preCompact = graft.operators.Search.bm25TopKIndexed(
-        graft.operators.Search.readSearchIndex(spark, ixDir), "needle", k = 25)
-        .collect().map(r => (r.getLong(0), r.getDouble(2)))
-      var compacted: graft.operators.Search.SearchIndex = null
-      time(s"compactSearchIndex: 6 segments over ~${nDocs / 1000 + 5}k docs -> 1 (O(live postings) rewrite)") {
-        compacted = graft.operators.Search.compactSearchIndex(spark, ixDir)
-      }
-      assert(graft.operators.Search.searchIndexSegments(spark, ixDir) == 1)
-      var afterCompact: Array[(Long, Double)] = null
-      time("bm25 SERVE from the compacted single-segment store") {
-        afterCompact = graft.operators.Search.bm25TopKIndexed(compacted, "needle", k = 25)
-          .collect().map(r => (r.getLong(0), r.getDouble(2)))
-      }
-      assert(afterCompact.toSeq == preCompact.toSeq, "compact changed served results")
-      // MVCC under a CONCURRENT reader (r16, VERDICT r15 next #6): the
-      // store's crash contracts are spec'd single-threaded; this measures
-      // the multi-version claim live. A reader pins the current version
-      // (v6, the compacted store) and serves in a loop on its own thread
-      // while the writer commits an append (v7) and a compact (v8)
-      // underneath it — every concurrent serve must be bit-identical to
-      // the pinned baseline because v6's files are immutable until no
-      // manifest references them. Only after the reader DRAINS does prune
-      // collect, and it must collect exactly the dead set: manifests
-      // v0..v6 (7) and the pre-compact segments seg-0..seg-5 (6) — seg-6
-      // stays alive because v7's manifest still references it.
-      locally {
-        import graft.operators.Search
-        val pinned = Search.readSearchIndex(spark, ixDir) // resolves v6
-        def serve(ix: Search.SearchIndex): Seq[(Long, Long)] =
-          Search.bm25TopKIndexed(ix, "needle", k = 25).collect()
-            .map(r => (r.getLong(0),
-              java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq
-        val expect = serve(pinned)
-        val mismatches = new java.util.concurrent.atomic.AtomicInteger(0)
-        val serves = new java.util.concurrent.atomic.AtomicInteger(0)
-        // ADVICE r16: a reader thread dying on an exception must FAIL the
-        // check, not hang the sweep — record the failure, exit the loop,
-        // and bound the post-commit wait with a deadline.
-        @volatile var readerFailure: Throwable = null
-        @volatile var stopReader = false
-        val reader = new Thread(() => {
-          try {
-            while (!stopReader) {
-              if (serve(pinned) != expect) mismatches.incrementAndGet(): Unit
-              serves.incrementAndGet(): Unit
-            }
-          } catch { case t: Throwable => readerFailure = t }
-        })
-        reader.start()
-        time("MVCC: append(v7)+compact(v8) commit under a live v6 reader (serves stay bit-identical)") {
-          val d = mkDocs(1000)
-            .select((col("doc_id") + lit(16L * nDocs)).as("doc_id"), col("text"))
-          Search.appendSearchIndex(ixDir, d): Unit
-          Search.compactSearchIndex(spark, ixDir): Unit
-        }
-        // let the reader observe the post-commit world for a few serves —
-        // deadline-bounded so a dead reader fails loudly instead of spinning
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        while (serves.get() < 3 && readerFailure == null && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        stopReader = true
-        reader.join()
-        assert(readerFailure == null, s"concurrent reader died: $readerFailure")
-        assert(serves.get() >= 3,
-          s"reader made only ${serves.get()} serves before the 120s deadline")
-        println(s"[scale]   concurrent serves=${serves.get()} mismatches=${mismatches.get()}")
-        assert(mismatches.get() == 0,
-          "a pinned reader observed changed results while the writer committed")
-        // reader drained -> GC: exactly the dead set, nothing referenced
-        var pruned: (Int, Int) = null
-        time("pruneSearchIndex(keepVersions=2) after reader drain") {
-          pruned = Search.pruneSearchIndex(spark, ixDir, keepVersions = 2)
-        }
-        assert(pruned == (7, 6), s"expected (7 manifests, 6 segments) collected, got $pruned")
-        // the pinned version's manifest is gone (the drain rule made this
-        // legal); the store's head still serves the grown corpus
-        val v6Gone =
-          try { Search.readSearchIndexAt(spark, ixDir, "v6"); false }
-          catch { case _: IllegalArgumentException => true }
-        assert(v6Gone, "pruned v6 must no longer resolve")
-        assert(Search.bm25TopKIndexed(Search.readSearchIndex(spark, ixDir),
-          "needle", k = 25).collect().length == 25)
-      }
-    } // sectionOn("bm25")
-
-    // ---- batch BM25 one decade past the sweep (VERDICT r17 next #7) ----
-    // Probes the two REGISTERED batch doors (same query derivation as
-    // search_bm25_batch[_indexed]) on a MakeScaled corpus directory —
-    // default /tmp/graft-sf10, i.e. 100× the graded sf0.1 corpus, one
-    // decade past the sf1 sweep. The graded question: does the
-    // 2.0–2.6×-per-decade wall band hold sf1→sf10, and what is the
-    // measured size of the linear term (the bounds aggregate's
-    // O(Σ_t df(t)·queries(t)) fanout) and of the exact fold's input?
-    // Set GRAFT_SEARCH_PROF=1 to print those counts from the operator.
-    if (sectionOn("bm25batchx")) {
-      import graft.operators.Search
-      // comma-separated corpus dirs, interleaved across GRAFT_SCALE_BM25_PASSES
-      // in-JVM passes (the per-round bench's median protocol: single-shot
-      // walls at this scale vary ±40% with JIT/page-cache state)
-      val dirsX = sys.env.getOrElse("GRAFT_SCALE_BM25_DIR", "/tmp/graft-sf10")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val passesX = sys.env.get("GRAFT_SCALE_BM25_PASSES").map(_.toInt).getOrElse(1)
-      for (dirX <- dirsX if !graft.sources.StoreIO.exists(s"$dirX/documents.parquet"))
-        println(s"[scale] bm25batchx SKIPPED: $dirX absent " +
-          "(sbt \"runMain graft.MakeScaled /root/testdata/sf0.1 /tmp/graft-sf10 100\")")
-      for (pass <- 1 to passesX;
-           dirX <- dirsX if graft.sources.StoreIO.exists(s"$dirX/documents.parquet")) {
-        val docsX = graft.sources.Tables.documents(spark, dirX)
-        val nDocsX = docsX.count()
-        val queriesX = docsX.filter(col("doc_id") % 5 === 1)
-          .select(col("doc_id").as("query_id"),
-            array_join(slice(
-              graft.functions.TextFunctions.tokens(col("text")), 1, 3), " ")
-              .as("query"))
-        // output checksum: order-independent xxhash64 sum + row count —
-        // the cross-door bit-identity witness at a scale where collecting
-        // 500k rows for exact compare would swamp the timing
-        def chk(df: org.apache.spark.sql.DataFrame): (String, Long) = {
-          // decimal(38,0) sum: 500k 64-bit hashes overflow a long sum
-          // under ANSI arithmetic; the exact decimal fold cannot
-          val r = df.agg(
-            sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")),
-            count(lit(1))).head
-          (r.getDecimal(0).toPlainString, r.getLong(1))
-        }
-        var scanRows = 0L
-        var scanDf: org.apache.spark.sql.DataFrame = null
-        time(s"bm25TopKAll scan door [$dirX pass $pass]: $nDocsX docs, ${nDocsX / 5} queries") {
-          scanDf = Search.bm25TopKAll(docsX, queriesX, k = 5)
-          scanRows = scanDf.count()
-        }
-        // QUERY-SHARD door at probe scale (VERDICT r18 next #1): K hash
-        // slices replay one shared scored cache; the graded claims are
-        // (a) output checksum == unsharded, (b) per-shard peak state —
-        // bounds-aggregate spill under GRAFT_SCALE_STAGES=1, and the wall
-        // on a SMALL heap where the unsharded door thrashes — stays ~flat
-        // as data grows 10×. 0 disables the row.
-        val shardsX = sys.env.get("GRAFT_SCALE_BM25_SHARDS").map(_.toInt).getOrElse(4)
-        if (shardsX > 1) {
-          val scanChk = chk(scanDf) // untimed; replays fold+cut off warm caches
-          graft.operators.Dedup.clearCaches() // sharded row pays its own tokenize
-          var shardDf: org.apache.spark.sql.DataFrame = null
-          time(s"bm25TopKAllSharded scan door K=$shardsX [$dirX pass $pass]") {
-            shardDf = Search.bm25TopKAllSharded(docsX, queriesX, k = 5, shards = shardsX)
-            assert(shardDf.count() == scanRows, "sharded row count diverged")
-          }
-          val shardChk = chk(shardDf)
-          assert(shardChk == scanChk,
-            s"sharded output != unsharded: $shardChk vs $scanChk")
-          println(s"[scale] bm25 sharded K=$shardsX: checksum == unsharded " +
-            s"(${shardChk._2} rows)")
-          graft.operators.Dedup.clearCaches()
-          // CONCURRENT shard deployment form (r20, VERDICT r19 next #1):
-          // the K slices run as K concurrent jobs over the one shared
-          // scored cache — per-slice scheduler pools, FAIR-shared task
-          // slots. The graded claims: checksum == unsharded, the
-          // sequential-sharded zero-spill property holds (per-task bounds
-          // state is unchanged — the slots just carry a MIX of slices),
-          // and the wall lands at or below the unsharded door's.
-          // GRAFT_SCALE_BM25_CONC=0 disables the row.
-          if (!sys.env.get("GRAFT_SCALE_BM25_CONC").contains("0")) {
-            var concDf: org.apache.spark.sql.DataFrame = null
-            time(s"bm25TopKAllSharded scan door K=$shardsX CONCURRENT [$dirX pass $pass]") {
-              concDf = Search.bm25TopKAllSharded(docsX, queriesX, k = 5,
-                shards = shardsX, concurrent = true)
-              assert(concDf.count() == scanRows, "concurrent row count diverged")
-            }
-            assert(chk(concDf) == scanChk,
-              "concurrent sharded output != unsharded")
-            println(s"[scale] bm25 sharded K=$shardsX concurrent: checksum == unsharded")
-            graft.operators.Dedup.clearCaches()
+    // Lazy-vs-eager batch-BM25 memory high-water: each registered door's
+    // wall, shuffle, spill and peak cached storage for the same batch, run
+    // cache-cold, with no conf set (the lazy indexed door sizes its bounds
+    // exchange itself). All four outputs must carry one checksum.
+    Section("bm25lazymem", minRows = 0L, needs = Seq("bm25index"), readsCorpus = true, run => {
+      val sums = Bm25Doors.map { name =>
+        val query = SparkEntry.registry.find(_.name == name).get
+        Materialize.clear()
+        val ((hash, n), mem, disk) = peakStorage(run.spark) {
+          run.time(s"$name over ${run.corpusDir} (build + full result)") {
+            checksum(query.build(run.spark, run.corpusDir))
           }
         }
-        // index build is the once-per-snapshot cost — timed separately so
-        // the serve row is comparable to the sweep's per-call number
-        var ix: Search.SearchIndex = null
-        time(s"build+write search index [$dirX pass $pass] (once per snapshot)") {
-          ix = graft.sources.Fixtures.searchIndex(spark, dirX)
-        }
-        var ixRows = 0L
-        var ixDf: org.apache.spark.sql.DataFrame = null
-        time(s"bm25TopKAllIndexed serve [$dirX pass $pass]: $nDocsX docs, ${nDocsX / 5} queries") {
-          ixDf = Search.bm25TopKAllIndexed(ix, queriesX, k = 5)
-          ixRows = ixDf.count()
-        }
-        assert(scanRows == ixRows && scanRows > 0,
-          s"batch doors disagree at scale: scan=$scanRows indexed=$ixRows")
-        // indexed sharded door: same checksum witness (untimed count inside)
-        if (shardsX > 1) {
-          val ixChk = chk(ixDf) // untimed, off the timed run's warm caches
-          graft.operators.Dedup.clearCaches()
-          var ixsDf: org.apache.spark.sql.DataFrame = null
-          time(s"bm25TopKAllIndexedSharded serve K=$shardsX [$dirX pass $pass]") {
-            ixsDf = Search.bm25TopKAllIndexedSharded(ix, queriesX, k = 5, shards = shardsX)
-            assert(ixsDf.count() == scanRows, "indexed sharded row count diverged")
-          }
-          assert(chk(ixsDf) == ixChk, "indexed sharded output != unsharded")
-          println(s"[scale] bm25 indexed sharded K=$shardsX: checksum == unsharded")
-          graft.operators.Dedup.clearCaches()
-          if (!sys.env.get("GRAFT_SCALE_BM25_CONC").contains("0")) {
-            var ixcDf: org.apache.spark.sql.DataFrame = null
-            time(s"bm25TopKAllIndexedSharded serve K=$shardsX CONCURRENT [$dirX pass $pass]") {
-              ixcDf = Search.bm25TopKAllIndexedSharded(ix, queriesX, k = 5,
-                shards = shardsX, concurrent = true)
-              assert(ixcDf.count() == scanRows, "indexed concurrent row count diverged")
-            }
-            assert(chk(ixcDf) == ixChk, "indexed concurrent output != unsharded")
-            println(s"[scale] bm25 indexed sharded K=$shardsX concurrent: checksum == unsharded")
-            graft.operators.Dedup.clearCaches()
-          }
-        }
+        println(f"[scale] bm25 lazymem $name: rows $n%,d, checksum $hash, " +
+          f"peak cache ${mem / 1e9}%.2f GB mem + ${disk / 1e9}%.2f GB disk")
+        Materialize.clear()
+        (hash, n)
       }
-    } // sectionOn("bm25batchx")
-
-    // ---- lazy-vs-eager batch-BM25 memory high-water (VERDICT r19 next
-    // #4): the eager door drops its fanout-sized `pairs` frame the moment
-    // survivors materialize; the lazy door necessarily holds it in the
-    // scoped FIFO (nothing counts survivors before the single action).
-    // This section puts a NUMBER on that delta: peak scoped-cache storage
-    // (memory + disk, sampled from the block manager at 100 ms) and the
-    // section's shuffle-spill delta for the same batch through each door.
-    // Runs on GRAFT_SCALE_BM25_DIR (first entry) like the batchx probe.
-    if (sectionOn("bm25lazymem")) {
-      import graft.operators.Search
-      val dirX = sys.env.getOrElse("GRAFT_SCALE_BM25_DIR", "/tmp/graft-sf1")
-        .split(",").map(_.trim).filter(_.nonEmpty).head
-      if (!graft.sources.StoreIO.exists(s"$dirX/documents.parquet"))
-        println(s"[scale] bm25lazymem SKIPPED: $dirX absent")
-      else {
-        val docsX = graft.sources.Tables.documents(spark, dirX)
-        val queriesX = docsX.filter(col("doc_id") % 5 === 1)
-          .select(col("doc_id").as("query_id"),
-            array_join(slice(
-              graft.functions.TextFunctions.tokens(col("text")), 1, 3), " ")
-              .as("query"))
-        def peakDuring[T](f: => T): (T, Long, Long) = {
-          val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-          val peakMem = new java.util.concurrent.atomic.AtomicLong
-          val peakDisk = new java.util.concurrent.atomic.AtomicLong
-          val sampler = new Thread(() => {
-            while (!stop.get()) {
-              val infos = spark.sparkContext.getRDDStorageInfo
-              val m = infos.map(_.memSize).sum
-              val d = infos.map(_.diskSize).sum
-              peakMem.accumulateAndGet(m, math.max)
-              peakDisk.accumulateAndGet(d, math.max)
-              Thread.sleep(100)
-            }
-          })
-          sampler.setDaemon(true)
-          sampler.start()
-          val r = f
-          stop.set(true)
-          sampler.join()
-          (r, peakMem.get(), peakDisk.get())
-        }
-        // third row: the lazy door with its plan-only bounds-width conf
-        // set fanout-sized (the r20 lever; default 288 ≈ sf10's 1.13 G
-        // fanout / 4 M rows-per-partition — override via env for other
-        // corpora). The graded question: does the conf recover the eager
-        // door's spill profile without giving up plan-only construction?
-        val lazyParts =
-          sys.env.getOrElse("GRAFT_SCALE_BM25_LAZY_PARTS", "288")
-        for ((form, mk) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
-          "eager" -> (() => Search.bm25TopKAll(docsX, queriesX, k = 5)),
-          "lazy" -> (() => Search.bm25TopKAllLazy(docsX, queriesX, k = 5)),
-          "lazy+parts" -> (() => {
-            spark.conf.set(Search.LazyBoundsPartitionsConfKey, lazyParts)
-            try Search.bm25TopKAllLazy(docsX, queriesX, k = 5)
-            finally spark.conf.unset(Search.LazyBoundsPartitionsConfKey)
-          }))) {
-          graft.operators.Dedup.clearCaches()
-          Thread.sleep(300) // settle listener + unpersist
-          val spill0 = spillBytes.get()
-          val t0 = System.nanoTime()
-          val (n, pm, pd) = peakDuring(mk().count())
-          val secs = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300)
-          println(f"[scale] bm25 lazymem $form%-5s: $secs%7.1f s  rows $n%,d  " +
-            f"peak cache ${pm / 1e9}%6.2f GB mem + ${pd / 1e9}%6.2f GB disk  " +
-            f"spill ${(spillBytes.get() - spill0) / 1e9}%6.2f GB")
-          graft.operators.Dedup.clearCaches()
-        }
-      }
-    } // sectionOn("bm25lazymem")
-
-    // ---- incremental (delta-vs-index) dedup: probe cost vs base size ----
-    // The production claim under measurement: deduplicating a crawl
-    // increment against a PERSISTED index must cost ~the delta, not the
-    // base — the same 1000-doc delta probes an index a tenth the size and
-    // the full-size one; if probe wall-clock scaled with the base, the
-    // second probe would run ~10× slower. Planted ground truth: every
-    // 10th delta doc is an exact copy of a base doc (both bases contain the
-    // target — the small base is a prefix of the big one), every 10th+1 a
-    // near copy (one token changed), the rest fresh. Exact copies must
-    // resolve to their base keep_id through the index; near copies must
-    // surface as MinHash matches of their target.
-    if (nDocs >= 10000 && sectionOn("incremental")) {
-      import graft.operators.Dedup
-      val deltaN = 1000L
-      val nTargets = (nDocs / 10) / 50 // targets live in the SMALL base too
-      val delta = spark.range(deltaN)
-        .withColumn("target", pmod(col("id"), lit(nTargets)) * 50L + 2L)
-        .withColumn("kind", pmod(col("id"), lit(10L))) // 0 exact, 1 near, else fresh
-        .withColumn("seed",
-          when(col("kind") <= 1L, col("target")).otherwise(col("id") + lit(nDocs)))
-        .withColumn("text",
-          concat_ws(" ",
-            concat_ws(" ", (0 until 29).map(j =>
-              concat(lit("w"), pmod(xxhash64(col("seed") * lit(31L) + lit(j.toLong)), lit(100000L)))): _*),
-            // near copies get a PER-DOC unique trailing token: with a small
-            // target space two near copies of the same target must not
-            // become exact duplicates of each other (that would leak
-            // intra-delta dups into the exact-tier count under test)
-            when(col("kind") === 1L, concat(lit("qq"), col("id")))
-              .otherwise(concat(lit("w"), pmod(xxhash64(col("seed") * lit(31L) + lit(29L)), lit(100000L))))))
-        .select((col("id") + lit(nDocs)).as("doc_id"), col("text"), col("target"), col("kind"))
-      val probeDocs = delta.select("doc_id", "text")
-      val probeTimes = Seq(nDocs / 10, nDocs).map { baseN =>
-        val idxDir = s"/tmp/graft-fixtures/scalebench-incidx-v1-$baseN"
-        time(s"build+write dedup index over $baseN docs (index construction, O(base))") {
-          Dedup.writeIndex(Dedup.buildIndex(mkDocs(baseN)), idxDir)
-        }
-        val idx = Dedup.readIndex(spark, idxDir)
-        val t = System.nanoTime()
-        time(s"incremental probe: $deltaN-doc delta vs $baseN-doc index") {
-          val ex = Dedup.incrementalExact(probeDocs, idx).collect()
-          val dups = ex.filter(_.getBoolean(2))
-          assert(dups.length == deltaN / 10, s"exact copies flagged: ${dups.length}")
-          assert(dups.forall(r =>
-            r.getLong(1) == ((r.getLong(0) - nDocs) % nTargets) * 50L + 2L),
-            "every exact copy must keep its base target id")
-          val near = Dedup.incrementalNearDup(probeDocs, idx)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          val found = (0L until deltaN).count(i => i % 10 == 1 &&
-            near.contains((nDocs + i, (i % nTargets) * 50L + 2L)))
-          println(s"[scale] incremental near recall: $found/${deltaN / 10} planted near copies")
-          assert(found >= (deltaN / 10 * 0.95).toInt, s"near recall too low: $found")
-        }
-        (System.nanoTime() - t) / 1e9
-      }
-      // the flat-probe claim, asserted: 10× the base must not mean ~10× the
-      // probe (generous 3× headroom for fixed overheads and noise)
-      println(f"[scale] probe cost at 1× vs 10× base: ${probeTimes.head}%.2f s vs ${probeTimes.last}%.2f s")
-      assert(probeTimes.last <= probeTimes.head * 3 + 2.0,
-        s"delta probe must not scale with base size: $probeTimes")
-    }
-
-    // ---- incremental SEMANTIC dedup: probe cost vs base size ----
-    // Same flat-probe claim for the fourth key space: a 1000-vector delta
-    // probed against a base-built SemIndex must cost ~the delta whether the
-    // base holds nDocs/10 or nDocs vectors. Planted ground truth: every
-    // 10th delta vector is an EXACT copy of a base vector living in both
-    // bases (cos = 1 → must fall); the rest are fresh hash-random 64-dim
-    // vectors. Centroids are trained once on the SMALL base and shared, so
-    // the cell space — the index identity — is constant across the compare.
-    if (nDocs >= 10000 && sectionOn("semantic")) {
-      import graft.operators.Dedup
-      val dim = 64
-      val deltaN = 1000L
-      val nTargets = (nDocs / 10) / 50
-      def mkVecs(n: Long, idOffset: Long, seedOf: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-        spark.range(n)
-          .withColumn("vec_id", col("id") + lit(idOffset))
-          .withColumn("embedding",
-            transform(sequence(lit(0), lit(dim - 1)),
-              j => ((pmod(xxhash64(seedOf * lit(31L) + j), lit(2001L)) - lit(1000L))
-                / lit(1000.0)).cast("float")))
-          .select("vec_id", "embedding", "id")
-      val deltaVecs = mkVecs(deltaN, nDocs,
-          when(pmod(col("id"), lit(10L)) === 0L, pmod(col("id"), lit(nTargets)) * 50L + 2L)
-            .otherwise(col("id") + lit(2L * nDocs)))
-        .select("vec_id", "embedding")
-      val cents = graft.operators.Similarity.trainIvfCentroids(
-        mkVecs(nDocs / 10, 0L, col("id")).select("vec_id", "embedding"), dim, nlist = 64)
-      val semTimes = Seq(nDocs / 10, nDocs).map { baseN =>
-        val idxDir = s"/tmp/graft-fixtures/scalebench-semidx-v1-$baseN"
-        val baseVecs = mkVecs(baseN, 0L, col("id")).select("vec_id", "embedding")
-        time(s"build+write semantic index over $baseN vectors (construction, O(base))") {
-          Dedup.writeSemIndex(
-            Dedup.buildSemIndex(baseVecs, dim, nlist = 64, centroids = Some(cents)), idxDir)
-        }
-        val idx = Dedup.readSemIndex(spark, idxDir)
-        val t = System.nanoTime()
-        time(s"semantic probe: $deltaN-vec delta vs $baseN-vec index") {
-          val out = Dedup.incrementalSemantic(deltaVecs, idx)
-            .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-          val copies = (0L until deltaN).filter(_ % 10 == 0).map(_ + nDocs)
-          val caught = copies.count(id => !out(id))
-          println(s"[scale] semantic probe: $caught/${copies.size} planted exact-cos copies flagged")
-          assert(caught == copies.size,
-            s"identical-vector copies must all fall (same cells, cos 1): $caught/${copies.size}")
-        }
-        (System.nanoTime() - t) / 1e9
-      }
-      println(f"[scale] semantic probe at 1× vs 10× base: ${semTimes.head}%.2f s vs ${semTimes.last}%.2f s")
-      assert(semTimes.last <= semTimes.head * 3 + 2.0,
-        s"semantic delta probe must not scale with base size: $semTimes")
-    }
-
-    // ---- semantic-index drift: probe recall vs delta-distribution drift ----
-    // Centroid FIXITY is the SemIndex contract (the cell space is the index's
-    // identity — Abbas et al. 2023 cluster once and dedup within fixed cells),
-    // and the scaladoc caveats that a long-lived index drifts from what fresh
-    // training would give. This section prices the caveat: how fast does probe
-    // recall decay as appended deltas drift away from the base distribution?
-    //
-    // Base: nDocs/10 vectors in 64 latent clusters (dir u_k + noise sized so
-    // intra-cluster cos ≈ 0.74 — well under the 0.9 match threshold, so ONLY
-    // a planted copy can rescue a probe and cluster-mates can't mask a
-    // straddle); k-means fits u_k, so undrifted points sit DEEP inside their
-    // cell (large argmax margin). Wave at drift f: cluster dirs blended
-    // (1−f)·u_k + f·w_k toward fresh random targets w_k — at f=0 the wave is
-    // base-distributed, at f=1 it lives where the trained Voronoi complex has
-    // no cell built for it (random dirs sit near boundaries BETWEEN the tight
-    // u-cells). Planted truth per wave: every appended vector gets a probe
-    // copy at cos ≈ 0.93 (v + 0.45·fresh noise) — NEAR the 0.9 operating
-    // threshold, because that is where straddling actually happens: a
-    // cos-0.999 clone assigns like its original almost everywhere (a first
-    // cut of this section measured recall 1.0/1.0/1.0/0.997/0.996 — fixity
-    // is FREE for exact re-crawls), but a threshold pair is a genuinely
-    // different vector whose top-2 cells can disagree once the pair sits in
-    // no-cell's-land. Recall denominator = pairs that TRULY clear the
-    // threshold (measured per wave with the same integer-cosine predicate
-    // the operator uses), so the number is recall, not fixture luck.
-    if (nDocs >= 10000 && sectionOn("drift")) {
-      import graft.operators.Dedup
-      val dim = 64
-      val driftBaseN = nDocs / 10
-      val waveN = 2000L
-      def h(seed: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
-        (pmod(xxhash64(seed: _*), lit(2001L)) - lit(1000L)) / lit(1000.0)
-      // point(id, k, f) = a·u_k + b·w_k + 0.6·noise_id (+ 0.45·copy noise),
-      // with (a, b) = ((1−f), f)/‖(1−f, f)‖ so the blended cluster dir keeps
-      // the SAME expected norm at every f — otherwise mid-f waves would have
-      // smaller dirs, pairs would drop below threshold for a fixture reason,
-      // and the recall trend would be contaminated by a denominator trend
-      def clustered(ids: org.apache.spark.sql.DataFrame, f: Double,
-                    noiseSeed: org.apache.spark.sql.Column,
-                    copyNoise: Double = 0.0): org.apache.spark.sql.DataFrame = {
-        val s = 1.0 / math.sqrt((1.0 - f) * (1.0 - f) + f * f)
-        ids.withColumn("k", pmod(col("id"), lit(64L)))
-          .withColumn("embedding",
-            transform(sequence(lit(0), lit(dim - 1)), j =>
-              (lit((1.0 - f) * s) * h(lit("drift-u"), col("k"), j) +
-               lit(f * s)   * h(lit("drift-w"), col("k"), j) +
-               lit(0.6)     * h(lit("drift-n"), noiseSeed, j) +
-               lit(copyNoise) * h(lit("drift-e"), noiseSeed, j)).cast("double")))
-          .select(col("id").as("vec_id"), col("embedding"))
-      }
-      val driftBase = clustered(spark.range(driftBaseN).toDF(), 0.0, col("id"))
-      val driftIdx = Dedup.buildSemIndex(driftBase, dim, nlist = 64)
-      // the monitoring signal (r10): 10%-quantile of best-cell cosine over
-      // the index's own contents, computed once per build
-      val driftBaseline = Dedup.semDriftBaseline(driftIdx)
-      val qz = (c: org.apache.spark.sql.Column) =>
-        transform(c, x => round(x.cast("double") * lit(1000)).cast("long"))
-      val drift = Seq(0.0, 0.25, 0.5, 0.75, 1.0).map { f =>
-        val wave = clustered(spark.range(waveN)
-          .withColumn("id", col("id") + lit(driftBaseN)), f, col("id"))
-        val probes = clustered(spark.range(waveN)
-          .withColumn("id", col("id") + lit(driftBaseN)), f, col("id"), copyNoise = 0.45)
-          .withColumn("vec_id", col("vec_id") + lit(1000000L))
-        // truth: which planted pairs REALLY clear cos ≥ 0.9, by the same
-        // quantized-integer predicate the operator evaluates
-        import graft.functions.expressions.ArrayDotProduct
-        val wq = wave.select(col("vec_id").as("id_a"), qz(col("embedding")).as("q_a"))
-        val pq = probes.select(col("vec_id").as("id_b"), qz(col("embedding")).as("q_b"))
-        val trueClear = wq.join(pq, wq("id_a") + 1000000L === pq("id_b"))
-          .withColumn("dot", ArrayDotProduct(col("q_a"), col("q_b")))
-          .withColumn("n2a", ArrayDotProduct(col("q_a"), col("q_a")))
-          .withColumn("n2b", ArrayDotProduct(col("q_b"), col("q_b")))
-          .filter(col("dot") > 0 &&
-            col("dot") * col("dot") * lit(100L) >= lit(81L) * col("n2a") * col("n2b"))
-          .count()
-        val grown = Dedup.appendSemIndex(driftIdx, wave)
-        val caught = Dedup.incrementalSemantic(probes, grown).filter(!col("keep")).count()
-        // the delta-sized signal a crawl loop would watch before appending
-        val stat = Dedup.semDriftStat(wave, driftIdx, driftBaseline)
-        (caught.toDouble / trueClear, trueClear, stat)
-      }
-      println("[scale] semantic drift: recall " +
-        drift.map(r => f"${r._1}%.3f").mkString(" / ") + " at f = 0 / 0.25 / 0.5 / 0.75 / 1 " +
-        s"(true threshold pairs per wave: ${drift.map(_._2).mkString("/")})")
-      println(f"[scale] drift signal (baseline cos $driftBaseline%.4f = base 10%% quantile): " +
-        "stat " + drift.map(r => f"${r._3}%.3f").mkString(" / ") +
-        " at f = 0 / 0.25 / 0.5 / 0.75 / 1 — the response curve recall decisions key on")
-      assert(drift.head._2 >= waveN * 9 / 10,
-        s"fixture sanity: most planted pairs must clear the threshold: ${drift.head._2}/$waveN")
-      assert(drift.head._1 >= 0.95,
-        s"undrifted wave must probe at the section's own planted recall: ${drift.head._1}")
-      // signal validity: a base-distributed wave must score ≈ the quantile
-      // (definition of a quantile), a fully-drifted one must be flagged loudly
-      assert(drift.head._3 <= 0.3,
-        s"base-distributed wave must not trip the drift signal: ${drift.head._3}")
-      assert(drift.last._3 >= 2 * drift.head._3 + 0.2,
-        s"full drift must move the signal decisively: ${drift.head._3} → ${drift.last._3}")
-
-      // ---- the LEVER (r10): rebuild at full drift, recall must recover ----
-      // Same f=1 wave and probes as the last loop iteration (the generators
-      // are deterministic in (f, id)); rebuild re-clusters base ∪ wave and
-      // re-assigns, so the drifted region gets cells of its own.
-      val waveF1 = clustered(spark.range(waveN)
-        .withColumn("id", col("id") + lit(driftBaseN)), 1.0, col("id"))
-      val probesF1 = clustered(spark.range(waveN)
-        .withColumn("id", col("id") + lit(driftBaseN)), 1.0, col("id"), copyNoise = 0.45)
-        .withColumn("vec_id", col("vec_id") + lit(1000000L))
-      val grownF1 = Dedup.appendSemIndex(driftIdx, waveF1)
-      var recallRebuilt = 0.0
-      time(s"semantic index rebuild over ${driftBaseN + waveN} vectors + re-probe") {
-        // nlist 64 → 128: the fully-drifted wave added 64 NEW latent modes,
-        // so the rebuild doubles the cell count (the SemDeDup sizing rule —
-        // cells track corpus modes; rebuilt at the old 64 the recall only
-        // reaches 0.971 because drifted dirs still share cells)
-        val rebuilt = Dedup.rebuildSemIndex(grownF1, nlist = 128)
-        val caughtR = Dedup.incrementalSemantic(probesF1, rebuilt)
-          .filter(!col("keep")).count()
-        recallRebuilt = caughtR.toDouble / drift.last._2
-      }
-      println(f"[scale] rebuild at f=1: recall ${drift.last._1}%.3f without → " +
-        f"$recallRebuilt%.3f with rebuild (${drift.last._2} true pairs)")
-      assert(recallRebuilt >= drift.last._1,
-        s"rebuild must not lose recall: ${drift.last._1} → $recallRebuilt")
-      assert(recallRebuilt >= 0.99,
-        s"rebuild must restore the fresh-training regime (measured 0.997): $recallRebuilt")
-    }
-
-    // ---- crawl round-trip END-TO-END: whole-loop cost vs base size ----
-    // (VERDICT r8 #4 — the claim crawlIncrement's scaladoc makes, measured.)
-    // The SAME 1000-doc delta runs the full stage 1–4 loop (exact probe →
-    // span cut → PII scrub → repetition gate) against the 1× and 10× base
-    // indexes the incremental section just built; if any stage secretly
-    // re-scanned the base, the second run would be ~10× slower. Planted
-    // ground truth per delta doc (kind = id mod 10):
-    //   0 → exact copy of a base target          (must fall at stage 1)
-    //   1 → 29-token span copied from a base target + 15 unique fresh
-    //       tokens                       (survives, n_removed == 29 exactly)
-    //   2 → fresh text + one planted email      (survives, n_emails == 1)
-    //   3 → a PER-DOC token repeated 30×        (must fall at the gate)
-    //   else → fresh                    (survives untouched, n_removed == 0)
-    if (nDocs >= 10000 && sectionOn("crawl")) {
-      import graft.operators.{Dedup, TrainingSet}
-      val deltaN = 1000L
-      val nTargets = (nDocs / 10) / 50
-      val body29 = concat_ws(" ", (0 until 29).map(j =>
-        concat(lit("w"), pmod(xxhash64(col("seed") * lit(31L) + lit(j.toLong)), lit(100000L)))): _*)
-      val lastTok = concat(lit("w"), pmod(xxhash64(col("seed") * lit(31L) + lit(29L)), lit(100000L)))
-      // 15 tail tokens made unique BY CONSTRUCTION (t<id>x<j>): a hash-drawn
-      // tail can repeat a token (~0.1%/doc), and any repeat in a 15-token
-      // survivor trips the 10% top-token gate — the assertion would be flaky
-      val freshTail = concat_ws(" ", (0 until 15).map(j =>
-        concat(lit("t"), col("id"), lit(s"x$j"))): _*)
-      val crawlDelta = spark.range(deltaN)
-        .withColumn("target", pmod(col("id"), lit(nTargets)) * 50L + 2L)
-        .withColumn("kind", pmod(col("id"), lit(10L)))
-        .withColumn("seed",
-          when(col("kind") <= 1L, col("target")).otherwise(col("id") + lit(3L * nDocs)))
-        .withColumn("text",
-          when(col("kind") === 1L, concat_ws(" ", body29, freshTail))
-            .when(col("kind") === 2L,
-              concat_ws(" ", body29, concat(lit("u"), col("id"), lit("@example.com"))))
-            // per-doc repeated token (r<id>, not a shared literal): identical
-            // junk docs would be intra-delta exact-span copies of EACH OTHER,
-            // get fully cut to "" at stage 2, and an empty doc slips the
-            // repetition gate (0 <= 0) — the fixture must make the GATE the
-            // stage that kills them
-            .when(col("kind") === 3L, concat_ws(" ",
-              (0 until 30).map(_ => concat(lit("r"), col("id"))): _*))
-            .otherwise(concat_ws(" ", body29, lastTok))) // kinds 0 and 4–9
-        .select((col("id") + lit(nDocs)).as("doc_id"), col("text"), col("kind"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      crawlDelta.count()
-      val probeDelta = crawlDelta.select("doc_id", "text")
-      val crawlTimes = Seq(nDocs / 10, nDocs).map { baseN =>
-        // the index the incremental section built+wrote this run
-        val idx = Dedup.readIndex(spark, s"/tmp/graft-fixtures/scalebench-incidx-v1-$baseN")
-        val baseDocs = mkDocs(baseN)
-        // the cutFps key-space probe alone (stage 2's detection half): the
-        // r8 redesign that keeps the base-text fetch delta-sized
-        time(s"cutFps span probe: $deltaN-doc delta vs $baseN-doc index") {
-          val cut = Dedup.incrementalCutSpans(
-            crawlDelta.filter(col("kind") === 1L).select("doc_id", "text"),
-            idx, baseDocs).collect()
-          val exact29 = cut.count(_.getLong(2) == 29L)
-          println(s"[scale] cutFps: $exact29/${cut.length} span docs cut exactly 29 tokens")
-          assert(exact29 == deltaN / 10,
-            s"every planted span doc must lose exactly its 29-token run: $exact29")
-        }
-        val t = System.nanoTime()
-        time(s"crawl increment END-TO-END: $deltaN-doc delta vs $baseN-doc base") {
-          val accepted = TrainingSet.crawlIncrement(probeDelta, idx, baseDocs)._1.collect()
-          val byId = accepted.map(r => r.getLong(0) -> r).toMap
-          def kindOf(id: Long) = (id - nDocs) % 10
-          assert(!byId.keys.exists(id => kindOf(id) == 0L), "exact copies must fall at stage 1")
-          assert(!byId.keys.exists(id => kindOf(id) == 3L), "repetition junk must fall at the gate")
-          val spanRows = accepted.filter(r => kindOf(r.getLong(0)) == 1L)
-          assert(spanRows.length == (deltaN / 10).toInt &&
-            spanRows.forall(r => r.getLong(2) == 29L && r.getLong(6) == 15L),
-            s"span docs must survive with exactly 29 removed / 15 kept tokens")
-          val piiRows = accepted.filter(r => kindOf(r.getLong(0)) == 2L)
-          assert(piiRows.length == (deltaN / 10).toInt &&
-            piiRows.forall(r => r.getLong(3) == 1L && r.getString(1).contains("<EMAIL>")),
-            "pii docs must survive scrubbed with n_emails == 1")
-          val fresh = accepted.filter(r => kindOf(r.getLong(0)) >= 4L)
-          assert(fresh.length == (deltaN / 10 * 6).toInt &&
-            fresh.forall(r => r.getLong(2) == 0L && r.getLong(3) == 0L),
-            "fresh docs must survive untouched")
-          println(s"[scale] crawl accepted ${accepted.length}/$deltaN " +
-            s"(${spanRows.length} cut, ${piiRows.length} scrubbed)")
-        }
-        (System.nanoTime() - t) / 1e9
-      }
-      crawlDelta.unpersist()
-      println(f"[scale] crawl loop at 1× vs 10× base: ${crawlTimes.head}%.2f s vs ${crawlTimes.last}%.2f s")
-      assert(crawlTimes.last <= crawlTimes.head * 3 + 2.0,
-        s"the crawl loop must not scale with base size: $crawlTimes")
-    }
-
-    // ---- cross-increment domain quota at corpus scale ----
-    // Two crawl rounds over nDocs docs spread across nDocs/10 domains,
-    // quota 5, prior counts persisted between rounds. Ground truth is the
-    // CONSERVATION invariant the operator exists to enforce: for every
-    // domain, the accepted ranks across both rounds are exactly
-    // 1..min(quota, docs-in-domain) — no slot double-issued after the
-    // round boundary, no domain over quota, no rank gaps. Round 1 takes
-    // every 4th doc BY WITHIN-DOMAIN INDEX (domain = id mod nDomains, so
-    // the within-domain index is id div nDomains — splitting on id mod 4
-    // would put every domain wholly in one round, since nDomains is
-    // divisible by 4 and id mod 4 is then constant per domain; ADVICE r9).
-    // Each domain lands ~2-3 docs in round 1 and enters round 2 PARTIALLY
-    // full — both the lockout and the remaining-slots paths run hot at
-    // scale.
-    if (nDocs >= 10000 && sectionOn("quota")) {
-      import graft.operators.Corpus
-      val nDomains = nDocs / 10
-      val quota = 5
-      def quotaDocs(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-        mkDocs(nDocs).filter(pred(col("doc_id")))
-          .withColumn("domain", concat(lit("d"), pmod(col("doc_id"), lit(nDomains.toLong))))
-      val countsDir = s"/tmp/graft-fixtures/scalebench-quota-counts-$nDocs"
-      def withinDomainIdx(id: org.apache.spark.sql.Column) =
-        ((id - pmod(id, lit(nDomains.toLong))) / lit(nDomains.toLong)).cast("long")
-      val r1 = quotaDocs(id => pmod(withinDomainIdx(id), lit(4L)) === 0L)
-      val r2 = quotaDocs(id => pmod(withinDomainIdx(id), lit(4L)) =!= 0L)
-      var kept1: org.apache.spark.sql.DataFrame = null
-      time(s"cross-increment quota round 1: ${nDocs / 4} docs, $nDomains domains") {
-        val (k, c) = Corpus.domainQuotaIncrement(
-          r1, Corpus.emptyDomainCounts(spark), quota)
-        kept1 = k.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        kept1.count()
-        Corpus.writeDomainCounts(c, countsDir)
-      }
-      time(s"cross-increment quota round 2: ${nDocs - nDocs / 4} docs vs persisted counts") {
-        val (k2, _) = Corpus.domainQuotaIncrement(
-          r2, Corpus.readDomainCounts(spark, countsDir), quota)
-        val ranks = kept1.select("domain", "rk").unionByName(k2.select("domain", "rk"))
-        // conservation: per domain, ranks are exactly 1..min(quota, n_docs)
-        val bad = ranks.groupBy("domain")
-          .agg(count(lit(1)).as("n"), min("rk").as("lo"), max("rk").as("hi"),
-            countDistinct("rk").as("nd"))
-          .join(quotaDocs(_ => lit(true)).groupBy("domain")
-            .agg(count(lit(1)).as("avail")), Seq("domain"))
-          .filter(col("lo") =!= 1L || col("hi") =!= col("n") || col("nd") =!= col("n") ||
-            col("n") =!= least(lit(quota.toLong), col("avail")))
-          .count()
-        val total = ranks.count()
-        // fixture sanity (ADVICE r9): the conservation assert is only a
-        // test of cross-round carry if domains actually SPAN the boundary —
-        // accepted in round 1 AND in round 2. With the within-domain split
-        // every domain should; demand at least 90% do.
-        val spanning = kept1.select("domain").distinct()
-          .join(k2.select("domain").distinct(), "domain").count()
-        assert(spanning >= nDomains * 9L / 10,
-          s"split vacuous: only $spanning/$nDomains domains span the round boundary")
-        println(s"[scale] quota: $total accepted across both rounds, $bad domains violate " +
-          s"conservation, $spanning/$nDomains span the boundary")
-        assert(bad == 0L, s"$bad domains violate the cross-round quota invariant")
-      }
-      kept1.unpersist()
-    }
-
-    // ---- registrable-domain (eTLD+1) extraction: probe chain vs hash join ----
-    // The VERDICT r9 constant: the probe chain's per-row cost is
-    // O(maxRuleLabels × |rules|) linear string compares, the join path's is
-    // O(maxRuleLabels) hash probes — independent of rule count. Measured
-    // here at the shipped 90-rule snapshot AND a synthetic ~13.7k-rule list
-    // (real-PSL-sized), on hosts at 1× and 10×, with a correctness echo
-    // (non-null counts must agree between paths; full bit-equality is
-    // CorpusSpec's job). The numbers behind PslJoinMinRules' value.
-    if (nDocs >= 10000 && sectionOn("psl")) {
-      import graft.operators.Corpus
-      val bigRules = (0 until 9500).flatMap { i =>
-        val base = s"s$i.t${i % 200}"
-        Seq(base) ++ (if (i % 3 == 0) Seq(s"*.$base") else Nil) ++
-          (if (i % 9 == 0) Seq(s"!exc.$base") else Nil)
-      }
-      import spark.implicits._
-      val bigPsl = bigRules.toDF("rule")
-      val snapPsl = graft.sources.PslSnapshot.df(spark)
-      // hosts hit the synthetic rule space ~5/6 of the time at depths 1–6
-      def mkHosts(n: Long) = spark.range(n)
-        .withColumn("i", pmod(xxhash64(col("id")), lit(10000L)))
-        .withColumn("base", concat(lit("s"), col("i"), lit(".t"), pmod(col("i"), lit(200L))))
-        .withColumn("domain",
-          when(pmod(col("id"), lit(6L)) === 0L, col("base"))
-            .when(pmod(col("id"), lit(6L)) === 1L, concat(lit("reg."), col("base")))
-            .when(pmod(col("id"), lit(6L)) === 2L, concat(lit("a.b.reg."), col("base")))
-            .when(pmod(col("id"), lit(6L)) === 3L, concat(lit("exc."), col("base")))
-            .when(pmod(col("id"), lit(6L)) === 4L, concat(lit("x.exc."), col("base")))
-            .otherwise(concat(lit("u"), col("id"), lit(".example.org"))))
-        .select(col("id").as("doc_id"), col("domain"))
-      def measure(tag: String, f: => Long): (Double, Long) = {
-        var n = 0L
-        val t = System.nanoTime()
-        time(tag) { n = f }
-        ((System.nanoTime() - t) / 1e9, n)
-      }
-      def probe(hosts: org.apache.spark.sql.DataFrame,
-                psl: org.apache.spark.sql.DataFrame, maxK: Int): Long =
-        Corpus.registrableDomainProbe(hosts, psl, maxRuleLabels = maxK)
-          .agg(count(col("reg_domain"))).head().getLong(0)
-      def join(hosts: org.apache.spark.sql.DataFrame,
-               psl: org.apache.spark.sql.DataFrame): Long =
-        Corpus.registrableDomainJoin(hosts, psl)
-          .agg(count(col("reg_domain"))).head().getLong(0)
-      val nHosts = nDocs // 100k at the default 100M-row run
-      val h1 = mkHosts(nHosts)
-      val hSmall = mkHosts(nHosts / 10)
-      val nR = bigRules.size
-      val (p90, c90p) = measure(s"eTLD+1 probe chain: $nHosts hosts × 90 rules", probe(h1, snapPsl, 6))
-      val (j90, c90j) = measure(s"eTLD+1 hash join: $nHosts hosts × 90 rules", join(h1, snapPsl))
-      // the probe chain at real-PSL rule count runs on 10× FEWER hosts — a
-      // first cut at 1× hosts did not finish inside a 9-minute budget (the
-      // per-row constant this section exists to show); the join/probe
-      // comparison below is therefore a ≥10× claim, not a ratio estimate
-      val (pBigS, cBigPS) =
-        measure(s"eTLD+1 probe chain: ${nHosts / 10} hosts × $nR rules", probe(hSmall, bigPsl, 4))
-      val (jBigS, cBigJS) =
-        measure(s"eTLD+1 hash join: ${nHosts / 10} hosts × $nR rules", join(hSmall, bigPsl))
-      val (jBig, _) = measure(s"eTLD+1 hash join: $nHosts hosts × $nR rules", join(h1, bigPsl))
-      assert(c90j == c90p && cBigJS == cBigPS,
-        s"paths disagree: ($c90p,$c90j) ($cBigPS,$cBigJS)")
-      println(f"[scale] psl summary: 90 rules/$nHosts hosts probe $p90%.2f s vs join $j90%.2f s; " +
-        f"$nR rules probe $pBigS%.2f s (${nHosts / 10} hosts) vs join $jBigS%.2f s; " +
-        f"join at $nHosts hosts $jBig%.2f s")
-      // the dispatch's reason to exist: the join path on 10× MORE hosts must
-      // still beat the probe chain at real-PSL rule count
-      assert(jBig <= pBigS + 2.0,
-        s"join at 10x hosts must beat the probe chain at ~$nR rules: $jBig vs $pBigS")
-      // crossover evidence for PslJoinMinRules: the join wins already at the
-      // 90-rule snapshot (measured 19× in the r10 run that set the value)
-      assert(j90 <= p90, s"join must beat the probe chain even at 90 rules: $j90 vs $p90")
-      // rule-count independence: the join path at 152× the rules stays
-      // within noise of itself at 90 rules (same hosts)
-      assert(jBig <= j90 * 3 + 2.0,
-        s"join path cost must not scale with rule count: $j90 → $jBig")
-    }
-
-    // ---- N-ROUND CRAWL SOAK (VERDICT r9 #5): the full loop composed over
-    // a campaign ----
-    // 10 rounds of the COMPLETE batch function (probe → cut → scrub → gate
-    // → LM → eTLD+1 quota → append, exactly what the streaming loop runs)
-    // at a fixed 1000-doc delta against a persisted, growing index store.
-    // Per round the delta is stationary by construction: 100 re-crawls of
-    // base docs (must fall at stage 1 EVERY round — the index never
-    // forgets), 200 link-farm docs over 5 domains (quota 40 per domain
-    // binds after ~3 rounds of LM-halved intake, then stays locked — the
-    // cross-round carry under test), 700 organic docs over 100 domains
-    // (quota 60 > 10 rounds x 7 docs never binds; their acceptance rate
-    // isolates the LM gate).
-    // Asserted: per-round wall-clock flat while the index grows, EXACT
-    // cumulative quota conservation (counts table == accepted totals, no
-    // domain over quota, farms actually reach it), zero re-crawl leaks,
-    // and a stable LM acceptance rate on stationary organic input.
-    if (nDocs >= 10000 && sectionOn("soak")) {
-      import graft.operators.{Corpus, Dedup}
-      import graft.streaming.StreamingOps
-      val soakRounds = 10
-      val soakBaseN = nDocs / 10
-      val (nFarmDoms, farmPerRound, soakQuota) = (5, 200L, 60)
-      val (nOrgDoms, orgPerRound) = (100, 700L)
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft-soak").toString
-      val (root, out) = (s"$tmpRoot/index", s"$tmpRoot/accepted")
-      val soakBase = mkDocs(soakBaseN)
-      StreamingOps.seedCrawlIndex(Dedup.buildIndex(soakBase), root)
-      val lm = Corpus.trainLmModel(soakBase)
-      def soakDeltaDf(r: Int): org.apache.spark.sql.DataFrame = {
-        val fresh = spark.range(farmPerRound + orgPerRound)
-          .withColumn("doc_id", lit(1000000L) + lit(r * 10000L) + col("id"))
-          .withColumn("seed", xxhash64(col("doc_id"), lit("soak")))
-          // tokens drawn from the SAME "w<h>" space the base corpus (and
-          // therefore the LM model's vocab) uses — a first cut used an
-          // "s" prefix, every token was OOV, every doc scored the identical
-          // backoff surprisal, and the LM gate degenerated to keep-all
-          .withColumn("text", concat_ws(" ", (0 until 30).map(j =>
-            concat(lit("w"), pmod(xxhash64(col("seed") + lit(j.toLong)), lit(100000L)))): _*))
-          // each domain is its OWN registrable domain (farm3.com, w42.net)
-          // so the r10 eTLD+1 default keeps the intended keys — a first cut
-          // used farmN.example.com and the quota correctly collapsed ALL
-          // farms to the single registrant example.com (the default doing
-          // its job, the wrong fixture)
-          .withColumn("domain",
-            when(col("id") < farmPerRound,
-              concat(lit("farm"), pmod(col("id"), lit(nFarmDoms.toLong)), lit(".com")))
-              .otherwise(concat(lit("w"), pmod(col("id"), lit(nOrgDoms.toLong)), lit(".net"))))
-          .select("doc_id", "text", "domain")
-        val re = soakBase
-          .filter(col("doc_id") >= r * 100L && col("doc_id") < r * 100L + 100L)
-          .select((col("doc_id") + lit(2000000L)).as("doc_id"), col("text"),
-            concat(lit("re"), col("doc_id"), lit(".com")).as("domain"))
-        fresh.unionByName(re)
-      }
-      // the tokenizer-health sidecar rides every soak round (r11): model
-      // trained once on the base, baseline persisted-in-memory — stationary
-      // deltas must keep the signal quiet for the whole campaign (the loud
-      // case is pinned in StreamingCrawlSpec; HERE the claim is no false
-      // alarms and flat per-round monitor cost)
-      val soakBpe = graft.operators.Tokenizer.trainBpe(soakBase, numMerges = 200,
-        maxWords = 1 << 15)
-      val soakBpeBase = graft.operators.Tokenizer.bpeBaseline(soakBase, soakBpe, k = 100)
-      val fn = StreamingOps.crawlIncrementBatchFn(root, soakBase, out,
-        lmModel = Some(lm), domainQuota = Some(("domain", soakQuota)),
-        bpeMonitor = Some((soakBpe, soakBpeBase)))
-      // per-round PROVENANCE (VERDICT r10 next #5): JVM-wide GC and JIT
-      // compilation time deltas alongside each round's wall-clock, so an
-      // excursion is attributed with numbers instead of called "a one-off".
-      // (JIT runs on compiler threads, so its wall impact is indirect —
-      // interpreted/deoptimized execution while hot paths compile — but a
-      // round whose wall spike coincides with a compilation-time spike and
-      // whose successors return to band IS warm-up, not a cost model.)
-      val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-      def gcMs: Long = {
-        var s = 0L; gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime)); s
-      }
-      val soakProv = (0 until soakRounds).map { r =>
-        val g0 = gcMs; val j0 = jitBean.getTotalCompilationTime
-        val t = System.nanoTime()
-        time(s"crawl soak round $r (1000-doc delta, growing index)") {
-          fn(soakDeltaDf(r), r.toLong)
-        }
-        val wall = (System.nanoTime() - t) / 1e9
-        ((wall, gcMs - g0), jitBean.getTotalCompilationTime - j0)
-      }
-      val soakTimes = soakProv.map(_._1._1)
-      println("[scale] soak provenance per round (GC ms / JIT ms): " +
-        soakProv.map { case ((_, g), j) => s"$g/$j" }.mkString(" "))
-      // stationary campaign ⇒ the tokenizer monitor must stay quiet on
-      // EVERY round (no false alarms over a 10-round horizon)
-      val bpeSeries = (0 until soakRounds).map { r =>
-        val row = spark.read.parquet(s"$root/v$r/bpe_drift").collect()(0)
-        (row.getAs[Double]("head_distance"), row.getAs[Double]("fertility"))
-      }
-      println("[scale] soak tokenizer monitor (head distance / fertility): " +
-        bpeSeries.map { case (h, f) => f"$h%.2f/$f%.2f" }.mkString(" "))
-      assert(bpeSeries.forall { case (h, f) =>
-        h <= 0.25 && math.abs(f - soakBpeBase.fertility) <= 0.4 },
-        s"stationary input must not trip the tokenizer monitor: $bpeSeries")
-      val all = spark.read.parquet((0 until soakRounds).map(r => s"$out/batch=$r"): _*)
-        .withColumn("batch",
-          regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("int"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // zero re-crawl leaks across the whole campaign
-      val leaks = all.filter(col("doc_id") >= 2000000L).count()
-      assert(leaks == 0L, s"$leaks re-crawled base docs leaked past the grown index")
-      // cumulative quota conservation: rebuild each doc's domain from its id
-      // (same expressions as the generator), then compare per-domain totals
-      // to the final counts table — EXACT equality, no domain over quota
-      val idInRound = (col("doc_id") - 1000000L) % 10000L
-      val domOf = when(idInRound < farmPerRound,
-          concat(lit("farm"), pmod(idInRound, lit(nFarmDoms.toLong)), lit(".com")))
-        .otherwise(concat(lit("w"), pmod(idInRound, lit(nOrgDoms.toLong)), lit(".net")))
-      val perDom = all.withColumn("domain", domOf)
-        .groupBy("domain").agg(count(lit(1)).as("n_acc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val over = perDom.filter(col("n_acc") > soakQuota).count()
-      assert(over == 0L, s"$over domains exceeded the cumulative quota")
-      // farms must REACH the quota — the cross-round carry genuinely
-      // binds — all 5 at exactly the cap.
-      val farmsAtQuota = perDom
-        .filter(col("domain").startsWith("farm") && col("n_acc") === soakQuota).count()
-      assert(farmsAtQuota == nFarmDoms.toLong,
-        s"every farm domain must reach quota: $farmsAtQuota/$nFarmDoms")
-      val counts = Corpus.readDomainCounts(spark,
-        s"$root/v${soakRounds - 1}/domain_counts")
-      val mismatch = perDom.join(counts, Seq("domain"), "full")
-        .filter(coalesce(col("n_acc"), lit(-1L)) =!= coalesce(col("n_accepted"), lit(-2L)))
-        .count()
-      assert(mismatch == 0L,
-        s"$mismatch domains where the persisted counts disagree with accepted totals")
-      // LM-gate stability on stationary organic input: per-round acceptance
-      // of the 700 organic docs must hover around one level (the LM keeps
-      // docs at-or-below the increment's own mean surprisal)
-      val orgRates = all.filter(idInRound >= farmPerRound)
-        .groupBy("batch").agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1).toDouble / orgPerRound).toMap
-      val rates = (0 until soakRounds).map(r => orgRates.getOrElse(r, 0.0))
-      val mean = rates.sum / rates.size
-      println("[scale] soak: organic acceptance per round " +
-        rates.map(x => f"$x%.2f").mkString(" / ") + f" (mean $mean%.2f)")
-      assert(rates.forall(x => math.abs(x - mean) <= 0.15),
-        s"organic acceptance must be stable on stationary input: $rates")
-      println(f"[scale] soak wall-clock per round: " +
-        soakTimes.map(x => f"$x%.1f").mkString(" / ") + " s")
-      val early = soakTimes.slice(1, 4).sum / 3
-      val late = soakTimes.slice(soakRounds - 3, soakRounds).sum / 3
-      assert(late <= early * 3 + 2.0,
-        s"per-round cost must stay flat as the index grows: early $early late $late")
-      all.unpersist(); perDom.unpersist()
-
-      // ---- BPE retrain-on-trip at soak scale (r12) ----
-      // The stationary campaign above proves NO false alarms; this proves
-      // the LEVER: a separate 3-round store (same base, same trained model)
-      // where round 0 stays in-distribution (quiet), round 1 swaps the
-      // vocabulary (all-letter words the digit-trained merges cannot touch
-      // — fertility spikes past the 1.3× trip, the loop retrains on the
-      // grown corpus and re-pins the store), and round 2 continues the NEW
-      // distribution (measured under the retrained model: quiet again).
-      // The swapped vocab is small (100 words behind a shared zzzz prefix)
-      // so the 600-merge budget demonstrably re-covers it — the assertion
-      // is recovery, not just churn.
-      time("bpe retrain-on-trip at soak scale (quiet / trip+retrain / recovered)") {
-        import graft.operators.Tokenizer
-        val rtRoot = s"$tmpRoot/rt-index"; val rtOut = s"$tmpRoot/rt-accepted"
-        StreamingOps.seedCrawlIndex(Dedup.buildIndex(soakBase), rtRoot)
-        val rtFn = StreamingOps.crawlIncrementBatchFn(rtRoot, soakBase, rtOut,
-          bpeMonitor = Some((soakBpe, soakBpeBase)),
-          bpeRetrainAt = 1.3, bpeNumMerges = 600)
-        def rtWave(r: Int, swapped: Boolean) = {
-          val tok = (j: Int) => {
-            val h = pmod(xxhash64(col("seed") + lit(j.toLong)), lit(if (swapped) 100L else 100000L))
-            if (swapped)
-              concat(lit("zzzz"), translate(h.cast("string"), "0123456789", "qwertyuiop"))
-            else concat(lit("w"), h)
-          }
-          spark.range(1000)
-            .withColumn("doc_id", lit(3000000L) + lit(r * 10000L) + col("id"))
-            .withColumn("seed", xxhash64(col("doc_id"), lit("rt")))
-            .withColumn("text", concat_ws(" ", (0 until 30).map(tok): _*))
-            .select("doc_id", "text")
-        }
-        Seq(false, true, true).zipWithIndex.foreach { case (sw, r) =>
-          rtFn(rtWave(r, sw), r.toLong)
-        }
-        def side(v: Int) = {
-          val row = spark.read.parquet(s"$rtRoot/v$v/bpe_drift").collect()(0)
-          (row.getAs[Double]("baseline_fertility"), row.getAs[Double]("fertility"),
-            row.getAs[Boolean]("retrained"), row.getAs[String]("active_model_md5"))
-        }
-        val (bf0, f0, rt0, act0) = side(0)
-        val (_, f1, rt1, act1) = side(1)
-        val (bf2, f2, rt2, act2) = side(2)
-        println(f"[scale] retrain series (baseline->fertility, retrained): " +
-          f"$bf0%.2f->$f0%.2f/$rt0  $bf0%.2f->$f1%.2f/$rt1  $bf2%.2f->$f2%.2f/$rt2")
-        assert(!rt0 && f0 < 1.3 * bf0, s"in-distribution round must stay quiet: $bf0 -> $f0")
-        assert(act0 == soakBpe.fingerprint, "quiet round keeps the seed model")
-        assert(rt1 && f1 >= 1.3 * bf0, s"swapped wave must trip: $bf0 -> $f1")
-        assert(act1 != soakBpe.fingerprint, "retrain must re-pin a new identity")
-        assert(!rt2 && f2 < 1.3 * bf2,
-          s"post-retrain round must measure quiet under the new model: $bf2 -> $f2")
-        assert(act2 == act1, "the retrained model stays active")
-        val m2 = Tokenizer.readBpeModel(spark, s"$rtRoot/v2/bpe_model")
-        assert(m2.fingerprint == act1, "store's model must match the sidecar identity")
-      }
-    }
-
-    // ---- incremental IMAGE dedup: probe cost vs base size ----
-    // The fifth key space's flat-probe claim: a fixed delta of near-dup
-    // re-renders probed against a persisted MediaIndex must cost ~the delta
-    // whether the index holds nImgs/10 or nImgs hashes — base PAYLOADS are
-    // decoded once at build (the timed O(base) construction line) and never
-    // again at probe. Planted ground truth: the delta is the % 10 == 1
-    // re-renders (brightness shift / JPEG requant of id-1) drawn from the
-    // SMALL corpus, so every target original lives in both bases; each
-    // delta image must surface exactly its original within Hamming 3.
-    if (nDocs >= 10000 && sectionOn("image")) {
-      import graft.operators.Multimodal
-      val nImgs = (rows / 10000L).toInt // 10k images for the default 100M run
-      val deltaImgs = Multimodal.syntheticImageDups(spark, nImgs / 10)
-        .filter((r: Multimodal.MediaRecord) => r.media_id % 10 == 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val deltaN = deltaImgs.count() // nImgs/100
-      val imgTimes = Seq(nImgs / 10, nImgs).map { baseN =>
-        // v2: the index schema gained the column-gradient twin `hv` in r10
-        val idxDir = s"/tmp/graft-fixtures/scalebench-mediaidx-v2-$baseN"
-        time(s"build+write media index over ~$baseN images (decode once, O(base))") {
-          Multimodal.writeMediaIndex(
-            Multimodal.buildMediaIndex(
-              Multimodal.syntheticImageDups(spark, baseN)
-                .filter((r: Multimodal.MediaRecord) => r.media_id % 10 != 1)), idxDir)
-        }
-        val idx = Multimodal.readMediaIndex(spark, idxDir)
-        val t = System.nanoTime()
-        time(s"image probe: $deltaN-image delta vs ~$baseN-image index") {
-          val got = Multimodal.incrementalImageNearDup(deltaImgs, idx)
-            .collect().map(r => (r.getLong(0), r.getLong(1)))
-          val planted = got.count(p => p._2 == p._1 - 1)
-          println(s"[scale] image probe: $planted/$deltaN planted originals found, ${got.length} total")
-          assert(planted == deltaN, s"every re-render must find its original: $planted/$deltaN")
-          // dHash's documented false-positive floor (see ImageDedupSpec):
-          // bound accidental collisions, don't assert zero
-          assert(got.length - planted <= deltaN, s"collision blowup: ${got.length - planted}")
-        }
-        (System.nanoTime() - t) / 1e9
-      }
-      deltaImgs.unpersist()
-      println(f"[scale] image probe at 1× vs 10× base: ${imgTimes.head}%.2f s vs ${imgTimes.last}%.2f s")
-      assert(imgTimes.last <= imgTimes.head * 3 + 2.0,
-        s"image delta probe must not scale with base size: $imgTimes")
-
-      // ---- DUAL-signature tier (r10): stripe edits, same flat-probe bar ----
-      // The delta is the % 10 == 1 vertical-stripe edits — damage the
-      // row-gradient dHash cannot hold within radius (MediaIndexSpec) —
-      // probed via chunks of EITHER signature against the same persisted
-      // index files the loop above wrote. Every edit must surface its
-      // original, and the probe must stay flat in base size.
-      val editDelta = Multimodal.syntheticImageEdits(spark, nImgs / 10)
-        .filter((r: Multimodal.MediaRecord) => r.media_id % 10 == 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val editN = editDelta.count()
-      val dualTimes = Seq(nImgs / 10, nImgs).map { baseN =>
-        val idx = Multimodal.readMediaIndex(spark,
-          s"/tmp/graft-fixtures/scalebench-mediaidx-v2-$baseN")
-        val t = System.nanoTime()
-        time(s"dual-signature probe: $editN-edit delta vs ~$baseN-image index") {
-          val got = Multimodal.incrementalImageNearDupDual(editDelta, idx)
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          val planted = got.filter(p => p._2 == p._1 - 1)
-          val beyond = planted.count(_._3 > 3)
-          println(s"[scale] dual probe: ${planted.length}/$editN edits found " +
-            s"($beyond beyond the dHash radius — single-hash misses), ${got.length} total")
-          assert(planted.length == editN,
-            s"every stripe edit must find its original: ${planted.length}/$editN")
-          assert(beyond * 2 >= editN,
-            s"fixture sanity: most edits must sit beyond the dHash radius: $beyond/$editN")
-          assert(got.length - planted.length <= editN * 2L,
-            s"collision blowup: ${got.length - planted.length}")
-        }
-        (System.nanoTime() - t) / 1e9
-      }
-      editDelta.unpersist()
-      println(f"[scale] dual probe at 1× vs 10× base: ${dualTimes.head}%.2f s vs ${dualTimes.last}%.2f s")
-      assert(dualTimes.last <= dualTimes.head * 3 + 2.0,
-        s"dual probe must not scale with base size: $dualTimes")
-    }
-
-    // ---- DSIR data selection at corpus scale: target-vs-raw reweighting ----
-    // Raw pool: nDocs docs over TWO disjoint 2000-word vocabularies — even
-    // ids speak the target's "a" vocab, odd ids the junk "b" vocab (a 50/50
-    // pool). The target model trains on a HELD-OUT a-vocab corpus with
-    // disjoint seeds, so selection must generalize the DISTRIBUTION, not
-    // match documents; the raw model trains on the pool itself (the paper's
-    // q). Planted truth: weights must separate the halves, and the selected
-    // set's target-vocab token mass — the quantity DSIR exists to raise —
-    // must approach 1 from the pool's 0.5.
-    if (nDocs >= 1000 && sectionOn("dsir")) {
-      import graft.operators.Corpus
-      def vocabDoc(vocab: String, seedCol: org.apache.spark.sql.Column) =
-        concat_ws(" ", (0 until 30).map(j => concat(lit(vocab),
-          pmod(xxhash64(seedCol * lit(37L) + lit(j.toLong)), lit(2000L)))): _*)
-      val pool = spark.range(nDocs)
-        .withColumn("text", when(pmod(col("id"), lit(2L)) === 0L,
-          vocabDoc("a", col("id"))).otherwise(vocabDoc("b", col("id"))))
-        .select(col("id").as("doc_id"), col("text"))
-      // target train is pool-SIZED: the likelihood ratio needs comparable
-      // model capacity on both sides — a 10× smaller target split was
-      // measured to shift ALL weights negative (the raw model's richer
-      // bigram coverage under-prices its own pool), which is the known
-      // estimator bias the paper avoids with equal feature smoothing
-      val targetTrain = spark.range(nDocs, 2L * nDocs)
-        .withColumn("text", vocabDoc("a", col("id")))
-        .select(col("id").as("doc_id"), col("text"))
-      val tm = Corpus.trainLmModel(targetTrain)
-      val rm = Corpus.trainLmModel(pool)
-      // Expected weight scale, from the estimator itself: the pool's
-      // a-half IS target-distributed, so its true per-token advantage is
-      // the mixture weight, log₂(1/0.5) = +1 bit (floor-log2 quantization
-      // straddles it around 0); junk tokens are unseen by the target model
-      // → ≈ −9 bits each. The graded property is the ~10-bit-per-token
-      // SEPARATION, not absolute sign — a doc's weight against the pool
-      // mean is what resampling consumes.
-      // NOTE both sections retrain the two models inline (uni/big are lazy
-      // frames — the ~88 MB shuffle is the bigram count groupBys, O(distinct
-      // bigrams)); the REGISTERED queries score against persisted fixture
-      // models, where scoring alone is the 4-broadcast-join O(docs) plan
-      time(s"DSIR weights incl. inline model training: $nDocs-doc pool") {
-        val sep = Corpus.dsirBits(pool, tm, rm)
-          .groupBy(pmod(col("doc_id"), lit(2L)).as("half"))
-          .agg(count(lit(1)).as("n"), avg("dsir_bits").as("mean"),
-            min("dsir_bits").as("lo"), max("dsir_bits").as("hi"))
-          .collect().map(r => r.getLong(0) ->
-            (r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4))).toMap
-        val a = sep(0L); val b = sep(1L)
-        println(f"[scale] dsir separation: target-vocab mean ${a._2}%.1f bits/doc " +
-          f"[${a._3},${a._4}] vs junk ${b._2}%.1f [${b._3},${b._4}] " +
-          f"(n = ${a._1}/${b._1})")
-        // total separation: the WORST target-vocab doc must outweigh the
-        // BEST junk doc (at 30 tokens the halves sit ~300 bits apart)
-        assert(a._3 > b._4,
-          s"weight ranges must not overlap: a-min ${a._3} vs b-max ${b._4}")
-        assert(a._2 - b._2 >= 100,
-          s"means must separate by ≥ 100 bits/doc: ${a._2} vs ${b._2}")
-      }
-      time(s"DSIR select incl. inline model training: $nDocs-doc pool") {
-        val sel = graft.operators.Materialize.share(
-          Corpus.dsirSelect(pool, tm, rm).filter(col("keep")))
-        // target-vocab token MASS of the selected set (docs are uniform
-        // 30-token, so doc counts are token mass): the paper's metric is
-        // "selected distribution closer to target" — with disjoint
-        // vocabularies that collapses to this fraction, exactly computable.
-        // Resampling keeps ∝ 2^tok_bits: the a-half (tok_bits ≈ 0±1) keeps
-        // roughly half-to-all, the junk half (≈ −9) keeps ~2^-9 — the
-        // selected mixture swings from 0.5 to ≈ 1 target mass.
-        val m = sel.groupBy(pmod(col("doc_id"), lit(2L)).as("half"))
-          .agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val kept = (m.getOrElse(0L, 0L), m.getOrElse(1L, 0L))
-        val frac = kept._1.toDouble / math.max(1L, kept._1 + kept._2)
-        println(f"[scale] dsir selected ${kept._1 + kept._2} docs: target-vocab " +
-          f"mass $frac%.3f (pool: 0.500), target acceptance " +
-          f"${kept._1 * 2.0 / nDocs}%.3f, junk acceptance ${kept._2 * 2.0 / nDocs}%.4f")
-        assert(frac >= 0.98, s"selection must concentrate target mass: $frac")
-        assert(kept._1 >= (nDocs / 2) * 3L / 10,
-          s"a meaningful share of the target half must survive: ${kept._1}/${nDocs / 2}")
-        assert(kept._2 <= (nDocs / 2) / 50,
-          s"junk acceptance must collapse: ${kept._2}/${nDocs / 2}")
-        sel.unpersist()
-      }
-    }
-
-    // ---- BPE tokenizer at corpus scale: capped training, map-side encode ----
-    // The trainer's distributed half is ONE TakeOrderedAndProject word
-    // count; the merge loop runs driver-side over the top-32k word table
-    // (the documented O(numMerges × vocab) cost, paid once per tokenizer).
-    // Encoding is a pure projection. Invariant: every word encodes to ≥ 1
-    // subword, so the BPE total can never undercut the whitespace total.
-    if (nDocs >= 1000 && sectionOn("bpe")) {
-      var bpeM: graft.operators.BpeModel = null
-      time(s"BPE train: top-32k word table from $nDocs docs + 200-merge driver loop") {
-        bpeM = graft.operators.Tokenizer.trainBpe(
-          docs, numMerges = 200, maxWords = 1 << 15)
-        assert(bpeM.merges.length == 200, s"got ${bpeM.merges.length} merges")
-      }
-      time(s"BPE encode: count $nDocs docs map-side") {
-        val agg = graft.operators.Tokenizer.bpeTokenCounts(docs, bpeM)
-          .agg(sum("n_bpe_tokens"), sum("n_tokens"), count(lit(1))).head()
-        println(f"[scale] bpe: ${agg.getLong(0)} subword tokens over " +
-          f"${agg.getLong(1)} words (${agg.getLong(0).toDouble / agg.getLong(1)}%.2f " +
-          "subwords/word at 200 merges)")
-        assert(agg.getLong(2) == nDocs)
-        assert(agg.getLong(0) >= agg.getLong(1),
-          "every word is >= 1 subword — the BPE total cannot undercut words")
-      }
-      // ---- tokenizer drift response curve (VERDICT r10 missing #2): fresh
-      // waves with a fraction f of tokens drawn from an UNSEEN letter
-      // vocabulary (digits translated to letters so no trained merge fires
-      // on them). The signal must stay quiet at f=0 and saturate at f=1 —
-      // the same shape contract as the SemIndex/AnnIndex drift stats; the
-      // retrain lever is trainBpe on the grown corpus.
-      time("BPE drift curve: head distance + fertility at f = 0 / 0.25 / 0.5 / 1") {
-        def mkFresh(f: Double) = spark.range(nDocs / 10)
-          .withColumn("text", concat_ws(" ", (0 until 30).map { j =>
-            val tok = concat(lit("w"),
-              pmod(xxhash64(col("id") * lit(37L) + lit(j.toLong)), lit(100000L)))
-            val drifted = translate(concat(lit("v"),
-              pmod(xxhash64(col("id") * lit(41L) + lit(j.toLong)), lit(100000L))),
-              "0123456789", "ghijklmnop")
-            when(pmod(xxhash64(col("id") * lit(43L) + lit(j.toLong)), lit(100L))
-              < lit(math.round(f * 100)), drifted).otherwise(tok)
-          }: _*))
-          .select(col("id").as("doc_id"), col("text"))
-        val curve = Seq(0.0, 0.25, 0.5, 1.0).map { f =>
-          f -> graft.operators.Tokenizer.bpeDrift(docs, mkFresh(f), bpeM, k = 100)
-        }
-        curve.foreach { case (f, d) =>
-          println(f"[scale] bpe drift f=$f%.2f: head distance ${d.headDistance}%.3f, " +
-            f"fertility ${d.fertilityTrained}%.3f -> ${d.fertilityFresh}%.3f")
-        }
-        val d0 = curve.head._2; val d1 = curve.last._2
-        assert(d0.headDistance <= 0.15,
-          s"stationary wave must keep the head: ${d0.headDistance}")
-        assert(math.abs(d0.fertilityFresh - d0.fertilityTrained) <= 0.15,
-          s"stationary fertility must stay flat: $d0")
-        assert(d1.headDistance >= 0.5,
-          s"swapped vocabulary must turn the head over: ${d1.headDistance}")
-        assert(d1.fertilityFresh >= d1.fertilityTrained + 0.3,
-          s"unseen words must fragment: $d1")
-        assert(curve.map(_._2.headDistance).sliding(2).forall(p => p(0) <= p(1) + 0.05),
-          s"head distance must respond monotonically: ${curve.map(_._2.headDistance)}")
-      }
-    }
-
-    // ---- training-set assembly at corpus scale ----
-    // guarded like the bucket assertions above: a tiny CLI run (nDocs < 100)
-    // has too few planted clones / docs for the recall and invariant checks
-    if (nDocs >= 100 && sectionOn("train")) {
-      // decontamination: every 50th doc is the "benchmark" split; its clone
-      // (id ≡ 1 mod 50, sharing 28 of 30 shingles with id-1) MUST be flagged —
-      // the planted ground truth makes recall checkable, not just timeable
-      time(s"decontaminate ${nDocs} docs against the 1-in-50 benchmark split") {
-        import graft.operators.TrainingSet
-        val flagged = TrainingSet.decontaminate(
-          docs.filter(pmod(col("doc_id"), lit(50L)) =!= 0L),
-          docs.filter(pmod(col("doc_id"), lit(50L)) === 0L)).collect()
-        val planted = flagged.count(r => r.getLong(0) % 50 == 1)
-        val expected = ((nDocs - 2) / 50 + 1).toInt
-        println(s"[scale] decontaminate: ${flagged.length} flagged, $planted/$expected planted clones")
-        assert(planted >= expected, s"planted clones must all be flagged: $planted/$expected")
-      }
-      // sequence packing: the distributed prefix sum over the whole corpus;
-      // verified by the invariant total(last) = sum of all token counts
-      time(s"pack ${nDocs} docs into 2048-token windows (distributed prefix sum)") {
-        import graft.operators.TrainingSet
-        val packed = TrainingSet.packSequences(docs, capTokens = 2048)
-        val Array(last) = packed.orderBy(col("start_offset").desc).limit(1).collect()
-        val total = packed.agg(sum(col("n_tokens"))).collect()(0).getLong(0)
-        assert(last.getLong(2) + last.getLong(1) == total,
-          s"offset chain broken: ${last.getLong(2)} + ${last.getLong(1)} != $total")
-        println(s"[scale] packed $total tokens into ${total / 2048 + 1} windows")
-      }
-      // WHOLE-DOC packing (r12): the same two-pass shape generalized from a
-      // sum monoid to the non-associative fill-transition fold — verified
-      // against a driver-side sequential replay of the ENTIRE corpus (the
-      // operator's four-line spec), plus the no-straddle invariant. The
-      // pass-1 summary the driver folds is O(partitions × min(docs, cap))
-      // longs — at cap 2048 and 32 partitions, ≤ 64k longs at ANY corpus
-      // size; nothing else corpus-sized reaches the driver inside the
-      // operator (the full collect below is the TEST's oracle, not the op's)
-      time(s"pack ${nDocs} docs into 2048-token WHOLE-DOC bins (no straddle)") {
-        import graft.operators.TrainingSet
-        val packed = TrainingSet.packSequencesWhole(docs, capTokens = 2048)
-          .collect()
-        val got = packed.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .sortBy(_._1)
-        var bin = 0L; var fill = 0L
-        val expect = got.map { case (id, n, _, _) =>
-          if (fill + n > 2048) { bin += 1L; fill = 0L }
-          val off = fill; fill += n; (id, n, bin, off)
-        }
-        assert(got.sameElements(expect),
-          "distributed whole-doc packing must equal the sequential fold")
-        assert(got.forall { case (_, n, _, off) => off + n <= 2048 },
-          "no doc may straddle a bin boundary")
-        println(s"[scale] whole-doc packed ${got.length} docs into ${bin + 1} bins")
-      }
-      // the flagship six-stage composition end-to-end: planted clones must
-      // fall to cluster keep-one (their canonical is the benchmark doc),
-      // benchmark docs to the anti-join — no survivor from either group
-      time(s"end-to-end training-set build over ${nDocs} docs (6 stages)") {
-        import graft.operators.TrainingSet
-        val corpus = docs
-          .withColumn("n_chars", length(col("text")))
-          .withColumn("lang", concat(lit("l"), pmod(col("doc_id"), lit(5L))))
-        val built = TrainingSet.buildTrainingSet(
-          corpus, corpus.filter(pmod(col("doc_id"), lit(50L)) === 0L),
-          capTokens = 2048, quotaPerStratum = 1000).collect()
-        assert(built.nonEmpty && built.forall { r =>
-          val m = r.getLong(0) % 50; m != 0 && m != 1
-        }, "planted benchmark docs/clones must not survive")
-        var expect = 0L
-        built.sortBy(_.getLong(0)).foreach { r =>
-          assert(r.getLong(3) == expect, s"offset chain broken at ${r.getLong(0)}")
-          expect += r.getLong(2)
-        }
-        println(s"[scale] training set: ${built.length} docs, $expect tokens")
-      }
-      // the V2 (modern-chain) flagship end-to-end: stages 1-4 as above, then
-      // DSIR steering against frozen models, the temperature mixture under
-      // the hard cap, and BPE-priced packing. Planted truth: 5% JUNK docs
-      // over a SHARED 100-word boilerplate vocabulary the raw pool knows
-      // well but the target never saw (the paper's setup — steering exists
-      // to cut exactly this class). Unique texts sail through stages 1-4,
-      // so the junk cut is the steering's: per-token advantage ≈ −10 bits
-      // → acceptance ~2⁻¹⁰, and the mixture's own per-stratum quota bounds
-      // whatever slips the draw — asserted ≤ 1% of the planted junk.
-      // Clean-side invariants: benchmark/clone drops as in V1, per-stratum
-      // counts ≤ min(mixture quota, cap), BPE offsets chain exactly.
-      time(s"V2 training-set build: 8 stages (DSIR + mixture cap + BPE) over ${nDocs + nDocs / 20} docs") {
-        import graft.operators.{Corpus, TrainingSet, Tokenizer}
-        val junk = spark.range(nDocs / 20)
-          .withColumn("text", concat_ws(" ", (0 until 30).map(j =>
-            translate(concat(lit("v"),
-              pmod(xxhash64(col("id") * lit(53L) + lit(j.toLong)), lit(100L))),
-              "0123456789", "ghijklmnop")): _*))
-          .select((col("id") + lit(10000000L)).as("doc_id"), col("text"))
-        // MATERIALIZED (r17, VERDICT r16 next #4): the synthetic corpus is
-        // a Range → 30-term generator EXPRESSION, and without a boundary
-        // whole-stage codegen re-inlines the whole text tree into every
-        // reference the pipeline's first quality gate makes (length +
-        // two token-count predicates ⇒ ~5 copies) — the one generated
-        // method that outgrew Janino's 64 KB limit and dropped the stage
-        // to interpreted execution. Real inputs are parquet scans and
-        // never hit this; the cache makes the harness input look like one.
-        val corpus = docs.unionByName(junk)
-          .withColumn("n_chars", length(col("text")))
-          .withColumn("lang", when(col("doc_id") >= 10000000L, lit("junkl"))
-            .otherwise(concat(lit("l"), pmod(col("doc_id"), lit(5L)))))
-          .persist()
-        val target = Corpus.trainLmModel(docs) // clean vocabulary only
-        val raw = Corpus.trainLmModel(corpus)  // the pool being selected from
-        val bpeM2 = Tokenizer.trainBpe(docs, numMerges = 200, maxWords = 1 << 15)
-        val built = TrainingSet.buildTrainingSetV2(
-          corpus, corpus.filter(pmod(col("doc_id"), lit(50L)) === 0L),
-          target, raw, bpeM2, capTokens = 2048, quotaPerStratum = 1000,
-          bpeFingerprint = Some(bpeM2.fingerprint)).collect()
-        assert(built.nonEmpty && built.forall { r =>
-          val m = r.getLong(0) % 50
-          r.getLong(0) >= 10000000L || (m != 0 && m != 1)
-        }, "benchmark docs and clones must not survive")
-        val nJunkKept = built.count(_.getLong(0) >= 10000000L)
-        assert(nJunkKept <= nDocs / 2000,
-          s"steering must cut the junk pool to ≤ 1%: $nJunkKept of ${nDocs / 20}")
-        val perStratum = built.groupBy(_.getString(1)).view.mapValues(_.length)
-        assert(perStratum.values.forall(_ <= 1000), s"cap violated: ${perStratum.toMap}")
-        var expect = 0L
-        built.sortBy(_.getLong(0)).foreach { r =>
-          assert(r.getLong(3) == expect, s"offset chain broken at ${r.getLong(0)}")
-          expect += r.getLong(2)
-        }
-        println(s"[scale] V2 training set: ${built.length} docs, $expect BPE tokens, " +
-          s"$nJunkKept/${nDocs / 20} junk survivors, per-stratum ${perStratum.toMap}")
-        corpus.unpersist(): Unit
-      }
-    }
-
-    if (nDocs >= 10000 && sectionOn("shard")) {
-      import graft.operators.TrainingSet
-      // ---- r13 shard routing at scale: the whole-doc manifest scattered
-      // across 1024 output shards by the seeded mix. Planted truth: exact
-      // doc/token conservation through the rollup, every shard hit, and the
-      // hash's balance (max fill ≤ 2× mean — a striping or collapsing mixer
-      // fails this immediately at 1024 cells). The routing itself must add
-      // ZERO exchanges on top of the packing (plan-asserted here, at scale).
-      time(s"shard-route ${nDocs} packed docs + manifest (shards ~ bins/32)") {
-        val packed = TrainingSet.packSequencesWhole(docs, capTokens = 2048)
-        // keep ≥ ~32 bins per shard so the uniformity bound below is a hash
-        // property, not small-sample noise (at the default 100k docs the
-        // fold makes ~1.5k bins → ~45 shards; a bigger corpus widens toward
-        // the 1024 cap a real layout would use)
-        val nBins = packed.agg(countDistinct("bin_id")).collect()(0).getLong(0)
-        val nShards = math.max(16L, math.min(1024L, nBins / 32L)).toInt
-        val assigned = TrainingSet.assignShards(packed, nShards, seed = 42L)
-        assert(!assigned.queryExecution.executedPlan.toString.contains("Exchange"),
-          "shard routing must stay a pure projection at scale")
-        val m = TrainingSet.shardManifest(assigned).collect()
-        val totTokens = packed.agg(sum("n_tokens")).collect()(0).getLong(0)
-        assert(m.map(_.getAs[Long]("n_docs")).sum == nDocs, "doc conservation")
-        assert(m.map(_.getAs[Long]("n_tokens")).sum == totTokens, "token conservation")
-        assert(m.length == nShards, s"all $nShards shards hit, got ${m.length}")
-        val fills = m.map(_.getAs[Long]("n_tokens"))
-        assert(fills.max <= 2L * (totTokens / nShards),
-          s"shard skew: max ${fills.max} vs mean ${totTokens / nShards}")
-        println(s"[scale] $nBins bins → $nShards shards: " +
-          s"token fill min ${fills.min} max ${fills.max} (mean ${totTokens / nShards})")
-      }
-      // ---- r13 continuous packing at soak scale: 10 micro-batches through
-      // the versioned (bin, fill) store must splice byte-identically into
-      // the one-pass batch fold over the concatenation — the cross-trigger
-      // seam exercised 10 times at delta = nDocs/10 docs each.
-      time(s"streaming whole-doc pack: 10 × ${nDocs / 10}-doc micro-batches == one batch pass") {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-scale-pack").toString
-        val (root, out) = (s"$tmp/state", s"$tmp/packed")
-        graft.streaming.StreamingOps.seedPackState(root)
-        val fn = graft.streaming.StreamingOps.packWholeBatchFn(root, out, 2048L)
-        val per = nDocs / 10
-        (0 until 10).foreach { b =>
-          fn(docs.filter(col("doc_id") >= b * per && col("doc_id") < (b + 1) * per), b.toLong)
-        }
-        val spliced = spark.read
-          .parquet((0 until 10).map(b => s"$out/batch=$b"): _*)
-          .select("doc_id", "n_tokens", "bin_id", "bin_offset")
-        val onePass = TrainingSet.packSequencesWhole(
-          docs.filter(col("doc_id") < per * 10), capTokens = 2048)
-        assert(spliced.exceptAll(onePass).isEmpty && onePass.exceptAll(spliced).isEmpty,
-          "10 spliced micro-batches must equal the one-pass batch fold")
-        val lastState = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(root, "v9")), "UTF-8").trim
-        println(s"[scale] streaming pack: 10 batches committed, leaving state ($lastState)")
-      }
-      // ---- r13 data card + budget solver at scale: one corpus aggregate
-      // onto the bounded (lang, length) domain, integer percentiles, then
-      // the O(strata) mixture solve. Planted truth: doc conservation, the
-      // percentile chain p50 ≤ p90 ≤ p99 ≤ max per stratum, token totals
-      // matching an independent aggregate, and budget conservation.
-      time(s"corpus data card over ${nDocs} docs (5 langs) + mixture budget") {
-        import graft.operators.TextAnalysis
-        val langed = docs.withColumn("lang", concat(lit("l"), pmod(col("doc_id"), lit(5L))))
-        val report = TextAnalysis.corpusReport(langed)
-        val r = report.collect()
-        assert(r.map(_.getAs[Long]("n_docs")).sum == nDocs, "doc conservation")
-        r.foreach { row =>
-          val (p50, p90, p99, mx) = (row.getAs[Long]("p50_tokens"),
-            row.getAs[Long]("p90_tokens"), row.getAs[Long]("p99_tokens"),
-            row.getAs[Long]("max_tokens"))
-          assert(p50 <= p90 && p90 <= p99 && p99 <= mx, s"percentile chain: $row")
-        }
-        val independent = langed.select(size(split(lower(trim(col("text"))), "\\s+"))
-          .cast("long").as("n")).agg(sum("n")).collect()(0).getLong(0)
-        assert(r.map(_.getAs[Long]("total_tokens")).sum == independent,
-          "token totals must match an independent aggregate")
-        import spark.implicits._
-        val weights = (0 until 5).map(i => (s"l$i", (i + 1).toLong)).toDF("lang", "weight")
-        val budget = TrainingSet.mixtureBudget(report, weights, budgetTokens = independent * 3)
-          .collect()
-        assert(budget.map(_.getAs[Long]("target_tokens")).sum <= independent * 3,
-          "budget conservation")
-        assert(budget.forall(_.getAs[Long]("epochs") >= 1L), "epochs floor")
-        println(s"[scale] data card: ${r.length} strata, $independent tokens; " +
-          s"budget 3× → epochs ${budget.map(b => b.getString(0) -> b.getAs[Long]("epochs")).toMap}")
-      }
-    } // sectionOn("shard")
-
-    if (nDocs >= 10000 && sectionOn("budget")) {
-      import graft.operators.TrainingSet
-      import graft.functions.TextFunctions.tokens
-      import spark.implicits._
-      val langed = docs.withColumn("lang",
-        concat(lit("l"), pmod(col("doc_id"), lit(5L))))
-      val avails = langed
-        .groupBy("lang").agg(sum(size(tokens(col("text"))).cast("long")).as("a"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // ---- r13 budgeted selection at scale: each stratum cut to ~30% of
-      // its token mass. Planted truth: the minimal-crossing-prefix property
-      // per stratum (target ≤ selected sum < target + largest selected doc)
-      // and, below, bit-equality with the window form that funnels every
-      // stratum through one reducer — the skew this operator exists to avoid.
-      val targets = avails.toSeq.map { case (l, a) => (l, a * 3L / 10L) }
-        .toDF("lang", "target_tokens")
-      var selected: org.apache.spark.sql.DataFrame = null
-      time(s"budgeted selection over ${nDocs} docs (5 strata, 30% token cut, two-level)") {
-        selected = TrainingSet.budgetedSample(langed, targets).localCheckpoint()
-        val got = selected.groupBy("lang")
-          .agg(sum("n_tokens").as("s"), max("n_tokens").as("mx")).collect()
-        assert(got.length == 5, "every stratum selected")
-        got.foreach { r =>
-          val (l, s, mx) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val t = avails(l) * 3L / 10L
-          assert(t <= s && s < t + mx,
-            s"minimal crossing prefix: $l sum=$s target=$t maxdoc=$mx")
-        }
-      }
-      time("window-form baseline (same cut, one reducer per stratum) + bit-equality") {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("lang").orderBy("rk", "doc_id")
-        val expect = langed.select(col("lang"), col("doc_id"),
-            md5(col("text")).as("rk"),
-            size(tokens(col("text"))).cast("long").as("n_tokens"))
-          .withColumn("cum", sum("n_tokens").over(w))
-          .join(broadcast(targets), "lang")
-          .filter(col("cum") - col("n_tokens") < col("target_tokens"))
-          .select("lang", "doc_id", "n_tokens")
-        assert(expect.exceptAll(selected).isEmpty && selected.exceptAll(expect).isEmpty,
-          "two-level cut must equal the window form at scale")
-      }
-      // ---- r13 epoch materialization at scale: a 2.5× token upsample →
-      // 2 full epochs + a half-corpus fractional one. Planted truth: exact
-      // token conservation per epoch (full epochs carry the whole stratum;
-      // the fraction obeys the crossing bound), and doc-count conservation.
-      time(s"materializeEpochs 2.5x upsample over ${nDocs} docs (2 full + fractional)") {
-        val up = avails.toSeq.map { case (l, a) => (l, a * 5L / 2L) }
-          .toDF("lang", "target_tokens")
-        val out = TrainingSet.materializeEpochs(langed, up)
-        val byEpoch = out.groupBy("lang", "epoch")
-          .agg(sum("n_tokens").as("s"), count(lit(1)).as("n"),
-            max("n_tokens").as("mx")).collect()
-        val docsPer = langed.groupBy("lang").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        assert(byEpoch.map(_.getAs[Long]("epoch")).max == 3L, "2 full + fractional")
-        byEpoch.foreach { r =>
-          val (l, e, s, n, mx) = (r.getString(0), r.getAs[Long]("epoch"),
-            r.getAs[Long]("s"), r.getAs[Long]("n"), r.getAs[Long]("mx"))
-          if (e <= 2L) {
-            assert(s == avails(l) && n == docsPer(l),
-              s"full epoch carries the whole stratum: $l e$e sum=$s n=$n")
-          } else {
-            val rem = avails(l) * 5L / 2L - 2L * avails(l)
-            assert(rem <= s && s < rem + mx,
-              s"fractional epoch crossing bound: $l sum=$s rem=$rem")
-          }
-        }
-        println(s"[scale] epochs: ${byEpoch.map(_.getAs[Long]("n")).sum} rows " +
-          s"from ${docsPer.values.sum} docs (2.5x)")
-      }
-      // ---- r13 budget-increment soak: 5 crawl-style rounds of nDocs/5
-      // deltas against one ledger, targets = 60% of the corpus per stratum.
-      // Planted truth: the ledger equals the cumulative acceptance exactly
-      // after every round; once a stratum fills, later rounds accept zero
-      // from it; per-round cost carries no round index (each round's cut is
-      // delta-sized — the O(strata) ledger is the only carried state).
-      time(s"budget-increment soak: 5 x ${nDocs / 5}-doc rounds against one ledger") {
-        val tg60 = avails.toSeq.map { case (l, a) => (l, a * 6L / 10L) }
-          .toDF("lang", "target_tokens")
-        var ledger = TrainingSet.emptyBudgetConsumed(spark)
-        val per = nDocs / 5
-        var accepted = 0L
-        val roundSecs = (0 until 5).map { r =>
-          val delta = langed.filter(
-            col("doc_id") >= r * per && col("doc_id") < (r + 1) * per)
-          val t0 = System.nanoTime()
-          val (sel, led2) = TrainingSet.budgetIncrement(delta, tg60, ledger)
-          val selSums = sel.groupBy("lang").agg(sum("n_tokens").as("s"))
-            .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-          val ledBefore = ledger.collect()
-            .map(x => x.getString(0) -> x.getLong(1)).toMap
-          ledger = led2.localCheckpoint()
-          val ledAfter = ledger.collect()
-            .map(x => x.getString(0) -> x.getLong(1)).toMap
-          val allLangs = ledAfter.keySet ++ ledBefore.keySet ++ selSums.keySet
-          allLangs.foreach { l =>
-            assert(ledAfter.getOrElse(l, 0L) ==
-              ledBefore.getOrElse(l, 0L) + selSums.getOrElse(l, 0L),
-              s"round $r ledger conservation at $l")
-            // a stratum already at/over target accepts nothing this round
-            if (ledBefore.getOrElse(l, 0L) >= avails(l) * 6L / 10L)
-              assert(selSums.getOrElse(l, 0L) == 0L, s"round $r lockout at $l")
-          }
-          accepted += sel.count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        // every stratum ends AT its budget (crossing bound): 60% of a
-        // uniform corpus fills within the first 3+ε rounds
-        ledger.collect().foreach { x =>
-          val (l, c) = (x.getString(0), x.getLong(1))
-          val t = avails(l) * 6L / 10L
-          assert(t <= c && c < t + 31L, s"final ledger crossing bound at $l: $c vs $t")
-        }
-        println(f"[scale] budget soak: $accepted docs accepted, per-round " +
-          roundSecs.map(t => f"$t%.2f").mkString(" / ") + " s")
-      }
-      // ---- r14 (VERDICT r13 next #7): the cut at DOMAIN-level stratum
-      // cardinality. The 5-lang rows above never stress the bounded-domain
-      // claim — the eTLD+1 quota's shape is 10k+ strata, where the level-1
-      // bucket domain (strata × 256) is 2.56M and, at 300 docs/stratum,
-      // ~70% of each stratum's 256 buckets are occupied (~1.8M bucket rows
-      // cross the level-1 exchange — (strata, bkt, partial) triples, never
-      // the corpus text). Planted truth: EVERY one of the 10k strata
-      // selects, every stratum obeys the crossing bound, and the two-level
-      // selection equals the window form bit-for-bit. The window baseline
-      // runs second so SCALE.md records both sections' shuffle columns
-      // side by side (the two-level exchange carries ~45 B bucket triples
-      // vs the window's ~80 B per-doc ranked rows — and at few-strata
-      // cardinality the window form additionally funnels each stratum
-      // through ONE reducer, the skew the operator exists to avoid).
-      val n10k = nDocs * 30
-      def docs10k = spark.range(n10k)
-        .withColumn("lang", concat(lit("d"), pmod(col("id"), lit(10000L))))
-        .withColumn("text", concat_ws(" ", (0 until 8).map(j =>
-          concat(lit("w"), pmod(xxhash64(col("id") * lit(31L) + lit(j.toLong)),
-            lit(50000L)))): _*))
-        .select(col("id").as("doc_id"), col("lang"), col("text"))
-      val targets10k = docs10k.groupBy("lang")
-        .agg((sum(size(graft.functions.TextFunctions.tokens(col("text"))))
-          .cast("long") * 3L / 10L).as("target_tokens"))
-        .localCheckpoint()
-      var sel10k: org.apache.spark.sql.DataFrame = null
-      time(s"budgeted selection over $n10k docs at 10k strata (bucket domain 2.56M, two-level)") {
-        sel10k = TrainingSet.budgetedSample(docs10k, targets10k).localCheckpoint()
-        val got = sel10k.groupBy("lang")
-          .agg(sum("n_tokens").as("s"), max("n_tokens").as("mx"))
-        assert(got.count() == 10000L, "every stratum must select")
-        val violations = got.join(broadcast(targets10k), "lang")
-          .filter(!(col("target_tokens") <= col("s") &&
-            col("s") < col("target_tokens") + col("mx")))
-          .count()
-        assert(violations == 0L,
-          s"$violations of 10000 strata violate the crossing bound")
-        val occupied = docs10k
-          .select(col("lang"), substring(md5(col("text")), 1, 2).as("bkt"))
-          .distinct().count()
-        println(s"[scale] 10k-strata cut: level-1 bucket frame $occupied rows " +
-          s"(domain 2560000), corpus $n10k docs — the exchange carries bucket " +
-          "triples, the text never shuffles")
-      }
-      time(s"window-form baseline at 10k strata over $n10k docs + bit-equality") {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("lang").orderBy("rk", "doc_id")
-        val expect = docs10k.select(col("lang"), col("doc_id"),
-            md5(col("text")).as("rk"),
-            size(graft.functions.TextFunctions.tokens(col("text")))
-              .cast("long").as("n_tokens"))
-          .withColumn("cum", sum("n_tokens").over(w))
-          .join(broadcast(targets10k), "lang")
-          .filter(col("cum") - col("n_tokens") < col("target_tokens"))
-          .select("lang", "doc_id", "n_tokens")
-        assert(expect.exceptAll(sel10k).isEmpty && sel10k.exceptAll(expect).isEmpty,
-          "two-level cut must equal the window form at 10k strata")
-      }
-    } // sectionOn("budget")
-
-    if (nDocs >= 10000 && sectionOn("quality")) {
-      // ---- sliding-window chunking at corpus scale (r13) ----
-      // every synthetic doc is exactly 30 tokens, so the window layout is
-      // provable corpus-wide: starts 1,5,…,25 (7 windows at chunk 8 /
-      // stride 4), the last covers tokens 25..30, total chunk tokens
-      // 6×8+6 = 54 per doc. The assertions check the whole output against
-      // that closed form — and the op must stay a narrow explode (its only
-      // shuffle here is the verification aggregate's O(partitions) partials)
-      time(s"chunkSliding ${nDocs} docs into 8-token windows, stride 4") {
-        import graft.operators.TrainingSet
-        val ch = TrainingSet.chunkSliding(docs, chunkTokens = 8, stride = 4)
-        val agg = ch.agg(
-          count(lit(1)), sum(col("n_chunk_tokens")),
-          max(col("start_tok") + col("n_chunk_tokens") - 1L),
-          min(col("start_tok") + col("n_chunk_tokens") - 1L)).head()
-        assert(agg.getLong(0) == nDocs * 7, s"window count ${agg.getLong(0)}")
-        assert(agg.getLong(1) == nDocs * 54L, s"token mass ${agg.getLong(1)}")
-        val lastEnd = ch.groupBy("doc_id")
-          .agg(max(col("start_tok") + col("n_chunk_tokens") - 1L).as("e"))
-          .agg(min("e"), max("e")).head()
-        assert(lastEnd.getLong(0) == 30L && lastEnd.getLong(1) == 30L,
-          s"some doc's windows do not reach its end: $lastEnd")
-        println(s"[scale] chunking: ${agg.getLong(0)} windows, ${agg.getLong(1)} chunk tokens")
-      }
-      // ---- trained quality classifier at scale (r13) ----
-      // a PLANTED linear concept (y = 2·x1 − x2 > 0.5, margin ≥ 0.1 by
-      // grid construction) over 200k deterministic feature rows: GD must
-      // recover it (accuracy + signs), and — the design claim behind the
-      // integer-quantized gradients — the trained weights must be
-      // BIT-IDENTICAL when the same rows arrive in a different
-      // partitioning. Each iteration is one scan producing O(features)
-      // longs; the printed wall-clock is 2 × 64 of those (the rational
-      // sigmoid's bounded gradient converges slower than libm-exp logistic
-      // — the price of bit-reproducibility, paid in cheap iterations).
-      time("quality LR: 64 GD iterations over 200k planted feature rows, twice") {
-        import graft.operators.QualityModel
-        val n = 200000L
-        val feats = spark.range(n)
-          .withColumn("x_1", pmod(col("id"), lit(1000L)).cast("double") / 500.0)
-          .withColumn("x_2", pmod(col("id") / 1000L, lit(1000L)).cast("double") / 250.0)
-          .withColumn("m", lit(2.0) * col("x_1") - col("x_2") - lit(0.5))
-          .filter(abs(col("m")) > 0.1)
-          .select(col("id").as("doc_id"),
-            when(col("m") > 0, 1.0).otherwise(0.0).as("y"),
-            lit(1.0).as("x_b"), col("x_1"), col("x_2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val cols = Seq("x_b", "x_1", "x_2")
-          val w = QualityModel.trainLr(feats, xCols = cols, iters = 64, lr = 4.0)
-          assert(w(1) > 0 && w(2) < 0, s"planted signs not recovered: ${w.toSeq}")
-          val acc = QualityModel.scoreLr(feats, w, cols)
-            .join(feats.select("doc_id", "y"), "doc_id")
-            .agg(avg(when((col("score") >= 0.5) === (col("y") === 1.0), 1.0)
-              .otherwise(0.0))).head().getDouble(0)
-          assert(acc >= 0.95, s"planted-concept accuracy $acc at $n rows")
-          // the invariance twin gets its own cache: an unpersisted
-          // repartition would re-shuffle the corpus once per iteration
-          val featsR = feats.repartition(67, col("doc_id"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val w67 =
-            try QualityModel.trainLr(featsR, xCols = cols, iters = 64, lr = 4.0)
-            finally featsR.unpersist(blocking = false): Unit
-          assert(w.toSeq == w67.toSeq,
-            s"partitioning leaked into the gradient at scale: ${w.toSeq} vs ${w67.toSeq}")
-          println(f"[scale] quality LR: accuracy $acc%.4f, weights ${w.toSeq}, " +
-            "bit-identical across partitionings")
-        } finally feats.unpersist(blocking = false): Unit
-      }
-    } // sectionOn("quality")
-
-    if (sectionOn("codec")) {
-    // ---- binary cell codec at scale: the LongColumnInterpreter path ----
-    // encode value → 8-byte BE cell → decode → bucketed sum, all codegen'd;
-    // proves the byte codec adds no measurable cost over the typed column
-    time("binary cell encode→decode→sum (codec roundtrip)") {
-      import graft.functions.Decoders
-      import graft.functions.expressions.LongToBytesBE
-      val cells = df
-        .withColumn("raw", LongToBytesBE(col("value"), 8))
-        .withColumn("decoded", Decoders.longBE(col("raw")))
-      val m = TsAgg.sum(cells, spec.copy(tsCol = "ts", valueCol = "decoded")).collect()
-      assert(m.nonEmpty)
-    }
-
-    } // sectionOn("codec")
-
-    if (sectionOn("v2")) {
-    // ---- V2 cell source: coprocessor-style aggregate pushdown at scale ----
-    // a synthetic region directory (written once per cell count through the
-    // real writer) makes the pushdown claim measurable: the pushed plan moves
-    // regions × groups rows out of the readers; the defeated plan (group-by
-    // on an expression, which pushAggregation correctly declines) streams
-    // every cell into Spark's aggregate. Same files, same readers — the
-    // delta is what aggregation-at-the-source buys.
-    val nCells = rows / 5 // 20M for the default 100M run
-    // keyed on the format magic so a format bump (e.g. the v3 integrity
-    // footer) invalidates the cache instead of serving unreadable files
-    val cellDir = "/tmp/graft-fixtures/scalebench-cells-" +
-      s"${graft.sources.cells.CellRegionFormat.Magic.trim.toLowerCase}-$nCells"
-    if (!new java.io.File(s"$cellDir/_SUCCESS").exists()) {
-      import graft.functions.expressions.LongToBytesBE
-      val cents = pmod(col("id") * lit(40503L), lit(100000L))
-      val cells = spark.range(nCells).select(
-        LongToBytesBE(col("id"), 8).as("key"),
-        LongToBytesBE(pmod(col("id"), lit(3600L)), 4).as("qual"),
-        LongToBytesBE(cents, 8).as("value"),
-        cents.as("value_long"),
-        (cents / lit(100.0)).as("value_double"),
-        concat(lit("et"), pmod(col("id"), lit(5L))).as("event_type"))
-      time(s"write $nCells-cell region dir (one-off, excluded from reruns)") {
-        // full promote protocol (OS file lock, _SUCCESS re-check, crash
-        // self-heal under the SAME lock) — an unlocked check-then-rm here
-        // could delete a complete dir a concurrent bench JVM just promoted
-        graft.sources.cells.CellRegions.promoteUnderLock(cellDir)(tmp =>
-          graft.sources.cells.CellRegions.writeRegionDir(cells, tmp, numRegions = 32))
-      }
-    }
-    def v2Agg(defeatPushdown: Boolean): Array[org.apache.spark.sql.Row] = {
-      val groupCol = // an expression group-by is correctly declined by pushAggregation
-        if (defeatPushdown) upper(col("event_type")).as("et") else col("event_type")
-      spark.read.format("graft-cells").load(cellDir)
-        .groupBy(groupCol)
-        .agg(count(lit(1)).as("n"), sum(col("value_long")).as("s"),
-          min(col("value_double")).as("mn"), max(col("value_double")).as("mx"))
-        .collect()
-    }
-    // one untimed pass each: the reader hot loops JIT-compile on first use,
-    // and a cold first measurement would charge warm-up to whichever path
-    // happens to run first (observed: the SAME pushed plan, 3.1 s cold
-    // vs 0.9 s warm)
-    v2Agg(defeatPushdown = false); v2Agg(defeatPushdown = true)
-    // tiny CLI runs produce fewer than 5 event types (or zero cells) — guard
-    // group-count like the bucket assertions above
-    val expectGroups = math.min(nCells, 5L).toInt
-    time(s"V2 pushed aggregate over $nCells cells (5 groups × 4 aggs)") {
-      val agg = v2Agg(defeatPushdown = false)
-      assert(agg.length == expectGroups && agg.map(_.getLong(1)).sum == nCells)
-    }
-    time(s"same aggregate with pushdown defeated (all $nCells cells shuffled up)") {
-      val agg = v2Agg(defeatPushdown = true)
-      assert(agg.length == expectGroups && agg.map(_.getLong(1)).sum == nCells)
-    }
-
-    } // sectionOn("v2")
-
-    if (sectionOn("embed")) {
-    // ---- embedding near-dup at a corpus size where all-pairs is infeasible ----
-    // nVecs 64-dim vectors (100k default → 5·10⁹ possible pairs); every
-    // id ≡ 1 (mod 50) clones id-1 with one perturbed component (cosine ≈ 0.999).
-    // At a PRODUCTION near-dup threshold (0.9) LSH blocking is sub-quadratic:
-    // 16 planes/table → ~2^16 buckets, so candidate volume stays ~linear.
-    val nVecs = rows / 1000
-    val vecs = spark.range(nVecs)
-      .withColumn("seed",
-        when(pmod(col("id"), lit(50L)) === 1L, col("id") - 1L).otherwise(col("id")))
-      .withColumn("embedding",
-        transform(sequence(lit(0), lit(63)), i =>
-          (pmod(xxhash64(col("seed") * lit(64L) + i.cast("long")), lit(2001L)).cast("double")
-            - lit(1000.0)) / lit(1000.0)))
-      .withColumn("embedding",
-        when(pmod(col("id"), lit(50L)) === 1L,
-          concat(slice(col("embedding"), 1, 63), array(element_at(col("embedding"), 64) * lit(0.2))))
-          .otherwise(col("embedding")))
-      .select(col("id").as("vec_id"), col("embedding"))
-    // ground truth on exactly the planted pairs (cheap: nVecs/50 pairs), so
-    // the recall denominator is the pairs that REALLY clear the threshold
-    val quant = (c: org.apache.spark.sql.Column) =>
-      transform(c, x => round(x.cast("double") * lit(1000)).cast("long"))
-    val pa = vecs.filter(pmod(col("vec_id"), lit(50L)) === 0L)
-      .select(col("vec_id").as("id_a"), quant(col("embedding")).as("q_a"))
-    val pb = vecs.filter(pmod(col("vec_id"), lit(50L)) === 1L)
-      .select(col("vec_id").as("id_b"), quant(col("embedding")).as("q_b"))
-    import graft.functions.expressions.ArrayDotProduct
-    val truePlanted = pa.join(pb, pa("id_a") + 1 === pb("id_b"))
-      .withColumn("dot", ArrayDotProduct(col("q_a"), col("q_b")))
-      .withColumn("n2a", ArrayDotProduct(col("q_a"), col("q_a")))
-      .withColumn("n2b", ArrayDotProduct(col("q_b"), col("q_b")))
-      .filter(col("dot") > 0 && col("dot") * col("dot") * lit(100L) >= lit(81L) * col("n2a") * col("n2b"))
-      .count()
-    time(s"exact ANN top-5 (10 queries) over ${nVecs} vectors") {
-      val topk = graft.operators.Similarity
-        .topKDot(vecs, vecs.filter(col("vec_id") < 10L), k = 5).collect()
-      // guarded like the bucket assertion: tiny CLI runs have < 10 queries
-      if (nVecs >= 10000) assert(topk.length == 50) // 10 queries × 5 neighbors
-    }
-    time(s"embedding near-dup (LSH-blocked, cos ≥ 0.9) over ${nVecs} vectors") {
-      val pairs = graft.operators.Dedup.embeddingNearDupLsh(
-        vecs, dim = 64, thresholdNum = 9, thresholdDen = 10,
-        tables = 8, planesPerTable = 16).collect()
-      val planted = pairs.count(r => r.getLong(1) == r.getLong(0) + 1 && r.getLong(0) % 50 == 0)
-      println(f"[scale] embedding recall: $planted/$truePlanted planted pairs, ${pairs.length} total")
-      assert(planted >= (truePlanted * 0.95).toInt, s"recall too low: $planted/$truePlanted")
-    }
-    // ---- centroid outlier prune (r13): planted anti-aligned members ----
-    // One group gets a coherent direction d + small per-vector noise (cos to
-    // centroid ≈ 0.995); every 100th member is planted NEGATED (cos ≈ −1).
-    // The exact sign-aware test must flag exactly the plants — at nVecs
-    // scale, with the corpus never shuffling (centroid rides a broadcast).
-    if (nVecs >= 10000) {
-      time(s"embeddingOutliers over $nVecs vectors (group 0 planted, 10 groups)") {
-        val noise = (vid: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
-          (pmod(xxhash64(vid * lit(64L) + i.cast("long") + lit(7L)), lit(201L)).cast("double")
-            - lit(100.0)) / lit(1000.0)
-        val dir = (i: org.apache.spark.sql.Column) =>
-          (pmod(xxhash64(i.cast("long") * lit(2654435761L)), lit(2001L)).cast("double")
-            - lit(1000.0)) / lit(1000.0)
-        val lab = spark.range(nVecs)
-          .withColumn("label", pmod(col("id"), lit(10L)).cast("int"))
-          .withColumn("sgn",
-            when(col("label") === 0 && pmod(col("id"), lit(1000L)) === 0L, lit(-1.0))
-              .otherwise(lit(1.0)))
-          .withColumn("embedding",
-            when(col("label") === 0,
-              transform(sequence(lit(0), lit(63)),
-                i => (col("sgn") * dir(i) + noise(col("id"), i)).cast("float")))
-              .otherwise(transform(sequence(lit(0), lit(63)),
-                i => noise(col("id") * lit(31L), i).cast("float"))))
-          .select(col("id").as("vec_id"), col("label"), col("embedding"))
-        val out = graft.operators.Similarity.embeddingOutliers(lab)
-          .filter(col("label") === 0)
-        val flagged = out.filter(col("is_outlier")).select("vec_id")
-          .collect().map(_.getLong(0)).sorted.toSeq
-        val planted = (0L until nVecs by 1000L).toSeq
-        assert(flagged == planted,
-          s"expected exactly the planted anti-aligned members, got ${flagged.length}")
-      }
-    }
-
-    // ---- IVF-PQ ANN at corpus scale: the memory-tier index vs exact truth ----
-    // Same adversarial random vectors (nothing for centroids or codebooks to
-    // adapt to — real embeddings are easier on both). The graded claims: the
-    // scoring pass reads 8 byte-codes + an 8 B norm per candidate (vs the
-    // flat 256 B vector — >10×), per-candidate cost is m table lookups (vs
-    // a 64-term dot), and the ADC shortlist → exact re-rank two-stage still
-    // clears the same 0.9 recall floor the flat IVF is gated on. On THIS
-    // uniform corpus the 100k-scale cos gaps between true rank 5 and rank
-    // ~100 shrink to ~0.01 while PQ distortion at m=8 is ~10× that, so the
-    // section runs m=16 (dsub=4) with a 256-wide shortlist — the standard
-    // PQ response to hard (unclustered) data; m=8/rerank=64 measured
-    // recall 0.62 here and 0.92+ at the 10k registered fixture.
-    if (nVecs >= 10000) {
-      time(s"IVF-PQ ANN top-5 (10 queries, ADC + exact re-rank) over ${nVecs} vectors") {
-        val queries = vecs.filter(col("vec_id") < 10L)
-        val truth = graft.operators.Similarity.topKCosine(vecs, queries, 5)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        val got = graft.operators.Similarity.annCosineIvfPq(
-          vecs, queries, k = 5, dim = 64,
-          nlist = 16, nprobe = 8, m = 16, ks = 256, rerank = 256, nassign = 2)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        val recalls = truth.map { case (q, t) =>
-          (t intersect got.getOrElse(q, Set.empty)).size.toDouble / t.size }
-        val mean = recalls.sum / recalls.size
-        println(f"[scale] ivfpq recall@5 $mean%.3f vs exact (floor 0.9); " +
-          f"scoring payload ${16 + 8} B/row vs flat ${64 * 4} B/row")
-        assert(mean >= 0.9, s"IVF-PQ recall too low: $mean")
-      }
-
-      // ---- persisted AnnIndex: O(base) build once, O(delta) append, the
-      // drift statistic delta-sized — the ANN tier joins the incremental
-      // (index-vs-delta) story the five dedup key spaces carry ----
-      val annTmp = java.nio.file.Files.createTempDirectory("graft-annix").toString
-      var annIx: graft.operators.Similarity.AnnIndex = null
-      time(s"build+write AnnIndex over ${nVecs} vectors (construction, O(base))") {
-        graft.operators.Similarity.writeAnnIndex(
-          graft.operators.Similarity.buildAnnIndex(
-            vecs, dim = 64, nlist = 16, m = 16, ks = 256, nassign = 1),
-          annTmp)
-        annIx = graft.operators.Similarity.readAnnIndex(spark, annTmp)
-      }
-      val annBaseline = graft.operators.Similarity.annDriftBaseline(annIx)
-      // delta: 1000 fresh ids — 100 exact clones of base vectors (planted
-      // truth for the post-append probe), 900 base-distributed fresh
-      val annDelta = spark.range(1000)
-        .withColumn("seed",
-          when(col("id") < 100L, col("id") * 50L) // clone of base vec_id = 50·id
-            .otherwise(col("id") + 7L * nVecs))
-        .withColumn("embedding",
-          transform(sequence(lit(0), lit(63)), i =>
-            (pmod(xxhash64(col("seed") * lit(64L) + i.cast("long")), lit(2001L)).cast("double")
-              - lit(1000.0)) / lit(1000.0)))
-        .select((col("id") + 10L * nVecs).as("vec_id"), col("embedding"))
-      val codedBefore = annIx.coded.count()
-      time(s"appendAnnIndex: 1000-vec delta vs ${nVecs}-vec index (O(delta), frozen quantizers)") {
-        val stat = graft.operators.Similarity.annDriftStat(annIx, annDelta, annBaseline)
-        println(f"[scale] ann drift stat on a base-distributed delta: $stat%.3f " +
-          f"(baseline quantile 0.10 at cos $annBaseline%.4f) — the per-append monitor")
-        assert(stat <= 0.3, s"base-distributed delta must not trip the drift signal: $stat")
-        annIx = graft.operators.Similarity.appendAnnIndex(annIx, annTmp, annDelta)
-      }
-      assert(annIx.coded.count() == codedBefore + 1000,
-        "append must add exactly nassign rows per delta vector")
-      time(s"AnnIndex probe after append: 10 cloned-base queries through the grown index") {
-        // querying FOR a cloned base vector must surface its appended twin
-        // at rank 1 (cos 1 beats every organic neighbor on random data)
-        val qs = vecs.filter(pmod(col("vec_id"), lit(50L)) === 0L && col("vec_id") < 500L)
-        val got = graft.operators.Similarity.annQueryIndex(
-          annIx, qs, k = 3, nprobe = 4, rerank = 32)
-          .filter(col("rank") === 1L).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val hits = got.count { case (q, n) => n == q / 50L + 10L * nVecs }
-        println(s"[scale] ann post-append probe: $hits/10 cloned queries surface their appended twin first")
-        assert(hits >= 9, s"appended clones must be found through the frozen quantizers: $hits/10")
-      }
-    }
-
-    // ---- SemDeDup at corpus scale: k-means cells sized so intra-cell pair
-    // volume stays ~n × cellSize (n²/nlist), the paper's scaling lever (50k
-    // cells at 5B docs → here 256 cells at 100k vectors). Planted redundancy:
-    // the id ≡ 1 (mod 50) clones (cos ≈ 0.999 to id-1) must fall — a clone
-    // and its original land in the same argmax cell except at degenerate
-    // boundaries — and nothing else may fall (random 64-dim directions never
-    // meet cos ≥ 0.9 by chance).
-    if (nVecs >= 10000) {
-      time(s"semantic dedup (SemDeDup, 256 cells, cos ≥ 0.9) over ${nVecs} vectors") {
-        val out = graft.operators.Dedup.semanticDedup(vecs, dim = 64, nlist = 256)
-          .filter(!col("keep")).collect()
-        val planted = out.count(_.getLong(0) % 50 == 1)
-        println(s"[scale] semdedup: ${out.length} pruned, $planted/$truePlanted planted clones")
-        assert(planted >= (truePlanted * 0.95).toInt,
-          s"semantic recall too low: $planted/$truePlanted")
-        assert(out.length == planted, s"only planted clones may fall: ${out.length} != $planted")
-      }
-    }
-    } // sectionOn("embed")
-    spark.stop()
-  }
+      assert(sums.distinct.size == 1 && sums.head._2 > 0,
+        s"batch doors disagree: ${Bm25Doors.zip(sums).mkString(", ")}")
+    }))
 }

@@ -720,18 +720,6 @@ object Search {
     }
     def bc(df: DataFrame): DataFrame =
       if (nSurvivors <= MaxBroadcastSurvivors) broadcast(df) else df
-    // GRAFT_SEARCH_PROF=1: print the pass's scale terms — the bounds
-    // aggregate's fanout input (the door's linear term, O(Σ_t
-    // df(t)·queries(t))), the survivor count, and the exact fold's input —
-    // so sweep rows in SCALE.md carry measured counts, not estimates. Two
-    // extra count jobs over cached frames; zero cost when unset.
-    if (sys.env.get("GRAFT_SEARCH_PROF").contains("1")) {
-      val fanout = scoredBase.join(broadcast(qt), Seq("token")).count()
-      val foldIn = scoredCached.join(bc(surv), Seq(idCol))
-        .join(broadcast(qt), Seq(qidCol, "token"), "leftsemi").count()
-      println(s"[searchprof] fanout_rows=$fanout survivors=$nSurvivors " +
-        s"fold_input_rows=$foldIn")
-    }
     // The exact fold touches SURVIVING PAIRS only, and in this order: the
     // scored postings join the survivor pairs ON DOC ID first (each doc
     // carries ~pairs/docs ≈ 1–2 surviving queries), and only then does

@@ -9,7 +9,7 @@ import graft.operators.{Dedup, Search}
 
 /** Release contract of the operators' intermediate frames: everything an
   * operator persists or checkpoints is freed by `Dedup.clearCaches()`, and
-  * no operator source holds a frame any other way than through
+  * no library source holds a frame any other way than through
   * `graft.operators.Materialize`. */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -58,15 +58,18 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("operator sources hold frames only through Materialize") {
     // one mechanism: a persist, unpersist or checkpoint call anywhere else
-    // under operators/ or streaming/ is a frame with its own release rule
+    // in the library, its mains included, is a frame with its own release
+    // rule
     val call = """\.(persist|unpersist|localCheckpoint|checkpoint)\(""".r
-    val roots = Seq("src/main/scala/graft/operators", "src/main/scala/graft/streaming")
-      .map(new java.io.File(_))
-    assert(roots.forall(_.isDirectory), s"run from the repository root: ${roots.mkString(", ")}")
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    val walk = java.nio.file.Files.walk(root.toPath)
+    val sources =
+      try walk.iterator.asScala.map(_.toFile).filter(_.getName.endsWith(".scala")).toSeq
+      finally walk.close()
     val offenders = for {
-      root <- roots
-      f <- root.listFiles().toSeq.sortBy(_.getName)
-      if f.getName.endsWith(".scala") && f.getName != "Materialize.scala"
+      f <- sources.sortBy(_.getPath)
+      if f.getName != "Materialize.scala"
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq.zipWithIndex
       code = line.replaceAll("//.*$", "").trim
       if !(code.startsWith("*") || code.startsWith("/*"))

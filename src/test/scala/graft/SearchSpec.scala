@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftListenerSync
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -758,14 +759,7 @@ class SearchSpec extends AnyFunSuite {
     graft.operators.Dedup.clearCaches()
     spark.conf.set(Search.LazyBoundsPartitionsConfKey, "7")
     try {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val (lz, jobs) = GraftListenerSync.jobsOf(spark.sparkContext) {
         val lz = Search.bm25TopKAllLazy(docs, qs, k = 3)
         val p = lz.queryExecution.executedPlan.toString
         // the pinned-width doc repartition: hashpartitioning(doc_id, 7)
@@ -773,11 +767,11 @@ class SearchSpec extends AnyFunSuite {
             p.linesIterator.exists(l =>
               l.contains("hashpartitioning(doc_id#") && l.contains(", 7)")),
           s"expected a 7-wide pinned bounds repartition:\n$p")
-        org.apache.spark.GraftListenerSync.waitUntilEmpty(spark.sparkContext)
-        assert(jobs.get() == 0,
-          s"the conf lever must not break the plan-only contract (${jobs.get()} jobs)")
-        assert(bits(lz) == default, "conf-sized lazy door changed output bits")
-      } finally spark.sparkContext.removeSparkListener(listener)
+        lz
+      }
+      assert(jobs == 0,
+        s"the conf lever must not break the plan-only contract ($jobs jobs)")
+      assert(bits(lz) == default, "conf-sized lazy door changed output bits")
       spark.conf.set(Search.LazyBoundsPartitionsConfKey, "0")
       intercept[IllegalArgumentException](Search.bm25TopKAllLazy(docs, qs, k = 3))
     } finally {
@@ -864,14 +858,9 @@ class SearchSpec extends AnyFunSuite {
     val ix = Search.readSearchIndex(spark, dir)
     graft.operators.Dedup.clearCaches()
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // GraftListenerSync drains the async listener queue deterministically:
+    // a fixed sleep could under-wait and let a construction job slip by
+    val ((lazyScan, lazyIx), buildJobs) = GraftListenerSync.jobsOf(spark.sparkContext) {
       val (lazyScan, lazyIx) = (
         Search.bm25TopKAllLazy(docs, qs, k = 5),
         Search.bm25TopKAllIndexedLazy(ix, qs, k = 5))
@@ -885,23 +874,20 @@ class SearchSpec extends AnyFunSuite {
       // dynamicpruningexpression fed by the query-token bucket subquery
       assert(lazyIx.queryExecution.executedPlan.toString.contains("dynamicpruning"),
         "lazy indexed door: DPP must prune the postings bucket partitions")
-      // deterministic drain of the async listener queue (ADVICE r19: a
-      // fixed sleep could under-wait and let a construction job slip by)
-      org.apache.spark.GraftListenerSync.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() == 0,
-        s"lazy door construction/explain launched ${jobs.get()} jobs — must be plan-only")
+      (lazyScan, lazyIx)
+    }
+    assert(buildJobs == 0,
+      s"lazy door construction/explain launched $buildJobs jobs — must be plan-only")
 
-      def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          java.lang.Double.doubleToLongBits(r.getDouble(3)), r.getLong(4))).toSeq
-      val lazyScanRows = bits(lazyScan)
-      val lazyIxRows = bits(lazyIx)
-      org.apache.spark.GraftListenerSync.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() > 0, "the action must execute the deferred pipeline")
-      graft.operators.Dedup.clearCaches()
-      val eager = bits(Search.bm25TopKAll(docs, qs, k = 5))
-      assert(lazyScanRows == eager, "lazy scan door != eager door")
-      assert(lazyIxRows == eager, "lazy indexed door != eager door")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)), r.getLong(4))).toSeq
+    val ((lazyScanRows, lazyIxRows), actionJobs) =
+      GraftListenerSync.jobsOf(spark.sparkContext)((bits(lazyScan), bits(lazyIx)))
+    assert(actionJobs > 0, "the action must execute the deferred pipeline")
+    graft.operators.Dedup.clearCaches()
+    val eager = bits(Search.bm25TopKAll(docs, qs, k = 5))
+    assert(lazyScanRows == eager, "lazy scan door != eager door")
+    assert(lazyIxRows == eager, "lazy indexed door != eager door")
   }
 }
