@@ -94,10 +94,10 @@ object ScaleBench {
 
   /** What a section body reads: the session, the shared synthetic series
     * and the timer. */
-  final class Run private[ScaleBench] (val spark: SparkSession, rows: Long,
+  final class Run private[ScaleBench] (val spark: SparkSession, val rows: Long,
       corpus: Option[String], report: StageReport) {
     val t0Ms = 1704067200000L
-    private val spanMs = 7L * 86400000L
+    val spanMs: Long = 7L * 86400000L
     /** 900 s buckets over 7 days: 672 buckets. */
     val spec: TsAggSpec = TsAggSpec(900, TimeMode.CellTs(t0Ms, t0Ms + spanMs))
     /** Deterministic synthetic series: ts spread uniformly over 7 days,
@@ -225,14 +225,27 @@ object ScaleBench {
       }
       // sessionization: the one op whose exchange is necessarily O(events) —
       // a user's events must co-locate (true in any engine); keys are 8
-      // bytes. Conservation: every event lands in exactly one session.
-      run.time("sessionize 100k users (30 min gap, native session_window)") {
-        val ev = df.select(col("value").as("user"), col("ts")) // value ∈ [0, 100k)
-        val agg = TsAgg.sessionWindows(ev, 1800000L, Seq("user"))
+      // bytes. A user is one 30-min slice of the week within one of
+      // max(1, rows / 336k) value classes, so all its events fall within one
+      // gap and merge into exactly one session at any size: sessions ==
+      // users < events. Conservation: every event lands in exactly one
+      // session.
+      val gapMs = 1800000L
+      val slices = run.spanMs / gapMs
+      val classes = math.max(1L, run.rows / (slices * 1000L))
+      run.time(s"sessionize ${slices * classes} users (30 min gap, native session_window)") {
+        val ev = df.select(
+          (pmod(col("value"), lit(classes)) * lit(slices) +
+            floor((col("ts") - lit(run.t0Ms)) / lit(gapMs))).as("user"),
+          col("ts"))
+        val agg = TsAgg.sessionWindows(ev, gapMs, Seq("user"))
           .agg(sum("n_events"), count(lit(1))).collect().head
         val total = ev.count()
-        println(s"[scale] sessions: ${agg.getLong(1)} sessions over $total events")
+        val users = ev.select("user").distinct().count()
+        println(s"[scale] sessions: ${agg.getLong(1)} sessions of $users users over $total events")
         assert(agg.getLong(0) == total, s"event conservation: ${agg.getLong(0)} != $total")
+        assert(agg.getLong(1) == users && users < total,
+          s"each user's events merge into one session: ${agg.getLong(1)} sessions, $users users")
       }
     }),
 

@@ -1,18 +1,22 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 
 /**
  * Corpus deduplication — exact and near-dup — designed around one invariant:
- * **never materialize the O(n²) pair space.** Every variant generates
- * candidates through an equality key (hash group, LSH band, SimHash chunk) so
- * the only wide operation is a hash shuffle on that key; exact verification
- * runs only on candidates. That is the shape that survives 100 TB: the
- * shuffle volume is O(n × bands), not O(n²), and hot buckets (boilerplate
- * docs) are capped explicitly rather than discovered as stragglers.
+ * **never materialize the O(n²) pair space.** Every blocking variant (shingle,
+ * band key, fingerprint, gram hash, SimHash chunk, LSH bucket, IVF cell)
+ * generates its candidates through the one primitive [[keyPairs]]: a hash
+ * exchange on the equality key, then an `id_a < id_b` self-join, so the
+ * shuffle volume is O(n × keys per row), not O(n²); exact verification runs
+ * only on candidates. Hot keys (boilerplate docs) are capped by the one cap
+ * step [[capKeys]], a count window riding the key's exchange, rather than
+ * discovered as stragglers. Neither runs a driver action, so candidate
+ * generation launches no Spark job while a frame is built.
  */
 object Dedup {
 
@@ -21,32 +25,32 @@ object Dedup {
   def clearCaches(): Unit = Materialize.clear()
 
   /**
-   * Drop rows whose `keyCol` value occurs in more than `cap` rows — the
-   * hot-key guard shared by the shingle and fingerprint pair generators.
+   * Candidate pairs of a blocking dedup: one row per pair of `rows` that
+   * share the `key` columns, with `id_a < id_b`. The key columns keep their
+   * names; every other column (`id` included) is suffixed `_a` / `_b`. With
+   * a `cap`, a key held by more than `cap` rows yields no pairs.
    *
-   * The frequency aggregate is unavoidable (exactness needs a global count
-   * per key), but hot keys themselves are FEW by construction — they are the
-   * boilerplate outliers the cap exists to kill. So instead of equi-joining
-   * the full key set back against the exploded frame (a second shuffle-sized
-   * join + cache), collect the hot keys (size-gated) and prune with a
-   * map-side NOT-IN filter — free when no key is hot, which is the common
-   * case. If an adversarial corpus yields more hot keys than fit a filter
-   * literal, fall back to the broadcast anti-join (same semantics).
+   * Plan: a hash exchange on the key, which also spreads a compact corpus's
+   * pair join across the shuffle partitions; the cap's count window rides it;
+   * then the self-join. No driver action, so no Spark job runs until the
+   * caller's own action. Spark reuses the two sides' identical exchanges only
+   * when `rows` holds no `explode` (a Generate's output attributes defeat plan
+   * canonicalization), so an exploded `rows` is shuffled once per side;
+   * sharing (persisting) `rows` instead measured more jobs and more wall.
    */
-  private def capByFrequency(
-      exploded: DataFrame, keyCol: String, cap: Int,
-      maxCollectedHotKeys: Int = 10000): DataFrame = {
-    val hotDf = exploded.groupBy(keyCol).agg(count(lit(1)).as("__freq"))
-      .filter(col("__freq") > cap).select(keyCol)
-    val hot = hotDf.limit(maxCollectedHotKeys + 1).collect().map(_.getLong(0))
-    if (hot.isEmpty) exploded
-    else if (hot.length <= maxCollectedHotKeys)
-      // map-side prune over the already-persisted exploded frame — no
-      // second persist needed, both pair-join sides filter on read
-      exploded.filter(!col(keyCol).isInCollection(hot))
-    else
-      Materialize.share(exploded.join(hotDf, Seq(keyCol), "left_anti"))
+  private[graft] def keyPairs(rows: DataFrame, key: Seq[String], cap: Option[Int]): DataFrame = {
+    val keyed = rows.repartition(key.map(col): _*)
+    val kept = cap.fold(keyed)(capKeys(keyed, key, _))
+    val other = kept.columns.filterNot(key.contains)
+    def side(s: String) = kept.select(key.map(col) ++ other.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), key).filter(col("id_a") < col("id_b"))
   }
+
+  /** `rows` whose `key` is held by at most `cap` rows: a count window,
+    * riding the hash exchange on the key below it (or planning its own). */
+  private def capKeys(rows: DataFrame, key: Seq[String], cap: Int): DataFrame =
+    rows.withColumn("__n", count(lit(1)).over(Window.partitionBy(key.map(col): _*)))
+      .filter(col("__n") <= cap).drop("__n")
 
   /**
    * Exact dedup by content hash: one hash-aggregate (single shuffle on the
@@ -89,35 +93,17 @@ object Dedup {
     // a long compare, and no shingle strings are ever allocated. The DuckDB
     // oracle joins the raw strings; intersection counts agree because 64-bit
     // combination collisions are negligible (~n²/2⁶⁵).
-    val withSh = Parallelism.ensure(df)
+    val shingles = Parallelism.ensure(df)
       .filter(size(toks) >= n)
       .select(col(idCol).as("id"), tokenHashes(toks).as("th"))
       .select(col("id"), hashedShingles(col("th"), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-    // Persisted pre-partitioned on the shingle key: the frequency-cap
-    // aggregate, the cap join, and both pair-join sides all key on `s`, so
-    // one explicit exchange here is reused by every downstream wide op — and
-    // a compact corpus (one parquet file → one input partition) gets its
-    // explode/join parallelism from this exchange instead of running the
-    // quadratic-in-bucket pair join on a single core.
-    val exploded = Materialize.share( // both join sides read it
-      withSh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-        .repartition(col("s")))
-    val pruned = maxShingleFreq match {
-      case None => exploded
-      case Some(cap) => capByFrequency(exploded, "s", cap)
-    }
-    val a = pruned.select(col("id").as("id_a"), col("n_sh").as("n_a"), col("s"))
-    val b = pruned.select(col("id").as("id_b"), col("n_sh").as("n_b"), col("s"))
-    a.join(b, Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "n_a", "n_b")
+      .select(col("id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("s"))
+    val union = col("n_sh_a") + col("n_sh_b") - col("n_inter")
+    keyPairs(shingles, Seq("s"), maxShingleFreq)
+      .groupBy("id_a", "id_b", "n_sh_a", "n_sh_b")
       .agg(count(lit(1)).as("n_inter"))
-      .filter(
-        col("n_inter") * lit(thresholdDen) >=
-          lit(thresholdNum) * (col("n_a") + col("n_b") - col("n_inter")))
-      .select(col("id_a"), col("id_b"), col("n_inter"),
-        (col("n_a") + col("n_b") - col("n_inter")).as("n_union"))
+      .filter(col("n_inter") * lit(thresholdDen) >= lit(thresholdNum) * union)
+      .select(col("id_a"), col("id_b"), col("n_inter"), union.as("n_union"))
       .orderBy("id_a", "id_b")
   }
 
@@ -169,18 +155,8 @@ object Dedup {
       }: _*)).as("bk"))
       .select(col("id"), col("bk.band"), col("bk.bkey"))
 
-    // skew guard: drop band buckets larger than maxBandBucket (groupBy+join
-    // instead of a window: no sort, and AQE can broadcast the count side)
-    val okBuckets = banded.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") <= maxBandBucket)
-      .select("band", "bkey")
-    val sized = banded.join(okBuckets, Seq("band", "bkey"))
-
-    val a = sized.select(col("band"), col("bkey"), col("id").as("id_a"))
-    val b = sized.select(col("band"), col("bkey"), col("id").as("id_b"))
-    val candidatePairs = a.join(b, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
+    // skew guard: band buckets larger than maxBandBucket yield no pairs
+    val candidatePairs = keyPairs(banded, Seq("band", "bkey"), Some(maxBandBucket))
       .select("id_a", "id_b").distinct() // a pair may collide in several bands
 
     candidatePairs
@@ -221,21 +197,10 @@ object Dedup {
       maxFpFreq: Option[Int] = Some(1000)): DataFrame = {
     // distinct per doc: n_shared counts SET intersection (a doc repeating a
     // fingerprint must not inflate the pair count), and the explode-join
-    // never carries duplicate (id, fp) rows. Repartitioned on the fingerprint
-    // key: one exchange feeds the frequency cap and both pair-join sides
-    // (same rationale as ngramJaccard's shingle exchange).
-    val exploded = Materialize.share(
-      TextAnalysis.winnowFps(Parallelism.ensure(df), k, window, idCol, textCol)
-        .select(col(idCol).as("id"), explode(array_distinct(col("fps"))).as("f"))
-        .repartition(col("f")))
-    val pruned = maxFpFreq match {
-      case None => exploded
-      case Some(cap) => capByFrequency(exploded, "f", cap)
-    }
-    val a = pruned.select(col("f"), col("id").as("id_a"))
-    val b = pruned.select(col("f"), col("id").as("id_b"))
-    a.join(b, Seq("f"))
-      .filter(col("id_a") < col("id_b"))
+    // never carries duplicate (id, fp) rows
+    val exploded = TextAnalysis.winnowFps(Parallelism.ensure(df), k, window, idCol, textCol)
+      .select(col(idCol).as("id"), explode(array_distinct(col("fps"))).as("f"))
+    keyPairs(exploded, Seq("f"), maxFpFreq)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= lit(minShared))
@@ -299,7 +264,6 @@ object Dedup {
     require(gramK >= 6,
       s"gramK must be >= 6 (the winnowing guarantee width) for the prefilter to be lossless, got $gramK")
     require(minLen >= gramK, s"minLen ($minLen) must be >= gramK ($gramK): shorter runs produce no gram match")
-    import org.apache.spark.sql.expressions.Window
     val toks = tokens(col(textCol))
     val src = Parallelism.ensure(df).filter(size(toks) >= gramK)
 
@@ -310,51 +274,24 @@ object Dedup {
     // skew guard, and it is oracle-mirrored.
     val candOpt: Option[DataFrame] =
       if (!winnowPrefilter) None
-      else {
-        // persisted: BOTH self-join sides read this frame, and without the
-        // cache each side re-ran the full tokenize+winnow+explode pass
-        // (r21, StageProf at sf0.1: two identical 235k-row map stages)
-        val fps = Materialize.share(
-          TextAnalysis.winnowFps(src, 3, 4, idCol, textCol)
-            .select(col(idCol).as("id"), explode(array_distinct(col("fps"))).as("f"))
-            .repartition(col("f")))
-        val fa = fps.select(col("f"), col("id").as("id_a"))
-        val fb = fps.select(col("f"), col("id").as("id_b"))
-        Some(Materialize.share(
-          fa.join(fb, Seq("f")).filter(col("id_a") < col("id_b"))
-            .select("id_a", "id_b").distinct()))
-      }
+      else Some(keyPairs(
+        TextAnalysis.winnowFps(src, 3, 4, idCol, textCol)
+          .select(col(idCol).as("id"), explode(array_distinct(col("fps"))).as("f")),
+        Seq("f"), None).select("id_a", "id_b").distinct())
 
-    // position-indexed gram hashes, pre-partitioned on the join key (one
-    // exchange feeds the frequency cap and both join sides)
-    val grams = Materialize.share(
-      src.select(col(idCol).as("id"), tokenHashes(toks).as("th"))
-        .select(col("id"), posexplode(orderedShingleHashes(col("th"), gramK)).as(Seq("pos", "h")))
-        .repartition(col("h")))
-    val pruned = maxGramFreq match {
-      case None => grams
-      case Some(cap) => capByFrequency(grams, "h", cap)
-    }
+    // position-indexed gram hashes; the cap counts every gram row, before
+    // the candidate-doc restriction (the oracle caps the same way)
+    val grams = src.select(col(idCol).as("id"), tokenHashes(toks).as("th"))
+      .select(col("id"), posexplode(orderedShingleHashes(col("th"), gramK)).as(Seq("pos", "h")))
+    val capped = maxGramFreq.fold(grams)(capKeys(grams, Seq("h"), _))
     // restrict gram rows to candidate docs before the self-join
-    val restricted = candOpt match {
-      case None => pruned
-      case Some(cand) =>
-        val candDocs = cand.select(col("id_a").as("id"))
-          .union(cand.select(col("id_b").as("id"))).distinct()
-        // persisted: the gram self-join's two sides otherwise EACH re-read
-        // the grams cache and re-run this semi join + the h re-exchange
-        // (the cache sits below grams' repartition, so InMemoryRelation
-        // hides the HashPartitioning and EnsureRequirements re-exchanges
-        // both sides regardless — feed those exchanges from one cached
-        // frame instead of two recomputes; r21 StageProf: two identical
-        // 225k-row 64-task stages)
-        Materialize.share(pruned.join(candDocs, Seq("id"), "left_semi"))
+    val restricted = candOpt.fold(capped) { cand =>
+      val candDocs = cand.select(col("id_a").as("id"))
+        .union(cand.select(col("id_b").as("id"))).distinct()
+      capped.join(candDocs, Seq("id"), "left_semi")
     }
-    val a = restricted.select(col("h"), col("id").as("id_a"), col("pos").as("pa"))
-    val b = restricted.select(col("h"), col("id").as("id_b"), col("pos").as("pb"))
-    val matchedAll = a.join(b, Seq("h"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "pa", "pb")
+    val matchedAll = keyPairs(restricted, Seq("h"), None)
+      .select(col("id_a"), col("id_b"), col("pos_a").as("pa"), col("pos_b").as("pb"))
     // pair-level restriction prunes coincidental cross-pair gram collisions
     // before the islands window (they could never reach minLen — see the
     // losslessness argument — but dropping them early is free)
@@ -651,16 +588,11 @@ object Dedup {
       explode(hammingChunkKeys(h64, maxHamming)).as("ck"))
       .select(col("id"), col("w_lo"), col("w_hi"), col("ck.chunk"), col("ck.ckey"))
 
-    val a = chunked.select(col("chunk"), col("ckey"), col("id").as("id_a"),
-      col("w_lo").as("lo_a"), col("w_hi").as("hi_a"))
-    val b = chunked.select(col("chunk"), col("ckey"), col("id").as("id_b"),
-      col("w_lo").as("lo_b"), col("w_hi").as("hi_b"))
-    a.join(b, Seq("chunk", "ckey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "lo_a", "hi_a", "lo_b", "hi_b").distinct()
+    keyPairs(chunked, Seq("chunk", "ckey"), None)
+      .select("id_a", "id_b", "w_lo_a", "w_hi_a", "w_lo_b", "w_hi_b").distinct()
       .withColumn("hamming",
-        (bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
-          bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).cast("long"))
+        (bit_count(col("w_lo_a").bitwiseXOR(col("w_lo_b"))) +
+          bit_count(col("w_hi_a").bitwiseXOR(col("w_hi_b")))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
       .orderBy("id_a", "id_b")
@@ -792,26 +724,14 @@ object Dedup {
       // map-side work is far cheaper than shuffling the candidate pair space
       // (measured 5.8 s → sub-second at sf0.1). Right choice whenever
       // corpus × tables × dim × 8 B fits the shuffle comfortably.
-      // q + norm2 as plain projections next to the vector — NO join; the
-      // persisted banded frame is the only thing either pair side reads
+      // q + norm2 as plain projections next to the vector — NO join. The
+      // band-key exchange also spreads a compact corpus's pair join (the
+      // dominant cost, |bucket|² dot products per bucket) across cores;
+      // without it the join ran at source parallelism (sf0.1: 9.8 s → ~1 s).
       val quantKeys = quantized(df, idCol, vecCol, keepVecCol = Some(vecCol))
-      // Repartition on the band key BEFORE the self-join: this is the banding
-      // exchange the design already budgets for, made explicit. Without it a
-      // compact corpus (one parquet file → one input partition) leaves the
-      // pair join — the dominant cost, |bucket|² dot products per bucket — on
-      // a single core: Catalyst broadcasts the small build side and streams
-      // the probe side AT ITS SOURCE PARALLELISM. Measured at sf0.1:
-      // 9.8 s → ~1 s. At 100 TB the same exchange spreads buckets across
-      // executors, so it is the right plan at every scale.
-      val banded = Materialize.share(
-        Similarity.withLshKeys(quantKeys, dim, tables, planesPerTable, vecCol)
-          .select(col("id"), col("ltable"), col("lkey"), col("q"), col("norm2"))
-          .repartition(col("ltable"), col("lkey")))
-      val aV = banded.select(col("ltable"), col("lkey"),
-        col("id").as("id_a"), col("q").as("q_a"), col("norm2").as("n2_a"))
-      val bV = banded.select(col("ltable"), col("lkey"),
-        col("id").as("id_b"), col("q").as("q_b"), col("norm2").as("n2_b"))
-      verifyCosine(aV.join(bV, Seq("ltable", "lkey")).filter(col("id_a") < col("id_b")),
+      val banded = Similarity.withLshKeys(quantKeys, dim, tables, planesPerTable, vecCol)
+        .select(col("id"), col("ltable"), col("lkey"), col("q"), col("norm2").as("n2"))
+      verifyCosine(keyPairs(banded, Seq("ltable", "lkey"), None),
         thresholdNum, thresholdDen, distinctPairs = true)
     } else {
       // Id-only banding for corpora where vectors would dominate the banding
@@ -821,10 +741,7 @@ object Dedup {
       val quant = Materialize.share(quantized(df, idCol, vecCol))
       val banded = Similarity.withLshKeys(df, dim, tables, planesPerTable, vecCol)
         .select(col(idCol).as("id"), col("ltable"), col("lkey"))
-      val aK = banded.select(col("ltable"), col("lkey"), col("id").as("id_a"))
-      val bK = banded.select(col("ltable"), col("lkey"), col("id").as("id_b"))
-      val candidates = aK.join(bK, Seq("ltable", "lkey"))
-        .filter(col("id_a") < col("id_b"))
+      val candidates = keyPairs(banded, Seq("ltable", "lkey"), None)
         .select("id_a", "id_b").distinct() // a pair may collide in several tables
       val pairs = candidates
         .join(quant.select(col("id").as("id_a"), col("q").as("q_a"), col("norm2").as("n2_a")), Seq("id_a"))
@@ -964,14 +881,9 @@ object Dedup {
         .withColumn("dc", graft.functions.expressions.ArrayDotProduct(
           col("q"), element_at(centsLit, element_at(col("cells"), 1) + 1)))
         .withColumn("cn2", element_at(cn2Lit, element_at(col("cells"), 1) + 1)))
-    val spilled = q.select(col("id"), col("q"), col("norm2"), col("dc"), col("cn2"),
+    val spilled = q.select(col("id"), col("q"), col("norm2").as("n2"), col("dc"), col("cn2"),
       explode(col("cells")).as("cell"))
-    val a = spilled.select(col("cell"), col("id").as("id_a"), col("q").as("q_a"),
-      col("norm2").as("n2_a"), col("dc").as("dc_a"), col("cn2").as("cn2_a"))
-    val b = spilled.select(col("cell"), col("id").as("id_b"), col("q").as("q_b"),
-      col("norm2").as("n2_b"), col("dc").as("dc_b"), col("cn2").as("cn2_b"))
-    val pairs = a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
+    val pairs = keyPairs(spilled, Seq("cell"), None)
       .withColumn("dot", graft.functions.expressions.ArrayDotProduct(col("q_a"), col("q_b")))
       .filter(col("dot") > lit(0L) &&
         col("dot") * col("dot") * lit(thresholdDen * thresholdDen) >=

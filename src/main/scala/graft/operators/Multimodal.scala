@@ -979,10 +979,7 @@ object Multimodal {
       col("id"), col("h"),
       explode(Dedup.hammingChunkKeys(col("h"), maxHamming)).as("ck"))
       .select(col("id"), col("h"), col("ck.chunk"), col("ck.ckey"))
-    val a = chunked.select(col("chunk"), col("ckey"), col("id").as("id_a"), col("h").as("h_a"))
-    val b = chunked.select(col("chunk"), col("ckey"), col("id").as("id_b"), col("h").as("h_b"))
-    a.join(b, Seq("chunk", "ckey"))
-      .filter(col("id_a") < col("id_b"))
+    Dedup.keyPairs(chunked, Seq("chunk", "ckey"), None)
       .select("id_a", "id_b", "h_a", "h_b").distinct()
       .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)

@@ -89,9 +89,11 @@ object PushedAggFn {
 }
 
 /** A validated, pushable aggregation: group-by schema fields + agg functions +
-  * the scan output schema `[groupCols..., aggCols...]` Spark expects. */
+  * the scan output schema `[groupCols..., aggCols...]` Spark expects. `ansi`
+  * is the planning session's `spark.sql.ansi.enabled`: a Long SUM that
+  * overflows raises with it on and wraps with it off, as Spark's own sum. */
 final case class PushedAggregation(
-    groupFields: Seq[Int], aggs: Seq[PushedAggFn], schema: StructType)
+    groupFields: Seq[Int], aggs: Seq[PushedAggFn], schema: StructType, ansi: Boolean)
 
 class GraftCellsScanBuilder(path: String)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -181,7 +183,8 @@ class GraftCellsScanBuilder(path: String)
         case PushedAggFn.SumFn(f) => StructField(name("sum"), schema.fields(f).dataType, nullable = true)
       }
     }
-    pushedAgg = Some(PushedAggregation(gIdx, aFns, StructType(fields)))
+    pushedAgg = Some(PushedAggregation(gIdx, aFns, StructType(fields),
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
     true
   }
 
@@ -452,7 +455,9 @@ class GraftCellsAggPartitionReader(
         case OpSum =>
           if (fieldIsLong(i)) {
             acc.longs(i) =
-              if (acc.seen(i)) Math.addExact(acc.longs(i), cur.valueLong) else cur.valueLong
+              if (!acc.seen(i)) cur.valueLong
+              else if (agg.ansi) Math.addExact(acc.longs(i), cur.valueLong)
+              else acc.longs(i) + cur.valueLong
           } else {
             acc.doubles(i) = if (acc.seen(i)) acc.doubles(i) + cur.valueDouble else cur.valueDouble
           }

@@ -131,6 +131,43 @@ class CellSourceSpec extends AnyFunSuite {
     assert(v2.collect().map(_.toString).sameElements(viaPq))
   }
 
+  test("a pushed Long SUM that overflows raises under ANSI and wraps with it off, as the Parquet path does") {
+    import spark.implicits._
+    // two 2^62 cells in one region and one group: the region reader's own
+    // fold overflows before Spark's final merge sees a partial
+    val cells = Seq((0L, 1L << 62, "a"), (1L, 1L << 62, "a"), (2L, 5L, "b")).map {
+      case (id, v, et) => (BinaryCodec.be(id, 8), BinaryCodec.be(0L, 4), BinaryCodec.be(v, 8),
+        v, v.toDouble, et)
+    }.toDF("key", "qual", "value", "value_long", "value_double", "event_type")
+    val tmp = java.nio.file.Files.createTempDirectory("gcell-overflow").toString
+    CellRegions.writeRegionDir(cells, s"$tmp/regions", numRegions = 1)
+    cells.write.parquet(s"$tmp/pq")
+    def sums(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("event_type").agg(sum("value_long").as("s")).orderBy("event_type")
+    def pushed = sums(spark.read.format("graft-cells").load(s"$tmp/regions"))
+    def viaPq = sums(spark.read.parquet(s"$tmp/pq"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    def causes(t: Throwable) = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    def withAnsi[T](on: Boolean)(f: => T): T = {
+      val prior = spark.conf.getOption("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", on.toString)
+      try f
+      finally prior.fold(spark.conf.unset("spark.sql.ansi.enabled"))(spark.conf.set("spark.sql.ansi.enabled", _))
+    }
+    withAnsi(on = true) {
+      assert(v2Scan(pushed).description().contains("SUM(value_long)"), "sum not pushed")
+      Seq(pushed, viaPq).foreach { df =>
+        val e = intercept[Exception](df.collect())
+        assert(causes(e).exists(_.isInstanceOf[ArithmeticException]), e.toString)
+      }
+    }
+    withAnsi(on = false) {
+      assert(v2Scan(pushed).description().contains("SUM(value_long)"), "sum not pushed")
+      assert(rows(pushed) == Seq("a" -> Long.MinValue, "b" -> 5L), "2^62 + 2^62 wraps")
+      assert(rows(pushed) == rows(viaPq))
+    }
+  }
+
   test("GetCount shape: COUNT(*) pushes beneath a claimed key-range filter") {
     val startKey = BinaryCodec.be(7L, 8) ++ BinaryCodec.be((T0 + DAY) / 1000L, 4)
     val stopKey = BinaryCodec.be(7L, 8) ++ BinaryCodec.be((T0 + 2 * DAY) / 1000L, 4)

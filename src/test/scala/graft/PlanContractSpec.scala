@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Dedup
+
 /**
  * Physical-plan contracts: the scale properties README promises are asserted
  * here so a regression (a filter that stops pushing down, an extra exchange,
@@ -65,7 +67,8 @@ class PlanContractSpec extends AnyFunSuite {
   test("no blocked dedup query cross-joins — candidates come through equality keys (r2)") {
     Seq("dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard",
       "span_near_dup", "dedup_semantic", "dedup_image_phash",
-      "dedup_incremental_near", "dedup_incremental_spans").foreach { q =>
+      "dedup_incremental_near", "dedup_incremental_spans",
+      "dedup_exact_spans", "dedup_cut_spans").foreach { q =>
       val p = plan(q)
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$q must not cross-join:\n$p")
@@ -219,21 +222,42 @@ class PlanContractSpec extends AnyFunSuite {
       s"three probe passes (explode + semi + crossing bucket):\n$p")
   }
 
-  test("ngram jaccard guards hot shingles (frequency cap drops boilerplate keys)") {
-    // Since the capByFrequency rewrite the cap is an eager side job + map-side
-    // NOT-IN filter (no join in the final plan when nothing is hot), so the
-    // guard is asserted SEMANTICALLY: 12 docs share a 5-token boilerplate
-    // prefix (3 shingles in all 12 docs) plus one unique tail shingle.
+  /** 12 identical documents of 20 distinct tokens: every shingle, band key,
+    * fingerprint and gram is held by exactly 12 rows, one per document, and
+    * every one of the 66 document pairs is a near-dup with one shared span. */
+  private def identicalDocs: DataFrame = {
     import spark.implicits._
-    val docs = (1L to 12L).map(i => (i, s"lorem ipsum dolor sit amet w$i"))
-      .toDF("doc_id", "text")
-    // uncapped: intersection 3 of union 5 → jaccard 3/5 ≥ 1/2, all 66 pairs
-    assert(graft.operators.Dedup.ngramJaccard(docs, maxShingleFreq = None).count() == 66L)
-    // cap 10 < 12: the three boilerplate shingles are hot and dropped; the
-    // only surviving shingle per doc is unique → zero pairs
-    assert(graft.operators.Dedup.ngramJaccard(docs, maxShingleFreq = Some(10)).count() == 0L)
-    // the default cap (1000) must NOT fire on a 12-doc corpus
-    assert(graft.operators.Dedup.ngramJaccard(docs).count() == 66L)
+    (1L to 12L).map(i => (i, (1 to 20).map(t => s"w$t").mkString(" "))).toDF("doc_id", "text")
+  }
+
+  /** The four capped pair generators: (cap name, output at a given cap,
+    * output at the default cap). */
+  private def cappedGenerators(docs: DataFrame): Seq[(String, Int => DataFrame, () => DataFrame)] =
+    Seq(
+      ("maxShingleFreq", c => Dedup.ngramJaccard(docs, maxShingleFreq = Some(c)), () => Dedup.ngramJaccard(docs)),
+      ("maxBandBucket", c => Dedup.minhashNearDup(docs, maxBandBucket = c), () => Dedup.minhashNearDup(docs)),
+      ("maxFpFreq", c => Dedup.spanNearDup(docs, maxFpFreq = Some(c)), () => Dedup.spanNearDup(docs)),
+      ("maxGramFreq", c => Dedup.exactSpans(docs, maxGramFreq = Some(c)), () => Dedup.exactSpans(docs)))
+
+  test("capped pair generators pair a key of exactly cap rows, not of cap + 1 rows") {
+    // the cap is a count window riding the key's exchange (Dedup.capKeys),
+    // so the guard is asserted on the output at the boundary
+    val docs = identicalDocs
+    cappedGenerators(docs).foreach { case (cap, atCap, default) =>
+      assert(atCap(12).count() == 66L, s"$cap = 12: every key is held by exactly 12 rows")
+      assert(atCap(11).count() == 0L, s"$cap = 11: every key is held by 12 rows")
+      // the default cap (1000) must not fire on a 12-doc corpus
+      assert(default().count() == 66L, s"$cap default")
+    }
+    Seq(Dedup.ngramJaccard(docs, maxShingleFreq = None), Dedup.spanNearDup(docs, maxFpFreq = None),
+      Dedup.exactSpans(docs, maxGramFreq = None)).foreach(uncapped => assert(uncapped.count() == 66L))
+  }
+
+  test("building a capped pair generator runs no Spark job") {
+    cappedGenerators(identicalDocs).foreach { case (cap, atCap, _) =>
+      val (_, jobs) = org.apache.spark.GraftListenerSync.jobsOf(spark.sparkContext)(atCap(11))
+      assert(jobs == 0, s"$jobs job(s) ran while the $cap caller was built")
+    }
   }
 
   test("curation text queries run compiled kernels: no higher-order function or lambda in the plan") {
