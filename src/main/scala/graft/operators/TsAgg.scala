@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
+import graft.functions.expressions.ParamLiteral
+
 /**
  * Time-derivation mode for a tumbling-bucket aggregation.
  *
@@ -63,27 +65,46 @@ final case class TsAggSpec(
     valueCol: String = "value",
     seriesCols: Seq[String] = Nil) {
   require(intervalSec > 0, s"intervalSec must be positive, got $intervalSec")
+  require(intervalSec <= Long.MaxValue / 1000L,
+    s"intervalSec must be at most ${Long.MaxValue / 1000L} (the interval in ms is a Long), got $intervalSec")
   require(
     mode.t0Ms < mode.t1Ms,
     s"time range start (${mode.t0Ms}) must be < end (${mode.t1Ms})") // ref client :575-581
+  require(BigInt(scanLastMs) - mode.t0Ms <= Long.MaxValue,
+    s"time range [${mode.t0Ms}, $scanLastMs] spans more than Long.MaxValue ms, so ts - t0 would wrap")
 
   def intervalMs: Long = intervalSec * 1000L
 
-  /** Start of the bucket containing `tMs` (alignment to `t0`, not epoch — SURVEY §2.3 #2). */
+  /** Start of the bucket containing `tMs` (alignment to `t0`, not epoch — SURVEY §2.3 #2).
+    * Exact over the whole Long range; a bucket that would start before
+    * `Long.MinValue` raises. */
   def bucketStartOf(tMs: Long): Long = {
-    val d = tMs - mode.t0Ms
-    mode.t0Ms + (d - Math.floorMod(d, intervalMs))
+    val d = BigInt(tMs) - mode.t0Ms
+    val start = mode.t0Ms + d - d.mod(intervalMs)
+    if (!start.isValidLong) throw new ArithmeticException(s"the bucket of $tMs starts before Long.MinValue")
+    start.toLong
   }
 
   /**
-   * Exclusive upper bound of the data actually aggregated.
-   * Key mode includes the trailing bucket that *starts* at `t1`
-   * (`TimeseriesAggregateImplementation.java:107-110`); cell-ts mode cuts at `t1`.
+   * Last millisecond aggregated (inclusive): `t1 - 1` in cell-ts mode; in key
+   * mode the last of the trailing bucket that *starts* at or before `t1`
+   * (`TimeseriesAggregateImplementation.java:107-110`), saturated at
+   * `Long.MaxValue`, past which no Long timestamp lies.
    */
-  def scanEndMs: Long = mode match {
-    case TimeMode.CellTs(_, t1)      => t1
-    case TimeMode.KeyEmbedded(_, t1) => bucketStartOf(t1) + intervalMs
+  def scanLastMs: Long = mode match {
+    case TimeMode.CellTs(_, t1)      => t1 - 1
+    case TimeMode.KeyEmbedded(_, t1) =>
+      (BigInt(bucketStartOf(t1)) + intervalMs - 1).min(Long.MaxValue).toLong
   }
+
+  /**
+   * Exclusive upper bound of the data actually aggregated: `scanLastMs + 1`.
+   * Key mode includes the trailing bucket that *starts* at `t1`; cell-ts mode
+   * cuts at `t1`. When that trailing bucket runs past the Long range the bound
+   * saturates at `Long.MaxValue` instead of wrapping (the aggregates filter on
+   * the inclusive [[scanLastMs]], so they lose nothing).
+   */
+  def scanEndMs: Long = if (scanLastMs == Long.MaxValue) Long.MaxValue else scanLastMs + 1
 }
 
 /**
@@ -122,14 +143,18 @@ object TsAgg {
    * any epoch value — `floor(x / iv)` via doubles can be off by one ulp.
    */
   def bucketStartExpr(tsMs: Column, t0Ms: Long, intervalMs: Long): Column = {
-    val d = tsMs - lit(t0Ms)
-    (lit(t0Ms) + (d - pmod(d, lit(intervalMs)))).as("bucket_start")
+    val d = tsMs - ParamLiteral(t0Ms)
+    (ParamLiteral(t0Ms) + (d - pmod(d, ParamLiteral(intervalMs)))).as("bucket_start")
   }
 
-  /** Filter + bucket projection shared by every aggregate. */
+  /**
+   * Filter + bucket projection shared by every aggregate. The range and the
+   * interval enter the plan as [[ParamLiteral]]s, so reads that differ only
+   * in them share one compiled class.
+   */
   def withBuckets(df: DataFrame, spec: TsAggSpec): DataFrame = {
     val ts = tsMillis(df, spec)
-    df.filter(ts >= lit(spec.mode.t0Ms) && ts < lit(spec.scanEndMs))
+    df.filter(ts >= ParamLiteral(spec.mode.t0Ms) && ts <= ParamLiteral(spec.scanLastMs))
       .withColumn("bucket_start", bucketStartExpr(ts, spec.mode.t0Ms, spec.intervalMs))
   }
 
@@ -747,11 +772,11 @@ object TsAgg {
   def fillGaps(df: DataFrame, spec: TsAggSpec, how: String = "prev"): DataFrame = {
     require(Set("null", "prev", "linear")(how), s"how must be null|prev|linear, got '$how'")
     val summed = bucketed(df, spec, Seq(sumValue(spec)))
-    val iv = spec.intervalMs
-    val nBuckets = (spec.scanEndMs - spec.mode.t0Ms + iv - 1) / iv
+    val nBuckets = (spec.scanLastMs - spec.mode.t0Ms) / spec.intervalMs + 1
     val spine0 = summed.sparkSession
       .range(nBuckets)
-      .select((lit(spec.mode.t0Ms) + col("id") * iv).as("bucket_start"))
+      .select((ParamLiteral(spec.mode.t0Ms) + col("id") * ParamLiteral(spec.intervalMs))
+        .as("bucket_start"))
     val spine =
       if (spec.seriesCols.isEmpty) spine0
       else summed.select(spec.seriesCols.map(col): _*).distinct().crossJoin(spine0)

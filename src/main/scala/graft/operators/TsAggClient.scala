@@ -214,8 +214,7 @@ object TsAggClient {
     rows.flatMap { r =>
       val ansi = df.sparkSession.sessionState.conf.ansiEnabled
       val partials = r.mapPartitions(foldPartition(agg, ansi))(Encoders.product[Partial])
-      val iv = spec.intervalMs
-      val buckets = (BigInt(spec.scanEndMs) - spec.mode.t0Ms + iv - 1) / iv
+      val buckets = (BigInt(spec.scanLastMs) - spec.mode.t0Ms) / spec.intervalMs + 1
       stagePartitions(partials.queryExecution.executedPlan)
         .filter(n => BigInt(n) * buckets <= MaxDriverPartials)
         .map { _ =>

@@ -1,9 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+
+import graft.functions.expressions.ParamLiteral
 
 /**
  * Centralized Parquet source layer (SURVEY §2.1 S1: the reference's only source
@@ -98,30 +100,47 @@ object Tables {
    * `events` with an optional epoch-millis scan range `[t0, end)`.
    *
    * The range predicate is applied to the RAW parquet column *before* the
-   * ns→µs conversion: a filter phrased on the converted expression
-   * (`unix_millis(timestamp_micros(ts div 1000)) >= t0`) never reaches the
-   * scan (`PushedFilters: [IsNotNull(ts)]` only), which at 100 TB forfeits all
-   * row-group/min-max pruning. On the raw nanos long the bound is exact
-   * (`tMs·10⁶`) and shows up in `PushedFilters`, so Parquet skips every
-   * row group outside the window before decoding a single page.
+   * ns→µs (or NTZ→LTZ) conversion: a filter phrased on the converted
+   * expression (`unix_millis(timestamp_micros(ts div 1000)) >= t0`) never
+   * reaches the scan (`PushedFilters: [IsNotNull(ts)]` only), which at 100 TB
+   * forfeits all row-group/min-max pruning. On the raw column the bound is
+   * exact (see [[within]]) and shows up in `PushedFilters`, so Parquet skips
+   * every row group outside the window before decoding a single page.
    */
   def events(s: SparkSession, dir: String, boundsMs: Option[(Long, Long)]): DataFrame = {
-    val df = readNormalized(s, s"$dir/events.parquet")
-    df.schema("ts").dataType match {
-      case LongType => // nanos-as-long path
-        val bounded = boundsMs match {
-          case Some((t0, end)) =>
-            df.filter(col("ts") >= lit(t0 * 1000000L) && col("ts") < lit(end * 1000000L))
-          case None => df
-        }
-        bounded.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case _ =>
-        boundsMs match {
-          case Some((t0, end)) =>
-            df.filter(col("ts") >= timestamp_millis(lit(t0)) && col("ts") < timestamp_millis(lit(end)))
-          case None => df
-        }
+    val raw = readParquet(s, s"$dir/events.parquet")
+    val bounded = boundsMs.fold(raw) { case (t0, end) => raw.filter(within(raw, "ts", t0, end)) }
+    val micros = bounded.schema("ts").dataType match {
+      case LongType => bounded.withColumn("ts", timestamp_micros(expr("ts DIV 1000"))) // nanos-as-long
+      case _ => bounded
     }
+    ntzToLtz(micros)
+  }
+
+  /**
+   * Raw column `name` of `df` within the epoch-millis range `[t0, end)`: a
+   * Long of nanos (nanosAsLong) or a timestamp of micros. The bounds are
+   * [[ParamLiteral]]s, so reads over different ranges share one compiled
+   * class, and Parquet still prunes on them. They are exact over the whole
+   * Long range: a bound past it holds every stored value or none, so it
+   * saturates at the Long limit and its comparison turns inclusive (every
+   * value) or strict (none) there.
+   */
+  private def within(df: DataFrame, name: String, t0Ms: Long, endMs: Long): Column = {
+    val c = col(name)
+    val t = df.schema(name).dataType
+    val unitsPerMs = t match {
+      case LongType => 1000000L
+      case TimestampType | TimestampNTZType => 1000L
+      case other => throw new IllegalArgumentException(
+        s"$name must be Long nanos or a timestamp to take a time range, got $other")
+    }
+    val lo = BigInt(t0Ms) * unitsPerMs
+    val end = BigInt(endMs) * unitsPerMs
+    def param(v: BigInt) = ParamLiteral(v.max(Long.MinValue).min(Long.MaxValue).toLong, t)
+    val lower = if (lo > Long.MaxValue) c > param(lo) else c >= param(lo)
+    val upper = if (end > Long.MaxValue) c <= param(end) else c < param(end)
+    lower && upper
   }
 
   def lineitem(s: SparkSession, dir: String): DataFrame = readNormalized(s, s"$dir/lineitem.parquet")
@@ -130,16 +149,7 @@ object Tables {
     * NTZ column (a filter on the post-cast LTZ column would not prune). */
   def lineitemShipRange(s: SparkSession, dir: String, t0Ms: Long, endMs: Long): DataFrame = {
     val raw = readParquet(s, s"$dir/lineitem.parquet")
-    val bounded = raw.schema("l_shipdate").dataType match {
-      case TimestampNTZType =>
-        def ntz(ms: Long) = typedLit(
-          java.time.LocalDateTime.ofInstant(java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC))
-        raw.filter(col("l_shipdate") >= ntz(t0Ms) && col("l_shipdate") < ntz(endMs))
-      case _ =>
-        raw.filter(col("l_shipdate") >= timestamp_millis(lit(t0Ms)) &&
-          col("l_shipdate") < timestamp_millis(lit(endMs)))
-    }
-    ntzToLtz(bounded)
+    ntzToLtz(raw.filter(within(raw, "l_shipdate", t0Ms, endMs)))
   }
   def orders(s: SparkSession, dir: String): DataFrame = readNormalized(s, s"$dir/orders.parquet")
   def customer(s: SparkSession, dir: String): DataFrame = readNormalized(s, s"$dir/customer.parquet")

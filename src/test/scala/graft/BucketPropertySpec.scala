@@ -68,4 +68,25 @@ class BucketPropertySpec extends AnyFunSuite {
       distinctBuckets == (span + iv - 1) / iv
     })
   }
+
+  test("millisecond arithmetic that would wrap is rejected or saturates, never wraps") {
+    // an interval whose millis do not fit a Long (it read as -80 ms)
+    intercept[IllegalArgumentException](TsAggSpec(Long.MaxValue / 100, TimeMode.CellTs(0, 10)))
+    assert(TsAggSpec(Long.MaxValue / 1000, TimeMode.CellTs(0, 10)).intervalMs == Long.MaxValue / 1000 * 1000)
+    // key mode's trailing bucket runs past the Long range: the exclusive end
+    // saturates (it read as -9223372036851951616) and the last ms is exact
+    val key = TsAggSpec(3600, TimeMode.KeyEmbedded(0, Long.MaxValue - 1))
+    val last = key.bucketStartOf(Long.MaxValue - 1)
+    assert(last == (Long.MaxValue - 1) - (Long.MaxValue - 1) % 3600000L)
+    assert(key.scanEndMs == Long.MaxValue && key.scanLastMs == Long.MaxValue)
+    assert(key.bucketStartOf(Long.MaxValue) == last)
+    // in range, the end is the last ms + 1 in both modes
+    val cell = TsAggSpec(3600, TimeMode.CellTs(0, Long.MaxValue))
+    assert(cell.scanEndMs == Long.MaxValue && cell.scanLastMs == Long.MaxValue - 1)
+    // a range wider than a Long of millis would wrap ts - t0
+    intercept[IllegalArgumentException](TsAggSpec(3600, TimeMode.CellTs(Long.MinValue, Long.MaxValue)))
+    // a bucket that would start before Long.MinValue raises
+    val late = TsAggSpec(3600, TimeMode.CellTs(1L, 2L))
+    intercept[ArithmeticException](late.bucketStartOf(Long.MinValue))
+  }
 }

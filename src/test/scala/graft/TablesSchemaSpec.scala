@@ -6,6 +6,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.GraftListenerSync
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,8 @@ import graft.sources.Tables
 /**
  * `Tables` infers a Parquet schema once and reuses it: a warm build runs no
  * Spark job, and a rewritten file or a changed Parquet conf infers again.
+ * A time range given in millis reaches the raw column exactly, whatever its
+ * bounds.
  */
 class TablesSchemaSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -83,6 +86,25 @@ class TablesSchemaSpec extends AnyFunSuite {
     } finally prior match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
+    }
+  }
+
+  test("events bounds past the Long range saturate instead of wrapping") {
+    // Long nanos (the nanosAsLong form) and NTZ micros (the sf0.001 fixture)
+    val nanos = tmpDir()
+    spark.range(0, 1000, 1, 2).select(
+      (lit(1704067200000L) * 1000000L + col("id") * 3600000000000L).as("ts"),
+      col("id").cast("double").as("value"))
+      .write.parquet(s"$nanos/events.parquet")
+    Seq(nanos, sf).foreach { dir =>
+      val all = Tables.events(spark, dir).count()
+      assert(all > 0)
+      Seq((0L, Long.MaxValue), (0L, Long.MaxValue / 2), (Long.MinValue, Long.MaxValue)).foreach { b =>
+        assert(Tables.events(spark, dir, Some(b)).count() == all, s"$dir $b")
+      }
+      Seq((Long.MaxValue / 2, Long.MaxValue), (Long.MinValue, 0L), (5L, 5L)).foreach { b =>
+        assert(Tables.events(spark, dir, Some(b)).count() == 0, s"$dir $b")
+      }
     }
   }
 }

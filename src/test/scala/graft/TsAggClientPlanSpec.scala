@@ -25,7 +25,9 @@ import graft.operators.{TimeMode, TsAgg, TsAggClient, TsAggSpec}
  * answers equal to the sorted `TsAgg.*` DataFrames at any shuffle partition
  * count; and the same answers on the edges of the merge: integer values,
  * nulls, Long overflow under either ANSI setting, and the shuffle fallback
- * past the partial bound.
+ * past the partial bound. Reads that differ only in range and interval share
+ * one generated class, while their plans stay apart for caching and their
+ * bounds still reach the Parquet scan.
  */
 class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -61,21 +63,23 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "sum" -> TsAggClient.sum(df, s), "count" -> TsAggClient.count(df, s),
     "avg" -> TsAggClient.avg(df, s))
 
-  private def forms(): Seq[Form] = {
-    val events = graft.sources.Tables.events(spark, sf)
+  /** The three source forms read over `s`; the typed form bounds its scan by
+    * the spec, as a dashboard read does. */
+  private def forms(s: TsAggSpec = spec): Seq[Form] = {
+    val events = graft.sources.Tables.events(spark, sf, Some((s.mode.t0Ms, s.scanEndMs)))
       .withColumn("value_cents", expr("CAST(round(value * 100) AS BIGINT)"))
-    val evSpec = spec.copy(valueCol = "value_cents")
+    val evSpec = s.copy(valueCol = "value_cents")
     val scan = TsAggClient.CellScan(mask)
     // the CellScan decode spelled out, for the sorted frames to compare with
     def decoded(cells: DataFrame) = cells
       .withColumn("ts_ms", RowKeys.keyMillis(col("key"), mask, Decoders.intBE(col("qual"))))
       .withColumn("v", Decoders.longBE(col("value")))
-    val cellSpec = spec.copy(tsCol = "ts_ms", valueCol = "v")
+    val cellSpec = s.copy(tsCol = "ts_ms", valueCol = "v")
     def cellForm(name: String, cells: DataFrame) = Form(name,
       () => Seq(
-        "max" -> TsAggClient.max(cells, scan, spec), "min" -> TsAggClient.min(cells, scan, spec),
-        "sum" -> TsAggClient.sum(cells, scan, spec), "count" -> TsAggClient.count(cells, scan, spec),
-        "avg" -> TsAggClient.avg(cells, scan, spec)),
+        "max" -> TsAggClient.max(cells, scan, s), "min" -> TsAggClient.min(cells, scan, s),
+        "sum" -> TsAggClient.sum(cells, scan, s), "count" -> TsAggClient.count(cells, scan, s),
+        "avg" -> TsAggClient.avg(cells, scan, s)),
       () => frameAggs(decoded(cells), cellSpec))
     Seq(
       Form("events", () => clientAggs(events, evSpec), () => frameAggs(events, evSpec)),
@@ -101,6 +105,10 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   private def jobsOf[T](f: => T): (T, Int) = GraftListenerSync.jobsOf(spark.sparkContext)(f)
+
+  /** The whole-stage generated sources of an executed plan. */
+  private def sources(p: SparkPlan): Seq[String] =
+    org.apache.spark.sql.execution.debug.codegenStringSeq(p).map(_._2)
 
   private def exchanges(p: SparkPlan): Int = collect(p) { case e: Exchange => e }.size
 
@@ -155,6 +163,58 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         }
       }
     }
+  }
+
+  test("reads that differ only in range and interval share one compiled class on every source form") {
+    val a = TsAggSpec(3600, TimeMode.CellTs(t0, t0 + 7 * day))
+    val b = TsAggSpec(900, TimeMode.KeyEmbedded(t0 + 2 * day + 60000L, t0 + 5 * day))
+    forms(a).zip(forms(b)).foreach { case (fa, fb) =>
+      val (_, plansA) = collectPlans(fa.client())
+      val ((mapsB, plansB), compiles) = GraftListenerSync.compilesOf(collectPlans(fb.client()))
+      assert(plansA.size == aggNames.size && plansB.size == aggNames.size)
+      val (srcA, srcB) = (plansA.map(sources), plansB.map(sources))
+      assert(srcA.forall(_.nonEmpty), s"${fb.name}: every read runs generated code")
+      val differ = aggNames.zip(srcA.zip(srcB)).collect { case (agg, (sa, sb)) if sa != sb => agg }
+      assert(compiles == 0 && differ.isEmpty, s"${fb.name}: the read over another range compiled " +
+        s"$compiles classes; its generated source differs for ${differ.mkString("[", ",", "]")}")
+      val expected = fb.sorted()
+      assert(expected.forall(_._2.nonEmpty), s"${fb.name}: the range holds buckets")
+      mapsB.zip(expected).foreach { case ((agg, g), (_, e)) =>
+        assert(g.toSeq == e.toSeq, s"${fb.name} $agg")
+      }
+    }
+  }
+
+  test("a ParamLiteral range keeps plans apart, pushes down and explains like a Literal") {
+    val a = TsAggSpec(3600, TimeMode.CellTs(t0, t0 + 2 * day))
+    val b = TsAggSpec(3600, TimeMode.CellTs(t0 + day, t0 + 3 * day))
+    def typed(s: TsAggSpec) = graft.sources.Tables.events(spark, sf, Some((s.mode.t0Ms, s.scanEndMs)))
+    def frame(s: TsAggSpec) = TsAgg.count(typed(s), s)
+    // equal values compare equal, different ranges never do
+    assert(frame(a).queryExecution.optimizedPlan.sameResult(frame(a).queryExecution.optimizedPlan))
+    assert(!frame(a).queryExecution.optimizedPlan.sameResult(frame(b).queryExecution.optimizedPlan))
+    // both bounds still reach the Parquet scan
+    val scan = typed(a).queryExecution.executedPlan.toString
+    assert(scan.contains("PushedFilters:") && scan.contains("GreaterThanOrEqual(ts") &&
+      scan.contains("LessThan(ts"), scan)
+    // explain prints the value as a Literal does
+    val param = org.apache.spark.sql.GraftBridge.toExpression(graft.functions.expressions.ParamLiteral(t0))
+    val literal = org.apache.spark.sql.catalyst.expressions.Literal(t0)
+    assert(param.toString == literal.toString && param.sql == literal.sql)
+    val plan = TsAgg.count(spark.range(10).select((lit(t0) + col("id")).as("ts")), a)
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains(s"<= ${a.scanLastMs}") && plan.contains(s"${a.intervalMs})"), plan)
+    // a shared read over one range is never served for another
+    val shared = graft.operators.Materialize.share(typed(a))
+    try {
+      def cached(df: DataFrame) = df.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.isDefined
+      assert(cached(typed(a)), "the same range reads the share")
+      assert(!cached(typed(b)), "another range does not")
+      assert(typed(b).count() == frame(b).agg(sum("count_value")).head().getLong(0))
+      assert(shared.count() == frame(a).agg(sum("count_value")).head().getLong(0))
+    } finally graft.operators.Materialize.clear()
   }
 
   test("an integer value column reads on the driver merge and equals the frames") {

@@ -2,6 +2,7 @@ package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /**
@@ -27,5 +28,14 @@ object GraftListenerSync {
       waitUntilEmpty(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `f` and returns the number of classes Spark's code generator
+    * compiled meanwhile, on the driver and in local-mode tasks. A source
+    * already in the class cache is not compiled again, so this counts misses. */
+  def compilesOf[T](f: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = f
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 }
