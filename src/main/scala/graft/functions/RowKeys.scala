@@ -96,10 +96,14 @@ object RowKeys {
    * min/max pruning on the key column.
    */
   def keyRangeFilter(key: Column, startRow: Array[Byte], stopRow: Array[Byte]): Column = {
-    require(unsignedCompare(startRow, stopRow) < 0,
-      s"startRow must sort strictly before stopRow (got ${hexStr(startRow)} >= ${hexStr(stopRow)})")
+    requireKeyRange(startRow, stopRow)
     key >= lit(startRow) && key < lit(stopRow)
   }
+
+  /** The eager `startRow < stopRow` check of [[keyRangeFilter]]. */
+  def requireKeyRange(startRow: Array[Byte], stopRow: Array[Byte]): Unit =
+    require(unsignedCompare(startRow, stopRow) < 0,
+      s"startRow must sort strictly before stopRow (got ${hexStr(startRow)} >= ${hexStr(stopRow)})")
 
   private def hexStr(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
 

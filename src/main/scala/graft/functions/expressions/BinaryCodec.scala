@@ -143,10 +143,13 @@ object BinaryCodec {
     out
   }
 
-  def decodeBE(b: Array[Byte], width: Int, signed: Boolean): Long = {
-    if (b.length != width)
-      throw new IllegalArgumentException(
-        s"bytes_be_to_long: expected $width bytes, got ${b.length} (0x${b.map("%02x".format(_)).mkString})")
+  def decodeBE(b: Array[Byte], width: Int, signed: Boolean): Long = decodeBE(b, b.length, width, signed)
+
+  /** [[decodeBE]] of the first `len` bytes of `b` (a reused buffer). */
+  def decodeBE(b: Array[Byte], len: Int, width: Int, signed: Boolean): Long = {
+    if (len != width)
+      throw new IllegalArgumentException(s"bytes_be_to_long: expected $width bytes, got $len " +
+        s"(0x${b.iterator.take(len).map("%02x".format(_)).mkString})")
     var v = 0L
     var i = 0
     while (i < width) {

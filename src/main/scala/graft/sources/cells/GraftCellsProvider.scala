@@ -50,6 +50,14 @@ import graft.functions.RowKeys.unsignedCompare
  *    final merge), expressed through Spark's standard connector API. Partial
  *    pushdown only (`supportCompletePushDown = false`): Spark plans the final
  *    merge aggregate on top, exactly the reference's M1-M4 client callbacks.
+ *  - **Client bucket fold** ([[CellBucketFold]], [[GraftCellsFoldPartitionReader]]):
+ *    `TsAggClient`'s `CellScan` map reads build this scan directly with the
+ *    read's mask, time range, interval and value decoder. The region reader
+ *    decodes each cell's time once from its key and qualifier bytes, skips
+ *    out-of-range cells without building a row and emits one partial per
+ *    bucket (the client's shared `BucketFold`); the driver merges them.
+ *    Spark's V2 aggregate pushdown cannot express this group-by (it takes
+ *    raw fields only), so the client plans the scan itself.
  *  - **One partition per region file**: Spark's parallelism = region count,
  *    the same scatter model as one coprocessor scan per region.
  */
@@ -68,7 +76,7 @@ class GraftCellsProvider extends TableProvider
   }
 }
 
-class GraftCellsTable(path: String) extends Table with SupportsRead {
+class GraftCellsTable(val path: String) extends Table with SupportsRead {
   override def name(): String = s"graft-cells:$path"
   override def schema(): StructType = CellRegionFormat.Schema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -94,6 +102,34 @@ object PushedAggFn {
   * overflows raises with it on and wraps with it off, as Spark's own sum. */
 final case class PushedAggregation(
     groupFields: Seq[Int], aggs: Seq[PushedAggFn], schema: StructType, ansi: Boolean)
+
+/**
+ * A `TsAggClient` bucket fold run inside the region reader
+ * ([[GraftCellsFoldPartitionReader]]). A cell's time is its key's big-endian
+ * unsigned seconds at `maskOffset` (keys must be `keyLength` bytes, the
+ * mask's length) plus its qualifier's signed 4-byte offset seconds, in ms;
+ * cells outside `[t0Ms, lastMs]` are skipped, the rest fold into the bucket
+ * starting at `t0Ms + k·intervalMs` — `RowKeys.keyMillis` and
+ * `TsAgg.withBuckets`, evaluated per cell. `value` is what the fold reads of
+ * an in-range cell; `sums` and `ansi` are the client fold's
+ * ([[graft.operators.BucketFold]]).
+ */
+final case class CellBucketFold(
+    maskOffset: Int, keyLength: Int, t0Ms: Long, lastMs: Long, intervalMs: Long,
+    value: CellBucketFold.Value, sums: Boolean, ansi: Boolean)
+
+object CellBucketFold {
+  /** The value a fold reads of each in-range cell. */
+  sealed abstract class Value extends Serializable
+  /** None: a count reads no value. */
+  case object NoValue extends Value
+  /** `BytesBEToLong(value, width, signed)` of the binary `value` field. */
+  final case class BigEndian(width: Int, signed: Boolean) extends Value
+  /** The typed `value_long` field. */
+  case object LongField extends Value
+  /** The typed `value_double` field. */
+  case object DoubleField extends Value
+}
 
 class GraftCellsScanBuilder(path: String)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -198,9 +234,15 @@ class GraftCellsScan(
     pushed: Array[Filter],
     startKey: Option[Array[Byte]],
     stopKey: Option[Array[Byte]],
-    pushedAgg: Option[PushedAggregation] = None) extends Scan with Batch {
+    pushedAgg: Option[PushedAggregation] = None,
+    fold: Option[CellBucketFold] = None) extends Scan with Batch {
 
   override def readSchema(): StructType = required
+
+  /** The driver session's Hadoop conf, broadcast once per scan: every
+    * `BatchScanExec` copy planning makes asks for a reader factory, and each
+    * shares this one handle. */
+  private lazy val conf = graft.sources.SerializableHadoopConf.broadcast()
 
   override def description(): String = {
     def hex(k: Option[Array[Byte]]) = k.map(_.map("%02x".format(_)).mkString).getOrElse("-inf")
@@ -216,8 +258,10 @@ class GraftCellsScan(
       s", PushedAggregation: [${a.aggs.map(show).mkString(", ")}]" +
         s", PushedGroupBy: [${a.groupFields.map(names(_)).mkString(", ")}]"
     }.getOrElse("")
+    val bucketFold = fold.map(f => s", BucketFold: [${f.t0Ms}, ${f.lastMs}] every ${f.intervalMs} ms of ${f.value}")
+      .getOrElse("")
     s"GraftCells path=$path, PushedFilters: [${pushed.mkString(", ")}], " +
-      s"keyRange=[${hex(startKey)}, ${hex(stopKey)})$agg, ReadSchema: ${required.catalogString}"
+      s"keyRange=[${hex(startKey)}, ${hex(stopKey)})$agg$bucketFold, ReadSchema: ${required.catalogString}"
   }
 
   override def toBatch: Batch = this
@@ -235,7 +279,7 @@ class GraftCellsScan(
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftCellsReaderFactory(required, pushedAgg, graft.sources.SerializableHadoopConf.broadcast())
+    new GraftCellsReaderFactory(required, pushedAgg, conf, fold)
 
   /** Streaming entry: tail the region directory as new region files land —
     * the Spark-native analogue of consuming HBase's WAL/replication feed
@@ -253,15 +297,17 @@ case class CellRegionPartition(
 
 class GraftCellsReaderFactory(
     required: StructType, pushedAgg: Option[PushedAggregation],
-    conf: Broadcast[graft.sources.SerializableHadoopConf]) extends PartitionReaderFactory {
+    val conf: Broadcast[graft.sources.SerializableHadoopConf],
+    fold: Option[CellBucketFold] = None) extends PartitionReaderFactory {
   // the factory is what Spark serializes per task; it carries only the
   // broadcast handle of the driver session's Hadoop conf (r17 FS port), so
   // each executor deserializes the conf once, not once per task
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CellRegionPartition]
-    pushedAgg match {
-      case Some(agg) => new GraftCellsAggPartitionReader(p, agg, conf.value)
-      case None => new GraftCellsPartitionReader(p, required, conf.value)
+    (pushedAgg, fold) match {
+      case (Some(agg), _) => new GraftCellsAggPartitionReader(p, agg, conf.value)
+      case (_, Some(f)) => new GraftCellsFoldPartitionReader(p, f, conf.value)
+      case _ => new GraftCellsPartitionReader(p, required, conf.value)
     }
   }
 }
@@ -528,6 +574,91 @@ class GraftCellsAggPartitionReader(
         }
       }
       InternalRow.fromSeq(groupVals ++ aggVals)
+    }
+  }
+
+  private var row: InternalRow = _
+  override def next(): Boolean =
+    if (rows.hasNext) { row = rows.next(); true } else false
+  override def get(): InternalRow = row
+  override def close(): Unit = ()
+}
+
+/**
+ * Client-fold reader: runs a [[CellBucketFold]] over the region's cells and
+ * emits one [[graft.operators.BucketFold.Partial]] per bucket, so `(region ×
+ * buckets)` rows cross the reader boundary instead of every cell — the
+ * reference's per-region `AggregationBuilder` fold (`:74-115`). The key range
+ * applies exactly as in the plain reader (skip to start, stop at stop, a
+ * small region drained so its footer verifies). Each cell's time is decoded
+ * once, from the cursor's key and qualifier bytes, and a wrong-length key or
+ * qualifier raises what the frame path's `RowKeys.keySeconds` /
+ * `BytesBEToLong` raise; an out-of-range cell builds no row and decodes no
+ * value.
+ */
+class GraftCellsFoldPartitionReader(
+    partition: CellRegionPartition, fold: CellBucketFold,
+    conf: graft.sources.SerializableHadoopConf) extends PartitionReader[InternalRow] {
+
+  import CellRegionFormat.CellCursor
+  import graft.functions.expressions.BinaryCodec
+  import graft.operators.BucketFold
+  import CellBucketFold._
+
+  private val t0 = fold.t0Ms
+  private val last = fold.lastMs
+  private val interval = fold.intervalMs
+  private val off = fold.maskOffset
+
+  /** `raise_error`'s exception, with `RowKeys.keySeconds`' message. */
+  private def keyLengthError(cur: CellCursor): Nothing =
+    throw org.apache.spark.sql.GraftBridge.raiseError(s"rowkey length != mask length ${fold.keyLength}: " +
+      cur.key.iterator.take(cur.keyLen).map("%02X".format(_)).mkString)
+
+  /** Folds one cell. Its own small method, like the scan loop — see
+    * [[GraftCellsAggPartitionReader.scanLoop]] for why. */
+  private def foldCell(cur: CellCursor, buckets: scala.collection.mutable.LongMap[BucketFold.Acc]): Unit = {
+    if (cur.keyLen != fold.keyLength) keyLengthError(cur)
+    val k = cur.key
+    val sec = ((k(off) & 0xffL) << 24) | ((k(off + 1) & 0xffL) << 16) |
+      ((k(off + 2) & 0xffL) << 8) | (k(off + 3) & 0xffL)
+    val ts = (sec + BinaryCodec.decodeBE(cur.qual, cur.qualLen, 4, signed = true)) * 1000L
+    if (ts >= t0 && ts <= last) {
+      val d = ts - t0
+      val bucket = t0 + (d - d % interval)
+      var acc = buckets.getOrNull(bucket)
+      if (acc == null) { acc = new BucketFold.Acc; buckets.update(bucket, acc) }
+      acc.cells += 1
+      fold.value match {
+        case NoValue =>
+        case BigEndian(width, signed) => BucketFold.addLong(acc,
+          BinaryCodec.decodeBE(cur.value, cur.valueLen, width, signed), fold.sums, fold.ansi)
+        case LongField => BucketFold.addLong(acc, cur.valueLong, fold.sums, fold.ansi)
+        case DoubleField => BucketFold.addDouble(acc, cur.valueDouble)
+      }
+    }
+  }
+
+  private def scanLoop(cur: CellCursor, buckets: scala.collection.mutable.LongMap[BucketFold.Acc]): Unit = {
+    val startBound = partition.startKey.orNull
+    val stopBound = partition.stopKey.orNull
+    var has = cur.advance()
+    while (has && startBound != null && cur.compareKey(startBound) < 0) has = cur.advance()
+    while (has && (stopBound == null || cur.compareKey(stopBound) < 0)) {
+      foldCell(cur, buckets)
+      has = cur.advance()
+    }
+    if (has && cur.fileLength <= CellRegionFormat.DrainVerifyMaxBytes) cur.drainAndVerify()
+  }
+
+  private lazy val rows: Iterator[InternalRow] = {
+    val buckets = scala.collection.mutable.LongMap.empty[BucketFold.Acc]
+    val cur = new CellCursor(partition.file, conf.value)
+    try scanLoop(cur, buckets)
+    finally cur.close()
+    buckets.iterator.map { case (b, a) =>
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](b, a.cells, a.n, a.max, a.min, a.sum, a.dsum))
     }
   }
 

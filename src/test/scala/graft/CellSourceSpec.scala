@@ -183,6 +183,13 @@ class CellSourceSpec extends AnyFunSuite {
     assert(counted.collect().head.getLong(0) == expected && expected > 0)
   }
 
+  test("a scan broadcasts the Hadoop conf once: its reader factories share one broadcast") {
+    val scan = v2Scan(CellRegions.read(spark, sf).filter(col("key") >= RowKeys.int64BE(lit(3L))))
+    def confId() = scan.createReaderFactory()
+      .asInstanceOf[graft.sources.cells.GraftCellsReaderFactory].conf.id
+    assert(confId() == confId())
+  }
+
   test("column pruning reaches the V2 readSchema") {
     val df = CellRegions.read(spark, sf).select("key", "value")
     val scan = v2Scan(df)

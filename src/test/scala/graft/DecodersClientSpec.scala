@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -135,6 +137,20 @@ class DecodersClientSpec extends AnyFunSuite {
     assert(TsAggClient.count(fixture, spec).values.forall(_ == 25L))
     assert(TsAggClient.avg(fixture, spec).values.toSeq == Seq(12.0, 37.0, 62.0, 87.0))
     val summary = TsAggClient.summary(fixture, spec).collect()
+    // over a one-stage copy of the (repartitioned) fixture, one job folds all
+    // five aggregates and the driver merges them: a local frame with the
+    // rows and schema of the TsAgg frame
+    val oneStage = spark.createDataFrame(fixture.collect().toSeq.asJava, fixture.schema)
+    val (local, jobs) = org.apache.spark.GraftListenerSync.jobsOf(spark.sparkContext) {
+      val out = TsAggClient.summary(oneStage, spec)
+      (out, out.collect())
+    }
+    assert(jobs == 1, s"summary ran $jobs jobs")
+    val frame = graft.operators.TsAgg.aggregate(oneStage, spec, Seq(max("value").as("max_value"),
+      min("value").as("min_value"), sum("value").as("sum_value"), count(lit(1)).as("count_value"),
+      avg("value").as("avg_value")))
+    assert(local._1.schema == frame.schema && local._2.toSeq == frame.collect().toSeq)
+    assert(local._2.toSeq == summary.toSeq)
     assert(summary.length == 4)
     val r = summary.head
     assert(r.getLong(r.fieldIndex("max_value")) == 24L &&

@@ -15,6 +15,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Decoders, RowKeys}
+import graft.functions.expressions.BinaryCodec
 import graft.operators.{TimeMode, TsAgg, TsAggClient, TsAggSpec}
 
 /**
@@ -165,6 +166,207 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** `cells` — `(key, qual, value, value_long, value_double, event_type)` —
+    * written as a fresh region directory of `regions` files and read back. */
+  private def regionFrame(cells: DataFrame, regions: Int): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("gcell-client").toString + "/regions"
+    graft.sources.cells.CellRegions.writeRegionDir(cells, dir, regions)
+    spark.read.format("graft-cells").load(dir)
+  }
+
+  /** Hand-made cells in perfbench's layout: key = 8-byte series ++ 4-byte
+    * epoch hour, qual = 4-byte offset seconds, value = `value` bytes (its
+    * `value_long` decoded when they are 8 bytes). */
+  private def handCells(cells: Seq[(Array[Byte], Array[Byte], Array[Byte])]): DataFrame = {
+    import spark.implicits._
+    cells.map { case (k, q, v) =>
+      (k, q, v, if (v.length == 8) BinaryCodec.decodeBE(v, 8, signed = true) else 0L, 0.0, "e")
+    }.toDF("key", "qual", "value", "value_long", "value_double", "event_type")
+  }
+  private def key(series: Long, hourSec: Long) = BinaryCodec.be(series, 8) ++ BinaryCodec.be(hourSec, 4)
+
+  private def scansOf(p: SparkPlan): Seq[graft.sources.cells.GraftCellsScan] = collect(p) {
+    case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+  }.collect { case g: graft.sources.cells.GraftCellsScan => g }
+
+  private def folded(p: SparkPlan): Boolean =
+    scansOf(p).nonEmpty && scansOf(p).forall(_.description().contains("BucketFold"))
+
+  private def cellMap(agg: String, df: DataFrame, scan: TsAggClient.CellScan, s: TsAggSpec): SortedMap[Long, Any] =
+    agg match {
+      case "max" => TsAggClient.max(df, scan, s)
+      case "min" => TsAggClient.min(df, scan, s)
+      case "sum" => TsAggClient.sum(df, scan, s)
+      case "count" => TsAggClient.count(df, scan, s)
+      case "avg" => TsAggClient.avg(df, scan, s)
+    }
+
+  private def cellMaps(df: DataFrame, scan: TsAggClient.CellScan, s: TsAggSpec): Aggs =
+    aggNames.map(a => a -> cellMap(a, df, scan, s))
+
+  /** The CellScan decode spelled out over `cells`, key range included. */
+  private def decodedCells(cells: DataFrame, scan: TsAggClient.CellScan): DataFrame =
+    scan.keyRange.fold(cells)(r => cells.filter(RowKeys.keyRangeFilter(col("key"), r._1, r._2)))
+      .withColumn("ts_ms", RowKeys.keyMillis(col("key"), mask, Decoders.intBE(col("qual"))))
+      .withColumn("v", scan.decoder(col(scan.valueCol)))
+
+  /** The shapes a graft-cells read folds in its region readers: one region
+    * directory, a union of two, and one directory under a key range. */
+  private lazy val foldedShapes: Seq[(String, DataFrame, TsAggClient.CellScan, Int)] = {
+    val base = graft.sources.cells.CellRegions.read(spark, sf)
+    // the fixture's first half hour of every hour, as a second directory
+    val second = regionFrame(graft.sources.Fixtures.keyedEvents(spark, sf)
+      .filter(Decoders.intBE(col("qual")) < 1800)
+      .select(col("key"), col("qual"), col("value"), Decoders.longBE(col("value")).as("value_long"),
+        col("value_double"), col("event_type")), 3)
+    val range = Some((key(5, 0), key(60, 0)))
+    Seq(("one dir", base, TsAggClient.CellScan(mask), 8),
+      ("two dirs", base.union(second), TsAggClient.CellScan(mask), 11),
+      ("key range", base, TsAggClient.CellScan(mask, keyRange = range), 8))
+  }
+
+  test("a folded graft-cells read: one job, no exchange, at most regions × buckets rows past the reader") {
+    val buckets = (spec.scanLastMs - t0) / spec.intervalMs + 1
+    foldedShapes.foreach { case (name, df, scan, regions) =>
+      val cells = df.count()
+      val ((maps, plans), jobs) = jobsOf(collectPlans(cellMaps(df, scan, spec)))
+      assert(jobs == aggNames.size, s"$name: one job per map read, got $jobs")
+      assert(plans.size == aggNames.size, s"$name: one collect per client call")
+      plans.foreach { p =>
+        assert(folded(p), s"$name: the read folds in the region readers:\n$p")
+        assert(exchanges(p) == 0, s"$name:\n$p")
+      }
+      assert(maps.forall(_._2.nonEmpty), s"$name: the range holds buckets")
+      aggNames.foreach { agg =>
+        val (_, rows) = GraftListenerSync.rowsReadOf(spark.sparkContext)(cellMap(agg, df, scan, spec))
+        assert(rows <= regions * buckets && rows < cells,
+          s"$name $agg: $rows rows past the readers, over $regions regions × $buckets buckets " +
+            s"or the $cells cells")
+      }
+    }
+  }
+
+  test("folded graft-cells maps equal the sorted TsAgg frames at 1, 3 and 8 shuffle partitions") {
+    val cellSpec = spec.copy(tsCol = "ts_ms", valueCol = "v")
+    foldedShapes.foreach { case (name, df, scan, _) =>
+      val expected = frameAggs(decodedCells(df, scan), cellSpec)
+      assert(expected.forall(_._2.nonEmpty), s"$name: the range holds buckets")
+      Seq(1, 3, 8).foreach { n =>
+        withShufflePartitions(n)(cellMaps(df, scan, spec)).zip(expected).foreach { case ((agg, g), (_, e)) =>
+          assert(g.toSeq == e.toSeq, s"$name $agg at $n shuffle partitions")
+        }
+      }
+    }
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("a folded Long sum overflows as the frame path does: raises under ANSI, wraps with it off") {
+    // two 2^62 cells in one region and one bucket: the region's own fold overflows
+    val hour = t0 / 1000
+    val df = regionFrame(handCells(Seq(1L, 2L).map(s =>
+      (key(s, hour), BinaryCodec.be(0L, 4), BinaryCodec.be(1L << 62, 8)))), 1)
+    val scan = TsAggClient.CellScan(mask)
+    val s = TsAggSpec(3600, TimeMode.CellTs(t0, t0 + day))
+    // a frame fixes its ANSI mode when it is built
+    def frame = TsAgg.sum(decodedCells(df, scan), s.copy(tsCol = "ts_ms", valueCol = "v"))
+    withConf("spark.sql.ansi.enabled", "true") {
+      val client = intercept[Exception](TsAggClient.sum(df, scan, s))
+      assert(causes(client).exists(_.isInstanceOf[ArithmeticException]), client.toString)
+      val e = intercept[Exception](frame.collect())
+      assert(causes(e).exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    }
+    withConf("spark.sql.ansi.enabled", "false") {
+      val (got, plans) = collectPlans(TsAggClient.sum(df, scan, s))
+      assert(plans.forall(folded), "the region readers folded the sum")
+      assert(got.toSeq == Seq(t0 -> Long.MinValue), "2^62 + 2^62 wraps as Spark's sum wraps")
+      assert(got.toSeq == rows(frame).toSeq)
+    }
+  }
+
+  test("a wrong-length key or qualifier raises the frame path's error from the region fold") {
+    val hour = t0 / 1000
+    val good = (key(1, hour), BinaryCodec.be(0L, 4), BinaryCodec.be(7L, 8))
+    val scan = TsAggClient.CellScan(mask)
+    val s = TsAggSpec(3600, TimeMode.CellTs(t0, t0 + day))
+    Seq(
+      "key" -> ((BinaryCodec.be(2, 8) ++ BinaryCodec.be(0L, 3), BinaryCodec.be(0L, 4), BinaryCodec.be(7L, 8)),
+        "rowkey length != mask length 12: 0000000000000002000000"),
+      "qualifier" -> ((key(2, hour), BinaryCodec.be(0L, 3), BinaryCodec.be(7L, 8)),
+        "bytes_be_to_long: expected 4 bytes, got 3 (0x000000)")
+    ).foreach { case (what, (bad, message)) =>
+      val df = regionFrame(handCells(Seq(good, bad)), 1)
+      val fold = intercept[Exception](TsAggClient.sum(df, scan, s))
+      // an event_type filter keeps the read on the frame path
+      val frame = intercept[Exception](TsAggClient.sum(df.filter(col("event_type") === "e"), scan, s))
+      val (f, g) = (causes(fold).last, causes(frame).last)
+      assert(f.getMessage.contains(message), s"$what: ${f.getMessage}")
+      assert(f.getClass == g.getClass && f.getMessage == g.getMessage, s"$what: $f against $g")
+    }
+  }
+
+  test("an unrecognized decoder or a filtered frame takes the frame path and still equals the frames") {
+    val base = graft.sources.cells.CellRegions.read(spark, sf)
+    // decimal-string values, for utf8Double
+    val hour = t0 / 1000
+    val strings = regionFrame(handCells((0L until 40L).map(i =>
+      (key(i % 3, hour + 3600 * (i % 5)), BinaryCodec.be(i * 60, 4), s"${i * 7 - 90}.25".getBytes("UTF-8")))), 2)
+    val cases = Seq(
+      // fixedPoint values are decimals, which only count reads
+      ("fixedPoint(2)", base, TsAggClient.CellScan(mask, decoder = Decoders.fixedPoint(2)), Seq("count")),
+      ("utf8Double", strings, TsAggClient.CellScan(mask, decoder = Decoders.utf8Double), Seq("count", "avg")),
+      ("event_type filter", base.filter(col("event_type") =!= "view"), TsAggClient.CellScan(mask), aggNames))
+    val cellSpec = spec.copy(tsCol = "ts_ms", valueCol = "v")
+    cases.foreach { case (name, df, scan, aggs) =>
+      val (got, plans) = collectPlans(aggs.map(a => a -> cellMap(a, df, scan, spec)))
+      assert(plans.nonEmpty && !plans.exists(folded), s"$name: the frame path runs")
+      val expected = frameAggs(decodedCells(df, scan), cellSpec).filter(a => aggs.contains(a._1))
+      assert(expected.forall(_._2.nonEmpty), s"$name: the range holds buckets")
+      got.zip(expected).foreach { case ((agg, g), (_, e)) => assert(g.toSeq == e.toSeq, s"$name $agg") }
+    }
+  }
+
+  /** The five summary columns, spelled out as a caller of `TsAgg.aggregate` would. */
+  private def summaryFrame(df: DataFrame, s: TsAggSpec): DataFrame = TsAgg.aggregate(df, s, Seq(
+    max(col(s.valueCol)).as("max_value"), min(col(s.valueCol)).as("min_value"),
+    sum(col(s.valueCol)).as("sum_value"), count(lit(1)).as("count_value"),
+    avg(col(s.valueCol)).as("avg_value")))
+
+  test("summary merges on the driver: one job, no exchange, the frame's rows and schema") {
+    val events = graft.sources.Tables.events(spark, sf)
+      .withColumn("value_cents", expr("CAST(round(value * 100) AS BIGINT)"))
+      .withColumn("value_int", expr("CAST(round(value * 100) AS INT)"))
+    // every 5th hour holds only nulls
+    val nulls = spark.range(0, 2000, 1, 4).select(
+      (lit(t0) + col("id") * 60000L).as("ts"),
+      when((col("id") / 60).cast("long") % 5 === 0, lit(null)).otherwise(col("id") * 3 - 1000).as("v"))
+    Seq(
+      ("long", events, spec.copy(valueCol = "value_cents")),
+      ("int", events, spec.copy(valueCol = "value_int")),
+      ("all-null buckets", nulls, TsAggSpec(3600, TimeMode.CellTs(t0, t0 + 2000 * 60000L), valueCol = "v"))
+    ).foreach { case (name, df, s) =>
+      val ((local, plans), jobs) = jobsOf(collectPlans {
+        val out = TsAggClient.summary(df, s)
+        (out, out.collect())
+      })
+      assert(jobs == 1, s"$name: one job folds the five aggregates, got $jobs")
+      assert(plans.nonEmpty && plans.forall(exchanges(_) == 0), s"$name: no exchange")
+      val frame = summaryFrame(df, s)
+      assert(local._1.schema == frame.schema, s"$name: ${local._1.schema} against ${frame.schema}")
+      assert(local._2.toSeq == frame.collect().toSeq, s"$name rows")
+    }
+    val allNull = TsAggClient.summary(nulls, TsAggSpec(3600, TimeMode.CellTs(t0, t0 + 2000 * 60000L),
+      valueCol = "v")).collect().filter(_.isNullAt(1))
+    assert(allNull.nonEmpty && allNull.forall(r => r.getLong(4) == 60L && r.isNullAt(5)),
+      "all-null buckets keep their count beside null aggregates")
+    // a Double value column keeps the frame: one shuffle, then the sort
+    val dbl = spec.copy(valueCol = "value")
+    val kept = TsAggClient.summary(events, dbl)
+    assert(exchanges(kept.queryExecution.executedPlan) > 0, "a Double summary stays the frame")
+    assert(kept.collect().toSeq == summaryFrame(events, dbl).collect().toSeq)
+  }
+
   test("reads that differ only in range and interval share one compiled class on every source form") {
     val a = TsAggSpec(3600, TimeMode.CellTs(t0, t0 + 7 * day))
     val b = TsAggSpec(900, TimeMode.KeyEmbedded(t0 + 2 * day + 60000L, t0 + 5 * day))
@@ -173,7 +375,13 @@ class TsAggClientPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val ((mapsB, plansB), compiles) = GraftListenerSync.compilesOf(collectPlans(fb.client()))
       assert(plansA.size == aggNames.size && plansB.size == aggNames.size)
       val (srcA, srcB) = (plansA.map(sources), plansB.map(sources))
-      assert(srcA.forall(_.nonEmpty), s"${fb.name}: every read runs generated code")
+      // a graft-cells read folds in its region readers: its only generated
+      // code is the unsafe-row projection Spark puts over every row scan, no
+      // filter or bucket projection
+      if (fb.name == "graft-cells") assert((plansA ++ plansB).forall(p => folded(p) &&
+        collect(p) { case f: org.apache.spark.sql.execution.FilterExec => f }.isEmpty),
+        s"${fb.name}: the read folds in the region readers:\n${plansA.mkString("\n")}")
+      else assert(srcA.forall(_.nonEmpty), s"${fb.name}: every read runs generated code")
       val differ = aggNames.zip(srcA.zip(srcB)).collect { case (agg, (sa, sb)) if sa != sb => agg }
       assert(compiles == 0 && differ.isEmpty, s"${fb.name}: the read over another range compiled " +
         s"$compiles classes; its generated source differs for ${differ.mkString("[", ",", "]")}")

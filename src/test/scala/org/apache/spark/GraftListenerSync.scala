@@ -1,9 +1,9 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /**
  * Test-only escape hatch into `SparkContext.listenerBus` (private[spark]):
@@ -27,6 +27,23 @@ object GraftListenerSync {
       val out = f
       waitUntilEmpty(sc)
       (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `f` and returns the rows its tasks read from their sources: the
+    * sum of every finished task's `inputMetrics.recordsRead`. */
+  def rowsReadOf[T](sc: SparkContext)(f: => T): (T, Long) = {
+    val rows = new AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => rows.addAndGet(m.inputMetrics.recordsRead))
+    }
+    waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      waitUntilEmpty(sc)
+      (out, rows.get)
     } finally sc.removeSparkListener(listener)
   }
 
